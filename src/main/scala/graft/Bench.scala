@@ -1,33 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line (driver contract). local[32] + 32 shuffle
-  * partitions per the target topology; AQE on (runtime coalescing +
-  * skew-join handling — the same settings a 1000-executor cluster run
-  * would use, minus size-based shuffle partition counts). */
+  * prints ONE JSON line (driver contract). Session conf: [[GraftSession]]. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let the planner pick shuffled-hash join where its size conditions
-      // hold instead of always sort-merge (round 21, guide §3.1/§9
-      // baseline): measured −5.5% min-of-2 on the 28-query join subset
-      // (q11 −0.30 s, q21 −0.22 s, q2 −0.15 s; worst loss q16 +0.15 s),
-      // join strategy never changes results. Production note: SHJ only
-      // plans when the per-partition build side fits the planner's size
-      // conditions, and AQE's skew-join splitting applies to SHJ too, so
-      // the local[32] setting and a 1000-executor run want the same flag.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // JVM/codegen warm-up outside the timed region (first query otherwise
     // pays several seconds of classloading + codegen compilation).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the formatted physical plan for the named
   * queries (or a default audit set) so scan pruning (`PushedFilters`,
   * `ReadSchema`), join strategies (BroadcastHashJoin vs SortMergeJoin) and
@@ -11,26 +9,15 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_filter_pred", "q_region_revenue", "q_customer_features",
         "q_topk_customers", "q_dedup_ngram")
-    // Env overrides (round 22): plan-evidence dumps must be able to run
-    // at the BENCH's scale/topology (join-strategy size conditions are
+    // the Bench session, so the audited plans are the plans the bench
+    // times. Plan-evidence dumps can run at the bench's scale via
+    // SPARK_GRAFT_SF_DIR (join-strategy size conditions are
     // data-dependent — a sf0.001 plan can broadcast where the sf0.1
-    // bench shuffles), and GRAFT_PREFER_SMJ=true reproduces the
-    // pre-round-21 sort-merge-preferring planner for before/after pairs.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val preferSmj = sys.env.getOrElse("GRAFT_PREFER_SMJ", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror the Bench/Verify join-strategy setting (round 21) so the
-      // audited plans are the plans the bench actually times
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      // UTC like every other main (round-19 review): a non-UTC default
-      // locale would constant-fold date/timestamp literals differently
-      // than the plans Verify/Bench actually execute
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // bench shuffles); GRAFT_PREFER_SMJ=true reproduces the
+    // sort-merge-preferring planner for before/after pairs.
+    val spark = GraftSession.local()
+    sys.env.get("GRAFT_PREFER_SMJ").foreach(
+      spark.conf.set("spark.sql.join.preferSortMergeJoin", _))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,0 +1,35 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session factory of every main: [[Bench]], [[Verify]],
+  * [[Profile]], [[Explain]], [[Smoke]], [[Stage]] and
+  * [[graft.ml.KMeansScanJob]] all build their session here, so the
+  * correctness dump, the benchmark and the profiler run one SQL conf and
+  * therefore the same physical plans. */
+object GraftSession {
+
+  /** `local[cpus]` with `cpus` from SPARK_GRAFT_CPUS, else every
+    * available processor; as many shuffle partitions as cores; AQE on
+    * (runtime coalescing + skew-join handling — the settings a cluster
+    * run would use, minus size-based shuffle partition counts). */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      // let the planner pick shuffled-hash join where its size conditions
+      // hold instead of always sort-merge; join strategy never changes
+      // results. Executed post-AQE plans show the flag is a no-op at
+      // sf0.1 (TPC-H q2/q11/q16/q21 keep the same final joins either
+      // way); it stays so every main plans alike, not for a measured win.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -108,6 +108,6 @@ object SessionMemo {
   private[graft] def clearAllForSession(spark: SparkSession): Unit = {
     val it = registry.iterator()
     while (it.hasNext) it.next().clearSession(spark)
-    graft.operators.Scale.resetBucketedLayoutMemo()
+    graft.operators.Scale.resetBucketedLayoutMemo(spark)
   }
 }

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-t1 analog: run `SparkEntry.entry` on sf0.001 and print the row
   * count, then probe one query with a bad dir to confirm loud failure. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println(s"SMOKE entry rows=${df.count()}")

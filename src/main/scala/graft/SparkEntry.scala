@@ -101,7 +101,7 @@ object SparkEntry {
     // the query now also recomputes the exact half so DuckDB can oracle
     // a per-probe floor boolean instead of a rows-only check; the pure
     // serve shapes remain the 100 TB carriers (Similarity.ivfTopK/
-    // ivfTopKSaved, spec'd + ScaleBench-measured directly)
+    // ivfTopKSaved, spec'd and measured directly)
     "q_ann_ivf"   -> ((s: SparkSession, d: String) => Similarity.annRecallBounded(s, d)),
     "q_ann_ivf_saved" -> ((s: SparkSession, d: String) => Similarity.annRecallBounded(s, d, saved = true)),
     // text analysis (north-star extension)

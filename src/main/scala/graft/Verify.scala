@@ -1,22 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same join-strategy setting as Bench (round 21): the correctness
-      // dump must exercise the same physical plans the bench times
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the Bench session: the correctness dump must exercise the same
+    // physical plans the bench times
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Iteration aid (mirrors Bench): run only the named queries.
     val only = SparkEntry.onlyFilter

@@ -1,7 +1,6 @@
 package graft.ml
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Report/notification seam. The reference emails a PDF via local SMTP
   * (`/root/reference/utils/reports.py:148-179`,
@@ -31,15 +30,7 @@ object KMeansScanJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_kmeans"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("Customer Segmentation")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val notifier: Notifier = LogNotifier
     try {
       new java.io.File(outDir).mkdirs()

@@ -209,13 +209,24 @@ object Scale {
   @volatile private var bucketWrittenFor: Option[(String, String)] = None
   private val bucketWriteLock = new Object
 
-  /** Forget the bucketed layout (next [[bucketedJoin]] re-writes it).
-    * Called by [[graft.SessionMemo.clearAllForSession]] so the bench's
+  /** The `(session id, dir)` the bucketed layout was last written for. */
+  private[graft] def bucketedLayoutMarker: Option[(String, String)] =
+    bucketWrittenFor
+
+  /** Forget the bucketed layout if `spark` wrote it (next
+    * [[bucketedJoin]] in that session re-writes it). Called by
+    * [[graft.SessionMemo.clearAllForSession]] so the bench's
     * between-sweep memo clear covers this non-SessionMemo memo too —
     * q_bucketed_join's reported time then includes the layout write it
-    * would pay standalone. */
-  private[graft] def resetBucketedLayoutMemo(): Unit =
-    bucketWriteLock.synchronized { bucketWrittenFor = None }
+    * would pay standalone. Another session's marker is left alone: its
+    * next call must not re-write the shared `graft_*_b` tables under a
+    * concurrent reader. */
+  private[graft] def resetBucketedLayoutMemo(spark: SparkSession): Unit = {
+    val sid = org.apache.spark.sql.graft.ColumnBridge.sessionUUID(spark)
+    bucketWriteLock.synchronized {
+      if (bucketWrittenFor.exists(_._1 == sid)) bucketWrittenFor = None
+    }
+  }
 
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     // The bucketed LAYOUT is written once per (session, dir) — that is
@@ -573,8 +584,8 @@ object Scale {
     * driver testdata every key sits below the stride, so the tenant term
     * is exactly ZERO and results are bit-identical to the untenanted
     * formulation (oracle hashes unchanged at sf0.01/0.1). On a
-    * key-partitioned multi-tenant corpus — e.g. the 10× ScaleBench
-    * staging, which offsets keys by copy × this same stride — each key
+    * key-partitioned multi-tenant corpus — e.g. one staged by
+    * [[graft.Stage]], which offsets keys by copy × this same stride — each key
     * population joins only its own tenant's bands, so a 10× corpus means
     * ~10× the pair volume, not the ~100× cross product the r15 artifact
     * measured (97.5× DuckDB-counted pairs — the 10 staged copies'
@@ -582,7 +593,7 @@ object Scale {
     * artifact, not an operator property). This is also the realistic
     * 100 TB shape: a band-lookup dimension grows with the fact's key
     * domain (new tenants/regions/catalogs), not by densifying one fixed
-    * value range 10-fold. private[graft]: [[graft.ScaleBench]] keys its
+    * value range 10-fold. private[graft]: [[graft.Stage]] keys its
     * staging offsets off THIS constant, so the two strides can never
     * silently drift apart (a wider staging stride with an unchanged
     * tenant divisor would quietly restore the ~100× cross product). */

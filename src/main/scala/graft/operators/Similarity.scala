@@ -396,7 +396,7 @@ object Similarity {
     // the measurement build below IS the serving index, never an extra
     // throwaway build
     nprobeMemo.getOrCompute(spark,
-        s"$dir|nprobe|$nlist|$trainFraction|$trainIters|s$trainSeed") {
+        s"$dir|nprobe|$nlist|$trainFraction|$trainIters") {
       val idx = ivfIndex(spark, dir, nlist, trainFraction, trainIters)
       Integer.valueOf(
         measuredNprobeOf(idx.lists, idx.centroids, nlist, n, s"for $dir"))
@@ -889,25 +889,17 @@ object Similarity {
         .select(col("vec_id"), col("emb_d")),
       dir, nlist, trainFraction, trainIters)
 
-  /** Quantizer training seed — overridable via SPARK_GRAFT_IVF_SEED for
-    * calibration sweeps only (never set by registered queries or the
-    * driver). Round-16 finding, recorded so nobody re-tries the obvious
-    * dials: quantizer DRAWS move recall@5 by ±0.04-0.08 at the staged
-    * corpora, but neither seed restarts selected by training cost (SSE
-    * spread across seeds was 0.01% — useless as a recall proxy), extra
-    * Lloyd iterations (0.88 at 5/10/15), nor k-means|| init (0.88, 13
-    * minutes of driver-local kmeans++ at k=16384) beat a plain seeded
-    * draw. The dials that DO move the operating point are cell count
-    * ([[uncappedCellTarget]]) and the measured-fraction nprobe
-    * ([[autoNprobeMeasured]]). */
-  private def trainSeed: Long =
-    // the system property exists for IN-JVM sweeps (ScaleBench's
-    // min-over-seeds recall rebuilds the index per seed inside one
-    // session — env vars can't change mid-JVM); the env var stays the
-    // cross-process calibration dial. Neither is ever set by registered
-    // queries or the driver.
-    sys.props.get("graft.ivf.seed").orElse(
-      sys.env.get("SPARK_GRAFT_IVF_SEED")).map(_.toLong).getOrElse(1L)
+  /** Quantizer training seed. Round-16 finding, recorded so nobody
+    * re-tries the obvious dials: quantizer DRAWS move recall@5 by
+    * ±0.04-0.08 at the staged corpora, but neither seed restarts
+    * selected by training cost (SSE spread across seeds was 0.01% —
+    * useless as a recall proxy), extra Lloyd iterations (0.88 at
+    * 5/10/15), nor k-means|| init (0.88, 13 minutes of driver-local
+    * kmeans++ at k=16384) beat a plain seeded draw. The dials that DO
+    * move the operating point are cell count ([[uncappedCellTarget]])
+    * and the measured-fraction nprobe ([[autoNprobeMeasured]]); a weak
+    * draw is caught by [[recallCanary]]. */
+  private val TrainSeed = 1L
 
   /** Deterministic content-based training sample: keep a row iff the
     * Knuth-style hash of its id lands under fraction·2²⁰ — membership is
@@ -924,10 +916,8 @@ object Similarity {
   private def ivfIndexOver(
       spark: SparkSession, corpus: DataFrame, memoKey: String, nlist: Int,
       trainFraction: Double, trainIters: Int): IvfIndex =
-    // trainSeed is part of the key: an in-JVM seed sweep (sys.props)
-    // must rebuild, not serve the previous draw's index
     ivfMemo.getOrCompute(spark,
-        s"$memoKey|$nlist|$trainFraction|$trainIters|s$trainSeed") {
+        s"$memoKey|$nlist|$trainFraction|$trainIters") {
       val base = normalizedOf(corpus).cache()
       try {
         val vecs = base.withColumn("features", array_to_vector(col("unit")))
@@ -964,9 +954,9 @@ object Similarity {
         // Random (seeded) init, not kmeans||: measured at the 200k
         // calibration corpus (k = 16384), the parallel init cost 13 min
         // of driver-local kmeans++ and landed the same recall as a
-        // random draw — init MODE is not the lever (see [[trainSeed]]
+        // random draw — init MODE is not the lever (see [[TrainSeed]]
         // for the full dead-dial ledger).
-        val km = new KMeans().setK(nlist).setSeed(trainSeed).setMaxIter(trainIters)
+        val km = new KMeans().setK(nlist).setSeed(TrainSeed).setMaxIter(trainIters)
           .setInitMode("random")
           .setFeaturesCol("features")
           .setPredictionCol("list_id").fit(trainSample)
@@ -999,7 +989,7 @@ object Similarity {
       spark: SparkSession, corpus: DataFrame, memoKey: String,
       l1: Int, l2: Int, trainFraction: Double, trainIters: Int): Ivf2Index =
     ivf2Memo.getOrCompute(spark,
-        s"$memoKey|2L|$l1|$l2|$trainFraction|$trainIters|s$trainSeed") {
+        s"$memoKey|2L|$l1|$l2|$trainFraction|$trainIters") {
       require(l2 >= 2, s"ivf2Index: l2=$l2 — use the single-level index below 2")
       val base = normalizedOf(corpus).cache()
       try {
@@ -1015,11 +1005,9 @@ object Similarity {
           df.repartition(width, col("vec_id")).sortWithinPartitions("vec_id")
         val trainSample = canonical(
           trainSampleOf(vecs, trainFraction), fitWidth(trainFraction))
-        // SAME seed dial as the single-level build (round-16 ADVICE): a
-        // hardcoded 1L here made SPARK_GRAFT_IVF_SEED calibration sweeps
-        // silently skip the two-level quantizer draw; km2 derives +1 so
-        // the two levels never share a draw at any seed
-        val km1 = new KMeans().setK(l1).setSeed(trainSeed).setMaxIter(trainIters)
+        // SAME seed as the single-level build; km2 derives +1 so the two
+        // levels never share a draw
+        val km1 = new KMeans().setK(l1).setSeed(TrainSeed).setMaxIter(trainIters)
           .setInitMode("random").setFeaturesCol("features")
           .setPredictionCol("l1").fit(trainSample)
         val c1 = spark.createDataFrame(
@@ -1035,7 +1023,7 @@ object Similarity {
         // the shared residual codebook needs only ~32 samples per
         // centroid, like the level-1 rule — and l2 is small (≤1024)
         val tf2 = math.min(1.0, 32.0 * l2 / math.max(n, 1L))
-        val km2 = new KMeans().setK(l2).setSeed(trainSeed + 1).setMaxIter(trainIters)
+        val km2 = new KMeans().setK(l2).setSeed(TrainSeed + 1).setMaxIter(trainIters)
           .setInitMode("random").setFeaturesCol("rfeat")
           .setPredictionCol("l2")
           .fit(canonical(
@@ -1101,8 +1089,8 @@ object Similarity {
 
   /** Geometry + index resolution shared by [[ivfTopKTwoLevel]] and the
     * measured-fraction probe [[ivf2ScannedFraction]] — one copy so the
-    * fraction recorded in SCALEBENCH describes exactly the cells the
-    * serve path scans. Returns (index, l1, l2, nprobe-in-cells). */
+    * measured fraction describes exactly the cells the serve path
+    * scans. Returns (index, l1, l2, nprobe-in-cells). */
   private def ivf2Resolve(
       spark: SparkSession, dir: String, l1: Int, l2: Int, nprobe: Int,
       trainFraction: Double, trainIters: Int): (Ivf2Index, Int, Int, Int) = {
@@ -1197,7 +1185,7 @@ object Similarity {
     // twin: the two-level auto rp is the fixed 6%-of-cells rule, so any
     // measured fraction past 0.105 under auto geometry is a dense-cell
     // probe-set divergence worth a loud line, not a floor artifact
-    if (l1 == 0 && l2 == 0 && nprobe == 0 && frac > ServedFractionBound)
+    if (l1 == 0 && l2 == 0 && nprobe == 0 && !withinServedBudget(frac))
       System.err.println(String.format(java.util.Locale.ROOT,
         "[graft] ivf2ScannedFraction(%s): served fraction %.3f exceeds the " +
           "calibrated target + divergence allowance (0.105) — the served " +
@@ -1218,8 +1206,8 @@ object Similarity {
     * answer over the same probe set. The exact scan is O(nProbes × n):
     * at 100 TB the canary runs on a bounded probe SAMPLE and the
     * deployment gates `recallCanary(...) >= floor` before swapping the
-    * serving alias — exactly the number the ScaleBench seed sweep
-    * records per draw, productized as a library call. */
+    * serving alias — the per-draw recall of the historical
+    * SCALEBENCH seed sweeps, productized as a library call. */
   def recallCanary(spark: SparkSession, dir: String,
       k: Int = 5, nProbes: Int = 10): Double = {
     val brute = bruteTopK(spark, dir, k, nProbes)
@@ -1258,8 +1246,7 @@ object Similarity {
     * the quantizer re-drawn. `startNprobe` (0 = auto) pins the head
     * rung's budget — the ladder-mechanics spec drives it from a
     * deliberately starved geometry. `onStep` fires after each rung so
-    * a multi-hour 5M run can persist partial ladders (the ScaleBench
-    * crash-keep discipline). */
+    * a multi-hour run can persist partial ladders. */
   def canaryEscalate(
       spark: SparkSession, dir: String,
       k: Int = 5, nProbes: Int = 10,
@@ -1300,7 +1287,7 @@ object Similarity {
     }
     var steps = Vector(measure(npStart))
     while (steps.last.recall < floor && steps.size <= maxSteps &&
-        steps.last.fraction <= ServedFractionBound &&
+        withinServedBudget(steps.last.fraction) &&
         steps.last.nprobe < maxBudget) {
       // ×7/6 (ceil, always +1 at least): two in-budget rungs fit between
       // the 6%-of-cells auto point and the 0.105 fraction bound, so the
@@ -1420,7 +1407,7 @@ object Similarity {
     * pin it. Deterministic under the pinned seed; rows-only check
     * (approximate results are not SQL-expressible), recall floors in
     * `SimilaritySpec` + recall AND scanned fraction measured at 10× in
-    * SCALEBENCH_sf1.json. */
+    * the historical SCALEBENCH_sf1.json. */
   def ivfTopK(
       spark: SparkSession,
       dir: String,
@@ -1496,7 +1483,7 @@ object Similarity {
     // (measured 4× the whole query once the auto geometry raised nlist
     // to 512 at sf0.1). Every call still READS the persisted tables from
     // disk, so the cold-serve path stays the thing measured.
-    val out = savedIvfMemo.getOrCompute(spark, s"$dir|$rl|s$trainSeed") {
+    val out = savedIvfMemo.getOrCompute(spark, s"$dir|$rl") {
       val idx = ivfIndex(spark, dir, rl,
         resolveTrainFraction(spark, dir, 0.0, rl), 5)
       val o = Scale.scratchDir("graft_ivf")
@@ -1559,7 +1546,7 @@ object Similarity {
     * (candidate rows inside the selected inverted lists, own row
     * excluded) ÷ the evaluations the brute scan would pay (probes ×
     * (index rows − 1) — same exclusion, same zero-norm drop). This is
-    * the design number SCALEBENCH records BESIDE recall@5: recall alone
+    * the design number to read BESIDE recall@5: recall alone
     * can hide an index whose "approximate" search scans most of the
     * corpus (the round-14 geometry did exactly that at a constant 3/8).
     * Measured, not nprobe/nlist: skewed list sizes and probe placement
@@ -1587,7 +1574,7 @@ object Similarity {
     if (nlist == 0 && nprobe == 0) {
       val floor = math.max(6,
         ((512L * rl + math.max(idxRows, 1L) - 1) / math.max(idxRows, 1L)).toInt)
-      if (rp > floor && frac > ServedFractionBound)
+      if (rp > floor && !withinServedBudget(frac))
         System.err.println(String.format(java.util.Locale.ROOT,
           "[graft] ivfScannedFraction(%s): served fraction %.3f exceeds the " +
             "calibrated 0.098 target + divergence allowance (0.105) — the " +
@@ -1596,32 +1583,6 @@ object Similarity {
           dir, Double.box(frac)))
     }
     frac
-  }
-
-  /** The PQ exact-rerank stage's fraction of the brute-force work —
-    * MEASURED, mirroring [[ivfScannedFraction]] (round-16 ADVICE): the
-    * actual exact-cosine evaluations per probe are min(gated candidate
-    * pool, rerank budget) — on a small corpus the coarse gate often
-    * yields fewer candidates than the budget, and the former
-    * rerank÷n formula overstated the cost (0.128 recorded at sf0.01
-    * where the real pool was smaller). Accepts the same geometry pins
-    * as [[pqTopK]] so the recorded number describes the query actually
-    * served. Recorded beside the coarse-gate fraction: the two numbers
-    * together are the whole per-probe cost model. */
-  def pqRerankFraction(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 5,
-      nProbes: Int = 10,
-      rerank: Int = 0,
-      nlist: Int = 0,
-      nprobe: Int = 0): Double = {
-    val (rl, rp) = resolveGeometry(spark, dir, nlist, nprobe)
-    val rr = if (rerank > 0) rerank else autoRerank(k)
-    val tf = resolveTrainFraction(spark, dir, 0.0, rl)
-    val (nP, idxRows, evaluated) = candidateStats(spark, dir, nProbes, rl, rp, tf, 5)
-    val meanGated = evaluated.toDouble / nP
-    math.min(rr.toDouble, meanGated) / math.max(1L, idxRows - 1)
   }
 
   /** The broadcast — not the raw array — lives in the index: serving
@@ -1758,8 +1719,9 @@ object Similarity {
     * less than float32 dims at the 8-bit default), the coarse gate
     * shrinks as nlist grows with √n, and the exact rerank touches only
     * `rerank` rows per probe. The approximate stage is rows-only
-    * checked; the spec asserts recall vs [[bruteTopK]], and
-    * SCALEBENCH records recall@5 WITH the measured scanned fraction. */
+    * checked; the spec asserts recall vs [[bruteTopK]], and the
+    * historical SCALEBENCH artifacts record recall@5 WITH the measured
+    * scanned fraction. */
   def pqTopK(
       spark: SparkSession,
       dir: String,
@@ -1803,11 +1765,8 @@ object Similarity {
     // beside the index itself, per the file's build-once/serve-forever
     // doctrine: paying it per serve call would put a corpus-wide join
     // back into the path everything above is pruning.
-    // seed in the key: the coarse lists under the codes are a function
-    // of the quantizer draw (the PQ codebook itself is strided-init
-    // deterministic, so pqMemo needs no seed term)
     val codesListed = pqListedMemo.getOrCompute(spark,
-        s"$dir|$rs|$nCodes|$rl|s$trainSeed") {
+        s"$dir|$rs|$nCodes|$rl") {
       pq.codes
         .join(ivf.lists.select(col("neighbor_id"), col("list_id")), "neighbor_id")
         .localCheckpoint(true)
@@ -1853,7 +1812,7 @@ object Similarity {
     // key term keeps a forced-geometry fixture from serving the
     // single-level attachment of the same (dir, rs, nCodes)
     val codesListed = pqListedMemo.getOrCompute(spark,
-        s"$dir|$rs|$nCodes|2L|$rl1|$rl2|s$trainSeed") {
+        s"$dir|$rs|$nCodes|2L|$rl1|$rl2") {
       pq.codes
         .join(idx.lists.select(col("neighbor_id"), col("list_id")), "neighbor_id")
         .localCheckpoint(true)
@@ -1964,16 +1923,22 @@ object Similarity {
     * lever that survives scale. */
   private[graft] def autoRerank(k: Int): Int = math.max(256, 32 * k)
 
-  /** ONE bound for every served-vs-calibrated fraction surface (round-18
-    * review: the 0.105 literal was duplicated across the ScaleBench gate
-    * and both measurement warnings — a future retarget of the 0.098
-    * budget could silently desynchronize them): the 0.098 calibrated
+  /** ONE bound for every served-vs-calibrated fraction surface (the
+    * canary ladder and both measurement warnings, via
+    * [[withinServedBudget]]), so a retarget of the 0.098 budget cannot
+    * desynchronize them: the 0.098 calibrated
     * target + 0.007 divergence allowance for the id<10 evaluation
     * probes. The single-level target is bisection-calibrated
     * ([[measuredNprobeOf]]); the two-level auto nprobe is the fixed
     * 6%-of-cells rule — both serve under the same ≤10% done-bar this
     * bound polices. */
   private[graft] val ServedFractionBound = 0.105
+
+  /** Whether a measured served fraction stays inside
+    * [[ServedFractionBound]] — the one comparison the canary ladder and
+    * both scanned-fraction warnings share. */
+  private[graft] def withinServedBudget(frac: Double): Boolean =
+    frac <= ServedFractionBound
 
   /** Driver-local Lloyd's k-means for one PQ subspace: strided
     * deterministic init over the key-ordered sample, fixed 12

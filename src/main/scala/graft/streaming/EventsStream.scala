@@ -67,42 +67,13 @@ object EventsStream {
     }
   }
 
-  /** Peak state-store footprint of the most recently drained streaming
-    * query: per micro-batch the operators' row counts / bytes are
-    * summed, the per-batch peak is kept. `None` when the last query held
-    * no state (stateless transforms). Observability only — written by
-    * [[drainAndDrop]], read by the scale bench's state-size table; no
-    * correctness path depends on it. Two measurement caveats, fine for
-    * the bench's ≤ ~12-batch replays but worth knowing: the peak is
-    * over `recentProgress`, which retains only the last
-    * `spark.sql.streaming.numRecentProgressUpdates` (default 100)
-    * batches — a longer-running query whose state peaked earlier would
-    * under-report; and rows/bytes maxima are taken independently, so
-    * the pair may span two different batches (a footprint envelope, not
-    * one observed batch). */
-  final case class StateFootprint(rows: Long, bytes: Long)
-  @volatile private[graft] var lastStateFootprint: Option[StateFootprint] = None
-
   /** Drain a started memory-sink query, then MATERIALIZE and unregister
     * its table: the uniquely-named temp views otherwise accumulate full
     * result copies in driver memory for the session's lifetime (bench
-    * sweeps run each entry point 10+ times per sweep). Also records the
-    * query's peak state footprint (see [[lastStateFootprint]]). */
+    * sweeps run each entry point 10+ times per sweep). */
   private[graft] def drainAndDrop(spark: SparkSession,
       q: org.apache.spark.sql.streaming.StreamingQuery, name: String): DataFrame = {
-    // cleared up front so a failure below can never leave the PREVIOUS
-    // drained query's footprint to be read as this one's; entry points
-    // that bypass this helper never publish a footprint, so readers must
-    // sample immediately after the drained call they mean to attribute
-    lastStateFootprint = None
     try q.processAllAvailable() finally q.stop()
-    val perBatch = q.recentProgress.toSeq
-      .map(p => (p.stateOperators.map(_.numRowsTotal).sum,
-        p.stateOperators.map(_.memoryUsedBytes).sum))
-      .filter { case (r, b) => r > 0 || b > 0 }
-    lastStateFootprint =
-      if (perBatch.isEmpty) None
-      else Some(StateFootprint(perBatch.map(_._1).max, perBatch.map(_._2).max))
     val out = spark.table(name).localCheckpoint(true)
     spark.catalog.dropTempView(name)
     out

@@ -23,4 +23,18 @@ class BucketedJoinSpec extends SparkSpec {
     assert(!plan.contains("Exchange"),
       s"bucketed join must not shuffle its inputs, got:\n$plan")
   }
+
+  test("clearing one session's memos keeps another session's bucketed layout") {
+    val a = spark
+    val b = spark.newSession()
+    Scale.bucketedJoin(a, sf)
+    val sidA = org.apache.spark.sql.graft.ColumnBridge.sessionUUID(a)
+    assert(Scale.bucketedLayoutMarker.contains((sidA, sf)))
+    SessionMemo.clearAllForSession(b)
+    assert(Scale.bucketedLayoutMarker.contains((sidA, sf)),
+      "clearing session B must leave session A's layout marker intact")
+    SessionMemo.clearAllForSession(a)
+    assert(Scale.bucketedLayoutMarker.isEmpty,
+      "clearing session A must clear its own layout marker")
+  }
 }

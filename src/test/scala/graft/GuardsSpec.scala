@@ -98,7 +98,7 @@ class GuardsSpec extends SparkSpec {
     assert(e.getMessage.contains("nSub=12"))
   }
 
-  test("ScaleBench rejects a staged corpus missing its _PARAMS sentinel") {
+  test("Stage rejects a staged corpus missing its _PARAMS sentinel") {
     val base = java.nio.file.Files.createTempDirectory("guards_params").toString
     // (a) tables present, no sentinel → must fail (a pre-sentinel-era
     // leftover cannot be validated; stamping it with the CURRENT params
@@ -106,31 +106,41 @@ class GuardsSpec extends SparkSpec {
     val stale = new java.io.File(base, "stale"); stale.mkdirs()
     new java.io.File(stale, "documents.parquet").mkdirs()
     val e = intercept[IllegalArgumentException] {
-      ScaleBench.validateStagedParams(stale.toString, "copies=10;src=x")
+      Stage.validateStagedParams(stale.toString, "copies=10;src=x")
     }
     assert(e.getMessage.contains("_PARAMS"))
     // (b) fresh dir → sentinel written, second call with same params ok
     val fresh = new java.io.File(base, "fresh").toString
-    ScaleBench.validateStagedParams(fresh, "copies=10;src=x")
-    ScaleBench.validateStagedParams(fresh, "copies=10;src=x")
+    Stage.validateStagedParams(fresh, "copies=10;src=x")
+    Stage.validateStagedParams(fresh, "copies=10;src=x")
     // (c) params mismatch against the recorded sentinel → must fail
     val e2 = intercept[IllegalArgumentException] {
-      ScaleBench.validateStagedParams(fresh, "copies=3;src=x")
+      Stage.validateStagedParams(fresh, "copies=3;src=x")
     }
     assert(e2.getMessage.contains("copies=10"))
   }
 
-  test("ScaleBench served-fraction gate: red above calibrated+allowance, green at the committed points") {
-    // round-18 verdict ask #7: the artifact must turn RED, not record a
-    // silently-higher number, when the served (id<10) probe fraction
-    // diverges past the calibrated 0.098 target + 0.007 allowance
-    ScaleBench.requireServedFraction("spec", 0.098) // the calibrated target
-    ScaleBench.requireServedFraction("spec", 0.065) // the committed 5M point
-    ScaleBench.requireServedFraction("spec", 0.105) // the allowance edge
-    val e = intercept[IllegalArgumentException] {
-      ScaleBench.requireServedFraction("spec", 0.106)
+  test("served-fraction budget: 0.098/0.065/0.105 pass, 0.106 fails") {
+    // the canary ladder and both scanned-fraction warnings share this
+    // edge: the calibrated 0.098 target + 0.007 allowance for the
+    // served (id<10) probes
+    assert(Similarity.withinServedBudget(0.098)) // the calibrated target
+    assert(Similarity.withinServedBudget(0.065)) // the committed 5M point
+    assert(Similarity.withinServedBudget(0.105)) // the allowance edge
+    assert(!Similarity.withinServedBudget(0.106))
+  }
+
+  test("Bench, Verify and Profile build one session with identical SQL conf") {
+    // the three mains must plan alike: each takes its session from the
+    // one factory and sets no SQL conf of its own afterwards
+    for (main <- Seq("Bench", "Verify", "Profile")) {
+      val src = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"src/main/scala/graft/$main.scala"))
+      assert(src.contains("val spark = GraftSession.local()"),
+        s"$main must build its session with GraftSession.local()")
+      for (drift <- Seq("SparkSession.builder", ".config(\"", "conf.set("))
+        assert(!src.contains(drift), s"$main sets its own session conf ($drift)")
     }
-    assert(e.getMessage.contains("0.106") && e.getMessage.contains("0.098"))
   }
 
   test("a thrown bench query lands in the errors field, never the timings") {
@@ -208,90 +218,17 @@ class GuardsSpec extends SparkSpec {
     assert(n == 1000L, s"Trigger.Once drained $n of 1000 rows")
   }
 
-  // ---- ANN5M skip-default carry protocol (round 20: the parser is the
-  // ---- splice's only defense against carrying numbers measured on a
-  // ---- DIFFERENT corpus — every refusal path gets a fixture)
-
-  private def carryArtifact(
-      src: String = "/root/testdata/sf0.1",
-      seeds: String = "[1]",
-      n: String = "5000000",
-      scanned: String = "0.065",
-      extra: String = ""): String =
-    s"""{"metric":"ann5m","src":"$src","two_level_5m":{"n":$n,""" +
-      s""""recall_at_5":0.980,"measured_scanned":$scanned,""" +
-      s""""build_plus_serve_sec":6139.043,"pq_recall_at_5":0.980,""" +
-      s""""pq_marginal_sec":38.539,"seeds":$seeds,$extra""" +
-      s""""commit":"abc1234","measured_at_epoch_sec":1786892266}}"""
-
-  test("carry parser accepts a valid singleton and negative-exponent numbers") {
-    // 6.5E-2 == the 0.065 the emitter would write as %.3f — the r19
-    // regex lacked '-' in its class and died on any negative exponent
-    val d = ScaleBench.parseCarriedSingleton(
-      carryArtifact(scanned = "6.5E-2"), 1L, 5000000L, "/root/testdata/sf0.1")
-    assert(d.seed == 1L && d.rec == 0.98 && d.frac == 0.065 && d.from == "abc1234")
-  }
-
-  test("carry parser prefers the measured-commit marker over the splice's own") {
-    val d = ScaleBench.parseCarriedSingleton(
-      carryArtifact(extra = """"seed1_carried_from_commit":"33bce78","""),
-      1L, 5000000L, "/root/testdata/sf0.1")
-    assert(d.from == "33bce78",
-      "a chained splice must keep naming the commit where the seed was MEASURED")
-  }
-
-  test("carry parser refuses a different source corpus (same n)") {
-    // n5 = base × copies: a same-scale staging from another source
-    // yields an IDENTICAL n, so src identity is the only tell
-    val e = intercept[IllegalArgumentException] {
-      ScaleBench.parseCarriedSingleton(
-        carryArtifact(src = "/elsewhere/sf0.1"), 1L, 5000000L,
-        "/root/testdata/sf0.1")
-    }
-    assert(e.getMessage.contains("src"))
-  }
-
-  test("carry parser refuses multi-seed, foreign-seed and size-mismatched artifacts") {
-    val multi = intercept[IllegalArgumentException] {
-      ScaleBench.parseCarriedSingleton(
-        carryArtifact(seeds = "[1,2,3]"), 1L, 5000000L, "/root/testdata/sf0.1")
-    }
-    assert(multi.getMessage.contains("singleton"))
-    val foreign = intercept[IllegalArgumentException] {
-      ScaleBench.parseCarriedSingleton(
-        carryArtifact(seeds = "[2]"), 1L, 5000000L, "/root/testdata/sf0.1")
-    }
-    assert(foreign.getMessage.contains("singleton"))
-    val sized = intercept[IllegalArgumentException] {
-      ScaleBench.parseCarriedSingleton(
-        carryArtifact(), 1L, 4999999L, "/root/testdata/sf0.1")
-    }
-    assert(sized.getMessage.contains("4999999"))
-  }
-
-  test("two_level_5m extraction ignores a preceding recall_seeds block") {
-    // the legacy full-sweep shape carries its own "seeds" array BEFORE
-    // the field — the r19 whole-file regex matched that one
-    val legacy =
-      """{"metric":"scaleup_ratio","src":"/root/testdata/sf0.1",""" +
-        """"recall_seeds":{"q_ann_ivf":{"seeds":[1,2,3]}},""" +
-        carryArtifact().substring("""{"metric":"ann5m","src":"/root/testdata/sf0.1",""".length)
-    val d = ScaleBench.parseCarriedSingleton(
-      legacy, 1L, 5000000L, "/root/testdata/sf0.1")
-    assert(d.seed == 1L)
-  }
-
   test("validateStagedParams rewrites a legacy tables-suffixed sentinel in place") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sentinel").toString
     val pf = java.nio.file.Paths.get(dir, "_PARAMS")
     java.nio.file.Files.writeString(pf, "copies=30;src=/x;tables=events,orders")
     // same copies/src, tables dropped from the format: backfill, not restage
-    ScaleBench.validateStagedParams(dir, "copies=30;src=/x")
+    Stage.validateStagedParams(dir, "copies=30;src=/x")
     assert(java.nio.file.Files.readString(pf).trim == "copies=30;src=/x",
       "the sentinel must be rewritten to the new format")
     // and a REAL generation-parameter mismatch still fails loudly
     val e = intercept[IllegalArgumentException] {
-      ScaleBench.validateStagedParams(dir, "copies=10;src=/x")
+      Stage.validateStagedParams(dir, "copies=10;src=/x")
     }
     assert(e.getMessage.contains("copies=10"))
   }
