@@ -32,4 +32,20 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with the given SQL confs set, restoring previous values
+    * after — the conf-hygiene analog of [[graft.Tables.withCached]]. The
+    * previous values come from `getAll`, which holds only explicitly set
+    * keys: a key that sat at its default is unset again afterwards, not
+    * pinned to the default's value (`getOption` answers the default). */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -326,33 +326,26 @@ object SparkEntry {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
     }),
     // the same generator through its MicroBatchStream face: admission-
-    // controlled batches drain the range under AvailableNow. Two fat
+    // controlled batches drain the range, 50k ids per trigger. Two fat
     // batches, not five: per-batch planning dominates a complete-mode
     // memory sink, so fatter batches cut fixed cost while still
     // exercising the multi-batch path (GenStreamSpec drives 8- and
     // 5-batch runs through the same source).
     "q_gen_stream" -> ((s: SparkSession, _: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       import org.apache.spark.sql.types.DecimalType
-      // state partitions derived from key cardinality (5 generator-
-      // defined event types → the rule's floor of 4; round-21 profile:
-      // at the session default 32 this 5-key complete-mode aggregation
-      // spun 32 state stores per micro-batch — ~45 s of executor time
-      // for milliseconds of data work)
-      graft.streaming.EventsStream.withStreamPartitions(s,
-        graft.streaming.EventsStream.streamStatePartitions(s, 5L)) {
-        val stream = s.readStream.format("graft.sources.RangeGenSource")
-          .option("rows", "100000").option("batchRows", "50000").load()
-        val agg = stream.groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
-        val name = s"gen_stream_${System.nanoTime()}"
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.streaming.EventsStream.drainAndDrop(s, q, name)
-      }
+      // 5 generator-defined event types → the state-width rule's floor of
+      // 4 (round-21 profile: at the session default 32 this 5-key
+      // complete-mode aggregation spun 32 state stores per micro-batch —
+      // ~45 s of executor time for milliseconds of data work)
+      val agg = s.readStream.format("graft.sources.RangeGenSource")
+        .option("rows", "100000").option("batchRows", "50000").load()
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+      graft.streaming.EventsStream.toMemory(s, agg, OutputMode.Complete(),
+        graft.streaming.EventsStream.EventTypeKeys)
     }),
     // round 8: native point-in-interval join — irregular numeric bands +
     // time validity windows (same custom plan, two domains)

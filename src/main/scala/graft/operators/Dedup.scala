@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.VecText._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -663,7 +664,21 @@ object Dedup {
       edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(true)
     val spark = adj0.sparkSession
-    withLoopConf(spark, adj0.count()) {
+    // Loop conf: the rounds run over POST-THRESHOLD pair graphs, orders
+    // smaller than the corpus, so their cost is per-round stage/job
+    // overhead, not data. Shuffle parallelism derives from the measured
+    // adjacency size (~2M rows per partition, floor 1, capped at the
+    // session width so a genuinely huge pair graph keeps the session's
+    // parallelism), and AQE is OFF: each round is one fixed-shape
+    // materialization over a tiny frame, where adaptive per-stage
+    // re-planning only multiplies driver jobs (round-21 profile: 112 jobs
+    // for 3 s of summed executor work on the embedding cluster graph)
+    // while the coalescing it would buy is what the derived count
+    // already provides. Conf is read per action, so the scope is exact.
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val parts = math.max(1L, math.min(width, adj0.count() / 2000000L + 1L))
+    GraftSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> parts.toString) {
     var labels = adj0
       .groupBy(col("id_a"))
       .agg(min("id_b").as("nbr_min"))
@@ -715,14 +730,29 @@ object Dedup {
     var changed = 1L
     var rounds = 0
     val maxRounds = 30
+    // a superseded round's checkpoint is dead once the next round has
+    // materialized; dropping its blocks keeps the block-manager footprint
+    // at one round instead of every round (the caller's `edges` is never
+    // touched: only this loop's own checkpoints are released)
+    def release(df: DataFrame): Unit =
+      df.queryExecution.logical.collectLeaves().foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
     while (changed > 0 && rounds < maxRounds) {
       val next = step(labels, adj)
       // labels are monotone non-increasing: comp < own ⇔ this round moved
       changed = next.filter(col("comp") < col("own")).count()
+      release(labels)
       labels = next.select("id", "comp")
-      if (changed > 0) adj = contract(adj, labels)
+      if (changed > 0) {
+        val prevAdj = adj
+        adj = contract(adj, labels)
+        release(prevAdj)
+      }
       rounds += 1
     }
+    release(adj)
     // the round cap is a lineage/driver-loop bound, NOT a correctness
     // device: a pair graph with propagation distance > maxRounds would
     // otherwise return silently WRONG component labels. Convergence now
@@ -731,38 +761,7 @@ object Dedup {
     require(changed == 0,
       s"minLabelComponents: $changed labels still changing after " +
         s"$maxRounds rounds — pair-graph diameter exceeds the round cap")
-    // observability only (round-count is THE cost driver of this loop)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[graft] minLabelComponents: $rounds rounds")
     labels
-    }
-  }
-
-  /** Loop-scoped session conf for the label-propagation rounds: the
-    * frames are POST-THRESHOLD pair graphs — orders smaller than the
-    * corpus — so the loop's cost is per-round stage/job overhead, not
-    * data. Shuffle parallelism derives from the measured adjacency size
-    * (~2M rows per partition, floor 1, capped at the session default so
-    * a genuinely huge pair graph keeps the session's parallelism), and
-    * AQE is scoped OFF for the rounds: each round is one fixed-shape
-    * materialization over a tiny frame, where adaptive per-stage
-    * re-planning only multiplies driver jobs (round-21 profile: 112
-    * jobs for 3 s of summed executor work on the embedding cluster
-    * graph) while the partition coalescing it would buy is exactly what
-    * the derived partition count already provides. Conf is read per
-    * action, so scoping around the loop is exact; restored in finally. */
-  private def withLoopConf[T](spark: SparkSession, nRows: Long)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.get(aqeKey)
-    val prevPart = spark.conf.get(partKey)
-    val parts = math.max(1L, math.min(prevPart.toLong, nRows / 2000000L + 1L))
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, parts.toString)
-    try body
-    finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(partKey, prevPart)
     }
   }
 

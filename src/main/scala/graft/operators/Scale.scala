@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -880,18 +880,6 @@ object Scale {
       .orderBy("fk_edge")
   }
 
-  /** Run `body` with the given SQL confs set, restoring previous values
-    * after — the conf-hygiene analog of [[graft.Tables.withCached]]. */
-  private def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** RUNTIME BLOOM-FILTER JOIN PRUNING — the row-level runtime-filter
     * half of the 100 TB toolkit (partition pruning's sibling): a
     * selective filter on `orders` builds a bloom filter over o_orderkey
@@ -907,7 +895,7 @@ object Scale {
     * plan is materialized eagerly (localCheckpoint) while the confs are
     * in scope — optimizer rules run at action time, not build time. */
   def bloomPrunedJoin(spark: SparkSession, dir: String): DataFrame =
-    withConfs(spark,
+    GraftSession.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",

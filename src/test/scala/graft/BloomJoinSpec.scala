@@ -11,23 +11,17 @@ import graft.operators.Scale
 class BloomJoinSpec extends SparkSpec {
 
   test("bloom filter is injected into the fact-side scan of the pruned join") {
-    val confs = Seq(
+    GraftSession.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val plan = Scale.bloomJoinPlan(spark, sf)
         .queryExecution.executedPlan.toString
       // creation side aggregates the filter; application side probes it
       assert(plan.contains("bloom_filter_agg"), s"no bloom build in plan:\n$plan")
       assert(plan.contains("might_contain"), s"no bloom probe in plan:\n$plan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

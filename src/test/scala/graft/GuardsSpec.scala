@@ -181,24 +181,37 @@ class GuardsSpec extends SparkSpec {
   }
 
   test("streamStatePartitions: key-derived with floor and session-width cap") {
-    import graft.streaming.EventsStream
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    try {
-      // small-corpus floor: a few thousand keys never drop below the
-      // measured 4-store optimum
-      spark.conf.set(key, "32")
-      assert(EventsStream.streamStatePartitions(spark, 1L) == 4)
-      assert(EventsStream.streamStatePartitions(spark, 15000L) == 4)
-      // derived: 1e8 keys at 1e6 keys/store → 100, capped at session width
-      assert(EventsStream.streamStatePartitions(spark, 100000000L) == 32)
-      spark.conf.set(key, "2000")
-      assert(EventsStream.streamStatePartitions(spark, 100000000L) == 100)
-      // a session narrower than the floor never yields MORE than the
-      // floor (and never zero/negative)
-      spark.conf.set(key, "2")
-      assert(EventsStream.streamStatePartitions(spark, 1L) == 4)
-    } finally spark.conf.set(key, prev)
+    import graft.streaming.EventsStream.streamStatePartitions
+    // a pure function of (cap, estKeys): the caller reads the session
+    // width before any scope changes it, so no conf is touched here
+    // small-corpus floor: a few thousand keys never drop below the
+    // measured 4-store optimum
+    assert(streamStatePartitions(32, 1L) == 4)
+    assert(streamStatePartitions(32, 15000L) == 4)
+    // derived: 1e8 keys at 1e6 keys/store → 100, capped at session width
+    assert(streamStatePartitions(32, 100000000L) == 32)
+    assert(streamStatePartitions(2000, 100000000L) == 100)
+    // between floor and cap: ceil(1e7 / 1e6) = 10 stores
+    assert(streamStatePartitions(32, 10000000L) == 10)
+    // a session narrower than the floor never yields MORE than the
+    // floor (and never zero/negative)
+    assert(streamStatePartitions(2, 1L) == 4)
+  }
+
+  test("session conf is set only by GraftSession.withConfs and Explain") {
+    // every scoped conf change goes through the one save/set/restore
+    // helper; Explain's plan-flag toggle is the only other setter
+    import scala.jdk.CollectionConverters._
+    val setters = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = java.nio.file.Files.readString(p)
+        src.contains("conf.set") || src.contains("conf.unset")
+      }
+      .map(_.getFileName.toString).toSet
+    assert(setters == Set("GraftSession.scala", "Explain.scala"),
+      s"conf.set/conf.unset outside GraftSession.withConfs: $setters")
   }
 
   test("the range generator drains ALL rows under Trigger.Once") {

@@ -110,4 +110,22 @@ class PropertySpec extends SparkSpec {
       }
     })
   }
+
+  test("min-label components keep only the final labels checkpoint persisted") {
+    // a 64-node chain takes several rounds even with path doubling; every
+    // superseded labels/adjacency checkpoint must be released, so the
+    // persisted set grows by at most the returned frame's own checkpoint
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = graft.operators.Dedup.minLabelComponents(edges)
+    val grown = sc.getPersistentRDDs.keySet -- before
+    val own = labels.queryExecution.logical.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(grown.subsetOf(own) && grown.size <= 1,
+      s"persisted RDDs grew by $grown; only the final labels ($own) may stay")
+    assert(labels.collect().map(_.getLong(1)).toSet == Set(0L))
+  }
 }
