@@ -1,8 +1,9 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.graft.KMeansBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,9 +16,10 @@ import org.apache.spark.sql.functions._
   * centers (tiny — the ONLY driver-side collect in the engine), persist the
   * model (`/root/reference/utils/kmeans_utils.py:107`).
   *
-  * Scale note: each Lloyd iteration is one distributed aggregation; centers
-  * (k × 7 doubles) are broadcast back. Nothing here grows with data size on
-  * the driver except the k×d center matrix.
+  * Scale note: each Lloyd iteration is one distributed aggregation for
+  * every k still running; the centers (Σk × 7 doubles) are broadcast
+  * back. Nothing here grows with data size on the driver except the
+  * center matrices.
   */
 object KMeansScan {
 
@@ -47,11 +49,13 @@ object KMeansScan {
       scan(data, 2, 6, tmp)
     }
 
-  /** The per-k fits are independent, so they run as CONCURRENT Spark jobs
-    * (Spark's scheduler interleaves their stages across idle cores — on a
-    * cluster, across idle executors). Results are unchanged: each fit is
-    * seeded and reads the same cached input; only wall-clock drops from
-    * Σ(fit_k) to ~max(fit_k). */
+  /** All k are fit together by [[org.apache.spark.ml.graft.KMeansBridge]]:
+    * MLlib's own k-means|| and Lloyd kernels, one pass over the cached
+    * features per step for every k, each model bit-identical to MLlib's
+    * per-k `KMeans.fit` with the same seed (KMeansScanSpec pins it). The
+    * per-k silhouettes and model saves are independent, so they
+    * run as CONCURRENT Spark jobs (Spark's scheduler interleaves their
+    * stages across idle cores — on a cluster, across idle executors). */
   def scan(
       data: DataFrame,
       kMin: Int = 2,
@@ -61,21 +65,17 @@ object KMeansScan {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    data.count() // materialize the shared cache once, outside the race
-    val futures = (kMin to kMax).map { k =>
+    val models = KMeansBridge.fitScan(data, "features", kMin to kMax, seed)
+    val futures = models.map { model =>
       Future {
         val evaluator = new ClusteringEvaluator() // silhouette, squaredEuclidean
-        val model = new KMeans()
-          .setK(k).setSeed(seed).setFeaturesCol("features")
-          .fit(data)
-        val predictions = model.transform(data)
-        val score = evaluator.evaluate(predictions)
-        val path = s"$modelDir/model_w_k_$k"
+        val score = evaluator.evaluate(model.transform(data))
+        val path = s"$modelDir/model_w_k_${model.getK}"
         model.write.overwrite().save(path)
-        ScanResult(k, score, model.clusterCenters.map(_.toArray), path)
+        ScanResult(model.getK, score, model.clusterCenters.map(_.toArray), path)
       }
     }
-    futures.map(f => Await.result(f, Duration.Inf)).sortBy(_.k)
+    futures.map(f => Await.result(f, Duration.Inf))
   }
 
   /** Reload a persisted model (`/root/reference/utils/kmeans_utils.py:133-143`). */

@@ -136,19 +136,35 @@ object Graph {
     * unchanged; the 30× corpus (231 MB input → 5.5 GB projected) flips
     * to serialized and completes at the serving heap (both measured this
     * round). Correctness is level-independent (storage level affects
-    * only block encoding). */
+    * only block encoding). The heap is the EXECUTOR's
+    * ([[executorHeapBytes]]), and the input is whatever table the caller
+    * builds its edges from. */
   private def edgeCheckpointLevel(
-      spark: SparkSession, dir: String): org.apache.spark.storage.StorageLevel = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
+      spark: SparkSession, inputPath: String): org.apache.spark.storage.StorageLevel = {
+    val p = new org.apache.hadoop.fs.Path(inputPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val inputBytes = fs.getContentSummary(p).getLength
-    if (inputBytes * 8L * 3L > Runtime.getRuntime.maxMemory / 4L)
+    edgeCheckpointLevel(fs.getContentSummary(p).getLength, executorHeapBytes(spark))
+  }
+
+  /** The sizing rule itself: serialized when the projected footprint
+    * (input × 8 × 3, see above) exceeds a quarter of the heap. */
+  private[graft] def edgeCheckpointLevel(
+      inputBytes: Long, heapBytes: Long): org.apache.spark.storage.StorageLevel =
+    if (inputBytes * 8L * 3L > heapBytes / 4L)
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** Heap of one executor: `spark.executor.memory` (Spark's 1g default
+    * when unset) on a cluster; in local mode the executors ARE the driver
+    * JVM, whose max heap is the bound. */
+  private def executorHeapBytes(spark: SparkSession): Long = {
+    val sc = spark.sparkContext
+    if (sc.isLocal) Runtime.getRuntime.maxMemory
+    else sc.getConf.getSizeAsBytes("spark.executor.memory", "1g")
   }
 
   def triangleCount(spark: SparkSession, dir: String): DataFrame = {
-    val ckptLevel = edgeCheckpointLevel(spark, dir)
+    val ckptLevel = edgeCheckpointLevel(spark, s"$dir/lineitem.parquet")
     // Edge generation via the [[Affinity.basketPairs]] shape (round 21 —
     // the profile showed the old (ok,p)-distinct SELF-JOIN was the
     // query's hottest stage group): one keyed collect_set per order

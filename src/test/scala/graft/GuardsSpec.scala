@@ -245,4 +245,34 @@ class GuardsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("copies=10"))
   }
+
+  test("the k-scan fits through the fused bridge; MLlib-private symbols stay in the bridges") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val mlEstimators = sources
+      .filter(_.toString.contains("src/main/scala/graft/ml/"))
+      .filter(p => java.nio.file.Files.readString(p).contains("new KMeans()"))
+    assert(mlEstimators.isEmpty, s"per-k MLlib fits back in graft.ml: $mlEstimators")
+    val bridges = Set("FusedKMeans.scala", "KMeansBridge.scala")
+    val privateSymbols = Seq("VectorWithNorm", "DistanceMeasure", "LocalKMeans", "new KMeansModel(")
+    val leaks = for {
+      p <- sources if !bridges(p.getFileName.toString)
+      src = java.nio.file.Files.readString(p)
+      sym <- privateSymbols if src.contains(sym)
+    } yield s"${p.getFileName}: $sym"
+    assert(leaks.isEmpty, s"MLlib-private symbols outside the bridges: $leaks")
+  }
+
+  test("edge checkpoint level: serialized above a quarter of the heap, deserialized below") {
+    import org.apache.spark.storage.StorageLevel.{MEMORY_AND_DISK, MEMORY_AND_DISK_SER}
+    import graft.operators.Graph.edgeCheckpointLevel
+    val heap = 8L << 30
+    // projected footprint = input x 24, against heap / 4 = 2 GiB
+    assert(edgeCheckpointLevel(100L << 20, heap) == MEMORY_AND_DISK_SER)
+    assert(edgeCheckpointLevel(80L << 20, heap) == MEMORY_AND_DISK)
+    // at exactly a quarter of the heap it still fits
+    assert(edgeCheckpointLevel(heap / 96, heap) == MEMORY_AND_DISK)
+    assert(edgeCheckpointLevel(heap / 96 + 1, heap) == MEMORY_AND_DISK_SER)
+  }
 }
