@@ -8,7 +8,8 @@ object Bench {
     val spark = GraftSession.local()
     // JVM/codegen warm-up outside the timed region (first query otherwise
     // pays several seconds of classloading + codegen compilation).
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count()
+    catch { case e: Throwable => System.err.println(s"[bench] entry warm-up failed: $e") }
     // RocksDB native-lib + provider first-use is likewise a JVM-wide
     // one-time cost; without this the alphabetically-first stateful
     // streaming query absorbs ~6 s that isn't its plan's.

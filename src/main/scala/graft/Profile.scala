@@ -39,9 +39,10 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count()
+    catch { case e: Throwable => System.err.println(s"[profile] entry warm-up failed: $e") }
     try graft.streaming.EventsStream.warmStateStore(spark)
-    catch { case _: Throwable => }
+    catch { case e: Throwable => System.err.println(s"[profile] rocks warm-up failed: $e") }
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     // pass 1: warm-up (memo builds, codegen). pass 2: attributed.
     names.foreach { n =>

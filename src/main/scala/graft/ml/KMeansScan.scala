@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Per k in [kMin, kMax] (reference: 2..6, `/root/reference/pyspark_kmeans.py:23`):
   * fit KMeans(seed=1) on `features`, score silhouette (squared-Euclidean
   * default, `/root/reference/utils/kmeans_utils.py:85,105`), collect the k
-  * centers (tiny — the ONLY driver-side collect in the engine), persist the
+  * centers (tiny — k rows of 7 doubles per fit), persist the
   * model (`/root/reference/utils/kmeans_utils.py:107`).
   *
   * Scale note: each Lloyd iteration is one distributed aggregation for

@@ -893,10 +893,7 @@ object Dedup {
     // pruned/banded fast paths already exclude them via the index, so
     // keeping them here would let the survival-gated routing change
     // RESULTS instead of only cost. Mirrored in the oracle.
-    val e = Tables.load(spark, dir, "embeddings")
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(norm2("emb_d")))
-      .filter(col("nrm") > 0.0)
+    val e = Similarity.withNorms(Similarity.corpus(spark, dir))
     val a = e.repartition(col("vec_id"))
       .select(col("vec_id").as("id_a"), col("emb_d").as("emb_a"), col("nrm").as("na"))
     val b = e.select(col("vec_id").as("id_b"), col("emb_d").as("emb_b"), col("nrm").as("nb"))
@@ -920,7 +917,7 @@ object Dedup {
     * the memoized IVF geometry) what fraction of bucket pairs the
     * triangle-inequality bound would prune at this threshold. When most
     * bucket pairs are eliminated (survival ≤ 0.5) the EXACT pruned join
-    * ([[Similarity.prunedEmbeddingPairsOver]]) carries the graph — no
+    * ([[Similarity.prunedEmbeddingPairs]]) carries the graph — no
     * corpus-wide cross join; when the corpus is too weakly clustered for
     * ANY exact method to prune (this repo's synthetic embeddings at 0.4:
     * measured survival 1.0), the parallelized exact scan
@@ -950,8 +947,7 @@ object Dedup {
     * cosines capped near 0.5) cannot exhibit. View ids are
     * `vec_id * 4 + view`, so provenance survives the id arithmetic. */
   private[graft] def augmentedCorpus(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "embeddings")
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+    Similarity.corpus(spark, dir)
       .select(col("vec_id"), col("emb_d"))
       .withColumn("view", explode(array(lit(0), lit(1), lit(2))))
       .select((col("vec_id") * 4 + col("view")).as("vec_id"),
@@ -963,7 +959,7 @@ object Dedup {
   /** TIGHT-THRESHOLD embedding near-dup pairs over the augmented corpus
     * — the scale-safe oracled representative of the embedding-dedup
     * family: hyperplane-LSH banded candidates + exact cosine verify
-    * ([[Similarity.lshEmbeddingPairsOver]]), the plan a 100 TB semantic
+    * ([[Similarity.lshEmbeddingPairs]]), the plan a 100 TB semantic
     * dedup actually runs (banding + equi-joins, NO corpus-wide cross
     * join — plan-shape pinned). Band width is the threshold-dependent
     * dial: at dup-grade thresholds the views sit θ ≈ 1-2° apart
@@ -982,7 +978,7 @@ object Dedup {
     * per-query, not global). */
   def tightEmbeddingPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.8): DataFrame =
-    Similarity.lshEmbeddingPairsOver(augmentedCorpus(spark, dir), threshold,
+    Similarity.lshEmbeddingPairs(augmentedCorpus(spark, dir), threshold,
       nBits = 768, nBands = 32)
 
   /** SEMANTIC-DEDUP CLUSTERS — the SemDeDup-style end of the embedding

@@ -9,7 +9,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over `embeddings.embedding`
-  * (`array<float>`, 64-dim).
+  * (`array<float>`; the width is derived from the data, see
+  * [[embeddingDim]]).
   *
   * Two tiers:
   *   - [[bruteTopK]]: exact cosine top-k — the correctness baseline,
@@ -23,65 +24,83 @@ import org.apache.spark.sql.functions._
   *     the standard IVF-Flat layout (FAISS-style) expressed relationally.
   *
   * Cosine ranking == L2 ranking on unit-normalized vectors, so both tiers
-  * rank with the same `cos` expression on pre-normalized doubles.
+  * rank with the same `cos` expression on pre-normalized doubles, through
+  * the one ranking window [[cosRank]].
+  *
+  * Every operator takes the corpus as a table dir: the memoized index,
+  * count and dim are keyed by that dir alone. The one frame-in operator
+  * is the un-memoized LSH miner, which derived corpora also feed.
   */
 object Similarity {
 
-  /** Corpus with unit-norm double vectors (computed once, codegen'd).
-    * repartition BEFORE normalizing — the single-file-corpus guard
-    * [[bruteTopK]] documents, applied to the INDEX-BUILD paths too
-    * (round 16): a sub-128 MB staged corpus arrives as ONE scan
-    * partition, and without the exchange the quantizer training sample,
-    * the corpus-wide assignment pass, the PQ encode AND every
-    * inverted-list search join inherit single-task parallelism
-    * (measured: the 200k-vector calibration corpus ran its whole KMeans
-    * fit on one core). One skinny (id, vec) shuffle at ingest buys
-    * layout-independent width everywhere downstream. */
-  private def normalized(spark: SparkSession, dir: String): DataFrame =
-    normalizedOf(Tables.load(spark, dir, "embeddings")
-      .repartition(col("vec_id"))
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
+  /** THE embeddings loader: `(vec_id, label, emb_d)` with the float
+    * vectors cast to double here and nowhere else. `spread` repartitions
+    * by vec_id BEFORE the cast — the single-file-corpus guard: a sub-128
+    * MB corpus (exactly what the scale-bench generator writes) arrives as
+    * ONE scan partition, and without the exchange every downstream cross
+    * join, quantizer fit and list-scan join inherits single-task
+    * parallelism (measured: the 200k-vector calibration corpus ran its
+    * whole KMeans fit on one core). One skinny (id, vec) shuffle at
+    * ingest buys layout-independent width everywhere downstream. */
+  private[graft] def corpus(
+      spark: SparkSession, dir: String, spread: Boolean = false): DataFrame = {
+    val t = Tables.load(spark, dir, "embeddings")
+    (if (spread) t.repartition(col("vec_id")) else t)
+      .select(col("vec_id"), col("label"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb_d"))
+  }
 
-  /** Unit-normalization of an arbitrary `(vec_id, emb_d)` corpus frame.
-    * ZERO-NORM vectors are DROPPED: a zero vector has no direction, and
-    * its NaN unit coordinates would poison the KMeans quantizer and —
-    * because Spark orders NaN above every double — rank FIRST in every
-    * descending cosine top-k they cross. */
-  private def normalizedOf(corpus: DataFrame): DataFrame =
+  /** Adds `nrm` = ‖emb_d‖ and DROPS zero-norm vectors — the engine-wide
+    * cosine semantics, mirrored in every oracle: a zero vector has no
+    * direction, its NaN unit coordinates would poison the KMeans
+    * quantizer, and its 0/0 cosine is NaN — which Spark orders ABOVE
+    * every double, so it would rank FIRST in every descending top-k and
+    * pass every `>= threshold` filter. */
+  private[graft] def withNorms(corpus: DataFrame): DataFrame =
     corpus
       .withColumn("nrm", sqrt(norm2("emb_d")))
       .filter(col("nrm") > 0.0)
+
+  /** The spread corpus with unit-norm double vectors (computed once,
+    * codegen'd) — the input of every index build. */
+  private def normalized(spark: SparkSession, dir: String): DataFrame =
+    withNorms(corpus(spark, dir, spread = true))
       .withColumn("unit", expr("transform(emb_d, x -> x / nrm)"))
       .select(col("vec_id"), col("emb_d"), col("unit"))
 
+  /** THE cosine ranking: per query, cosine descending, neighbor id
+    * ascending as the deterministic tiebreak — every exact and index
+    * top-k ranks through this one window. */
+  private val cosRank =
+    Window.partitionBy("query_id").orderBy(col("cos_raw").desc, col("neighbor_id").asc)
+
+  /** Each query's best `k` rows of a scored `(query_id, neighbor_id,
+    * cos_raw, …)` frame under [[cosRank]], carrying `rnk`. */
+  private def topByCos(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(cosRank)).filter(col("rnk") <= k)
+
+  /** The served top-k shape `(query_id, neighbor_id, rnk, cos)`, cosine
+    * rounded to 6 dp — the tail of the brute, IVF and PQ searches. */
+  private def cosTopK(scored: DataFrame, k: Int): DataFrame =
+    topByCos(scored, k).select(col("query_id"), col("neighbor_id"), col("rnk"),
+      round(col("cos_raw"), 6).as("cos"))
+
   /** Exact cosine top-k for probe vectors (vec_id < nProbes). Norms are
     * precomputed per side; cos = dot/(nq·nc) matches the oracle formula
-    * bit-for-bit. Zero-norm vectors are dropped on BOTH sides — the same
-    * semantics [[normalizedOf]] gives the index paths (a zero vector has
-    * no direction; its NaN cosine would rank first under Spark's NaN
-    * ordering) — and the DuckDB oracle mirrors the drop, so the two
-    * engines share the semantics rather than agreeing by fixture luck. */
+    * bit-for-bit. Zero-norm vectors are dropped on BOTH sides
+    * ([[withNorms]]) and the DuckDB oracle mirrors the drop, so the two
+    * engines share the semantics rather than agreeing by fixture luck.
+    * The corpus is spread before the cross join's scan side: a
+    * single-file corpus would otherwise run the whole O(probes × n) scan
+    * in ONE task. */
   def bruteTopK(spark: SparkSession, dir: String, k: Int = 5, nProbes: Int = 10): DataFrame = {
-    // repartition BEFORE the scan side of the cross join: a single-file
-    // corpus (exactly what the scale-bench generator writes) would
-    // otherwise run the whole O(probes × n) scan in ONE task — the
-    // measured single-task-stall class the LSH path guards against
-    val e = Tables.load(spark, dir, "embeddings")
-      .repartition(col("vec_id"))
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(norm2("emb_d")))
-      .filter(col("nrm") > 0.0)
+    val e = withNorms(corpus(spark, dir, spread = true))
     val probes = e.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("query_id"), col("emb_d").as("emb_q"), col("nrm").as("nq"))
-    val corpus = e.select(col("vec_id").as("neighbor_id"), col("emb_d").as("emb_c"), col("nrm").as("nc"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    probes.crossJoin(corpus)
+    val others = e.select(col("vec_id").as("neighbor_id"), col("emb_d").as("emb_c"), col("nrm").as("nc"))
+    cosTopK(probes.crossJoin(others)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_raw", dot("emb_q", "emb_c") / (col("nq") * col("nc")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cos_raw"), 6).as("cos"))
+      .withColumn("cos_raw", dot("emb_q", "emb_c") / (col("nq") * col("nc"))), k)
   }
 
   /** Random-hyperplane LSH near-dup pair mining — the banded candidate
@@ -113,25 +132,14 @@ object Similarity {
     * [[Dedup.embeddingPairsShared]]) or accepts per-shard exactness.
     * This function stays the loose-threshold default because at the
     * recall floor it is measurably the cheapest correct config at test
-    * scale, and its candidate volume is the documented trade. */
+    * scale, and its candidate volume is the documented trade.
+    *
+    * Takes any `(vec_id, emb_d)` corpus frame — the table ([[corpus]])
+    * or a DERIVED corpus (the augmented-view tight-dup query routes
+    * here); nothing is memoized, so no key has to name the frame. */
   def lshEmbeddingPairs(
-      spark: SparkSession,
-      dir: String,
-      threshold: Double = 0.4,
-      nBits: Int = 192,
-      nBands: Int = 32): DataFrame =
-    lshEmbeddingPairsOver(
-      Tables.load(spark, dir, "embeddings")
-        .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .select(col("vec_id"), col("emb_d")),
-      threshold, nBits, nBands)
-
-  /** [[lshEmbeddingPairs]] over an arbitrary `(vec_id, emb_d)` corpus
-    * frame — the same banded candidate mining for DERIVED corpora (the
-    * augmented-view tight-dup query routes here). */
-  def lshEmbeddingPairsOver(
       corpus: DataFrame,
-      threshold: Double,
+      threshold: Double = 0.4,
       nBits: Int = 192,
       nBands: Int = 32): DataFrame = {
     // integer division below would otherwise SILENTLY mis-band: e.g.
@@ -162,14 +170,8 @@ object Similarity {
     // partition, funneling the whole mining into ONE task (measured: a
     // 25-minute single-task stall at sf1). One skinny (id, vec) shuffle
     // buys a plan whose parallelism is independent of input file layout.
-    val base = corpus
-      .repartition(col("vec_id"))
-      .withColumn("nrm", sqrt(norm2("emb_d")))
-      // zero-norm drop: a zero vector signs every plane the same way,
-      // collides into bands, and its 0/0 cosine is NaN — which Spark
-      // orders ABOVE every double, so `NaN >= threshold` would emit
-      // bogus pairs. Same semantics as every other cosine path.
-      .filter(col("nrm") > 0.0)
+    val base = withNorms(corpus.select(col("vec_id"), col("emb_d"))
+        .repartition(col("vec_id")))
       .withColumn("bands",
         graft.functions.HashExpressions.sign_bits(col("emb_d"), planes, rowsPerBand))
     Tables.withCached(base) {
@@ -216,7 +218,7 @@ object Similarity {
       threshold: Double = 0.4, floor: Double = 0.8): DataFrame = {
     val exact = Dedup.embeddingPairsShared(spark, dir, threshold)
       .select("id_a", "id_b")
-    val mined = lshEmbeddingPairs(spark, dir, threshold)
+    val mined = lshEmbeddingPairs(corpus(spark, dir), threshold)
       .select(col("id_a"), col("id_b"), lit(1).as("hit"))
     exact.join(mined, Seq("id_a", "id_b"), "left")
       .agg(count(lit(1)).as("n_exact_pairs"),
@@ -255,28 +257,68 @@ object Similarity {
     * ([[Dedup.embeddingPairs]]), and this operator is the exact
     * FAST PATH for the tight-cluster regime (real near-dup corpora at
     * dup-grade thresholds ≥ 0.8), where bucket pairs prune wholesale and
-    * the plan carries no corpus-wide cross join. */
+    * the plan carries no corpus-wide cross join.
+    *
+    * Bucket count is the work dial: pair work inside a surviving bucket
+    * pair is |A|×|B|, so buckets must stay roughly constant-SIZED as the
+    * corpus grows (√n-ish bucket COUNT), or the join re-approaches n².
+    * nlist=0 (default) auto-scales via [[autoNlist]]. Exactness is
+    * nlist-INDEPENDENT — the triangle-inequality prune is valid for any
+    * partition — so the dial moves only performance, never results. */
   def prunedEmbeddingPairs(
       spark: SparkSession, dir: String, threshold: Double,
-      nlist: Int = 0): DataFrame =
-    prunedEmbeddingPairsOver(spark,
-      Tables.load(spark, dir, "embeddings")
-        .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .select(col("vec_id"), col("emb_d")),
-      dir, threshold, nlist)
+      nlist: Int = 0): DataFrame = {
+    val g = prunedGeom(spark, dir, nlist)
+    val memberAng = g.memberAng
+    val thetaMax = math.acos(threshold) + 1e-9
+    // bucket-level cut over the shared [[bucketPairAngles]] frame: drop
+    // pairs the radius bound clears whole; survivors carry the centroid
+    // angle for the member-level refine
+    val keep = bucketPairAngles(g)
+      .filter(col("cang") - col("ra") - col("rb") <= lit(thetaMax))
+      .select("la", "lb", "cang")
+    // Candidate mining is SKINNY (bucket id, vec_id, one double) and the
+    // triangle bound is re-applied PER MEMBER PAIR — θ(a,b) ≥ θ(cA,cB) −
+    // θ(a,cA) − θ(b,cB) — before any vector is fetched. This is the
+    // load-bearing cut: the bucket-level radius is inflated by any single
+    // outlier member (one stray vector re-admits every pair touching its
+    // bucket — measured 60× cold-build blow-up at 10× corpus), while the
+    // member-level bound is exact per pair and immune to it. Each
+    // unordered pair arises from exactly one orientation (id_a rides its
+    // own bucket's side), so no distinct pass is needed.
+    val ma = memberAng.select(col("list_id").as("la"),
+      col("neighbor_id").as("id_a"), col("ang").as("ang_a"))
+    val mb = memberAng.select(col("list_id").as("lb"),
+      col("neighbor_id").as("id_b"), col("ang").as("ang_b"))
+    val cands = ma.join(broadcast(keep), "la").join(mb, "lb")
+      .filter(col("id_a") < col("id_b") &&
+        col("cang") - col("ang_a") - col("ang_b") <= lit(thetaMax))
+      .select("id_a", "id_b")
+    // Exact cosine exactly as the brute baseline computes it (dot/(na·nb)
+    // on raw doubles), so results are bit-identical to the oracle. The
+    // zero-norm drop removes nothing here — candidates come from the
+    // index, which never holds a zero-norm vector.
+    val e = withNorms(corpus(spark, dir))
+    val embA = e.select(col("vec_id").as("id_a"), col("emb_d").as("emb_a"), col("nrm").as("na"))
+    val embB = e.select(col("vec_id").as("id_b"), col("emb_d").as("emb_b"), col("nrm").as("nb"))
+    cands.join(embA, "id_a").join(embB, "id_b")
+      .withColumn("cos", dot("emb_a", "emb_b") / (col("na") * col("nb")))
+      .filter(col("cos") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+  }
 
   /** The bucket geometry the pruned pair join and its applicability gate
     * share: unit centroids, per-member angle to own centroid, per-bucket
-    * angular radius. Memoized per (corpus, k) — the gate measuring
-    * survival and the pruned join that follows must not build it twice. */
+    * angular radius. Memoized per (dir, k) — the gate measuring survival
+    * and the pruned join that follows must not build it twice. `nlist`
+    * 0 derives k via [[autoNlist]]. */
   private final case class PrunedGeom(
     cUnit: DataFrame, memberAng: DataFrame, radii: DataFrame)
   private val geomMemo = new graft.SessionMemo[PrunedGeom]()
-  private def prunedGeom(
-      spark: SparkSession, corpus: DataFrame, memoKey: String,
-      k: Int): PrunedGeom =
-    geomMemo.getOrCompute(spark, s"$memoKey|$k") {
-      val idx = ivfIndexOver(spark, corpus, memoKey, k, 0.25, 5)
+  private def prunedGeom(spark: SparkSession, dir: String, nlist: Int): PrunedGeom = {
+    val k = if (nlist > 0) nlist else autoNlist(corpusCount(spark, dir))
+    geomMemo.getOrCompute(spark, s"$dir|$k") {
+      val idx = ivfIndex(spark, dir, k, 0.25, 5)
       val cUnit = idx.centroids
         .withColumn("cn", sqrt(norm2("centroid")))
         .withColumn("cu", expr("transform(centroid, x -> x / cn)"))
@@ -291,6 +333,7 @@ object Similarity {
       val radii = memberAng.groupBy("list_id").agg(max("ang").as("radius"))
       PrunedGeom(cUnit, memberAng, radii)
     }
+  }
 
   /** Bucket count dial shared by the pruned join and the gate: ~125
     * vectors per bucket, floor 16 (shares the ANN suite's index at small
@@ -307,7 +350,7 @@ object Similarity {
     * round 16 at the NEW 200k-vector third scale point, under the
     * width-fixed CANONICAL build (the round's first reading — 0.80 at
     * the old 16√n — was a single-partition-build artifact, not the
-    * rule; see the ivfIndexOver comments). Measured canonical grid,
+    * rule; see the ivfIndex comments). Measured canonical grid,
     * recall@5 at ~9% measured fraction: 20k → 4096 lists 0.84 but
     * 8192 = 1.00; 200k → 8192 = 0.94-0.96, 32768 = 0.96 (16384 sits in
     * a weak-draw dip, 0.88-0.92 — quantizer draws move recall ±0.04-
@@ -380,11 +423,11 @@ object Similarity {
     * 200k, wasting recall the 10% done-bar budget allows. Targeting the
     * measured number IS the contract.
     * Floors still apply and may exceed the target by design:
-    *   - candidate budget: enough lists to cover ~512 candidates
-    *     (512·nlist/n) — on a tiny corpus this deliberately degenerates
-    *     toward a full scan (ANN on 500 vectors SHOULD be exact), and it
+    *   - [[candidateFloor]]: enough lists to cover ~512 candidates,
+    *     floor 6 — on a tiny corpus this deliberately degenerates toward
+    *     a full scan (ANN on 500 vectors SHOULD be exact), and it
     *     vanishes as n grows;
-    *   - absolute floor 6; never above nlist itself. */
+    *   - never above nlist itself. */
   private val nprobeMemo = new graft.SessionMemo[java.lang.Integer]()
   private def autoNprobeMeasured(
       spark: SparkSession, dir: String, nlist: Int, n: Long,
@@ -472,8 +515,18 @@ object Similarity {
           }
           lo
         }
-      val budgetTerm = ((512L * nlist + n - 1) / math.max(n, 1L)).toInt
-      math.min(nlist, math.max(result, math.max(6, budgetTerm)))
+      math.min(nlist, math.max(result, candidateFloor(nlist, n)))
+  }
+
+  /** The auto nprobe's floor: enough lists to cover ~512 candidates,
+    * `⌈512·nlist / n⌉`, and never under 6. `n` is the RAW table row count
+    * ([[corpusCount]]) — the count the bisection's caller resolves with —
+    * so [[ivfScannedFraction]]'s "did the floor or the bisection govern"
+    * test reads the floor the bisection actually applied, even on a
+    * corpus whose zero-norm rows make the index smaller than the table. */
+  private[graft] def candidateFloor(nlist: Int, n: Long): Int = {
+    val nn = math.max(n, 1L)
+    math.max(6, ((512L * nlist + nn - 1) / nn).toInt)
   }
 
   /** Quantizer TRAINING fraction when the caller does not pin one:
@@ -497,23 +550,6 @@ object Similarity {
       java.lang.Long.valueOf(Tables.load(spark, dir, "embeddings").count())
     }.longValue()
 
-  /** [[corpusCount]] for an arbitrary corpus frame, memoized by the
-    * caller's memoKey — the gate + pruned-join pair previously ran a
-    * fresh full-scan count job EACH CALL for the same immutable corpus,
-    * contradicting the gate's "the cost of asking is one tiny
-    * aggregate" contract. */
-  private def corpusCountOver(
-      spark: SparkSession, corpus: DataFrame, memoKey: String): Long =
-    // SAME key namespace as [[corpusCount]], deliberately: when memoKey
-    // IS a table dir (the pruned-pair path over the embeddings table)
-    // the two calls describe the identical immutable corpus, and a
-    // prefixed key made the session count it twice — the exact repeated
-    // job this memo exists to remove. The memoKey-identifies-the-corpus
-    // contract makes the shared namespace safe for derived corpora.
-    countMemo.getOrCompute(spark, memoKey) {
-      java.lang.Long.valueOf(corpus.count())
-    }.longValue()
-
   /** Embedding DIMENSIONALITY, derived from the data (round 15): one
     * `size(vec)` probe of the first row — a limit-1 scan, memoized per
     * (session, dir) like the count. Real corpora are 768-4096-dim, not
@@ -532,7 +568,9 @@ object Similarity {
           .select(col("embedding").as("v")), s"embeddings at $dir"))
     }.intValue()
 
-  /** [[embeddingDim]] for an arbitrary one-vector-column frame. */
+  /** The one dim probe: the width of the first row's vector in a
+    * one-vector-column frame. [[embeddingDim]] memoizes it per dir; the
+    * frame-in LSH miner calls it directly. */
   private def dimOfFrame(vecs: DataFrame, what: String): Int = {
     val head = vecs.select(size(col(vecs.columns.head)).as("d")).limit(1).collect()
     require(head.nonEmpty, s"embedding dim probe: $what is empty")
@@ -547,38 +585,42 @@ object Similarity {
     d
   }
 
-  /** Resolve caller-supplied (nlist, nprobe) against the auto rule: 0
-    * (the default) means derive — an explicit value always wins, so
-    * spec/serving calls can still pin geometry. A lone pinned `nlist`
-    * gets [[autoNprobe]] applied to the PINNED value (never to the auto
-    * nlist — mixing the two would produce an incoherent fraction); a
-    * lone pinned `nprobe` resolves nlist from the data and is validated
-    * against it, so an impossible pair fails loudly instead of silently
-    * degenerating to a full scan. */
+  /** Resolve caller-supplied (nlist, nprobe, trainFraction) against the
+    * auto rules: 0 (the default) means derive — an explicit value always
+    * wins, so spec/serving calls can still pin geometry. A lone pinned
+    * `nlist` gets the measured nprobe ([[autoNprobeMeasured]]) of the
+    * PINNED value (never of the auto nlist — mixing the two would produce
+    * an incoherent fraction); a lone pinned `nprobe` resolves nlist from
+    * the data and is validated against it, so an impossible pair fails
+    * loudly instead of silently degenerating to a full scan. The train
+    * fraction resolves once, here ([[autoTrainFraction]] of the resolved
+    * nlist), so the index that measures nprobe IS the index served.
+    * Returns (nlist, nprobe, trainFraction). */
   private def resolveGeometry(spark: SparkSession, dir: String,
       nlist: Int, nprobe: Int,
-      trainFraction: Double = 0.0, trainIters: Int = 5): (Int, Int) = {
-    // lazy: pinning BOTH params must not pay even the memoized count
+      trainFraction: Double = 0.0, trainIters: Int = 5): (Int, Int, Double) = {
+    // lazy: pinning every param must not pay even the memoized count
     lazy val n = corpusCount(spark, dir)
     val rl = if (nlist > 0) nlist else autoSearchNlist(n)
-    val rp = if (nprobe > 0) nprobe else {
-      // resolve the training params HERE so the measurement index is the
-      // index the caller will serve (round-16 ADVICE — pinned training
-      // params previously measured against a differently-trained build)
-      val tf = if (trainFraction > 0) trainFraction
-               else autoTrainFraction(rl, n)
-      autoNprobeMeasured(spark, dir, rl, n, tf, trainIters)
-    }
+    val tf = if (trainFraction > 0) trainFraction else autoTrainFraction(rl, n)
+    val rp = if (nprobe > 0) nprobe
+      else autoNprobeMeasured(spark, dir, rl, n, tf, trainIters)
     require(rp <= rl,
       s"IVF geometry: nprobe=$rp exceeds nlist=$rl — pin both params " +
         "coherently (a probe cannot scan more lists than exist)")
-    (rl, rp)
+    (rl, rp, tf)
   }
 
-  /** 0 (the default) = derive via [[autoTrainFraction]]; explicit pins. */
-  private def resolveTrainFraction(
-      spark: SparkSession, dir: String, tf: Double, nlist: Int): Double =
-    if (tf > 0) tf else autoTrainFraction(nlist, corpusCount(spark, dir))
+  /** THE single-level IVF handle every serve and measurement path takes:
+    * the index at the resolved geometry ([[resolveGeometry]]) and the
+    * resolved nprobe. */
+  private def servedIvf(spark: SparkSession, dir: String,
+      nlist: Int, nprobe: Int,
+      trainFraction: Double, trainIters: Int): (IvfIndex, Int) = {
+    val (rl, rp, tf) =
+      resolveGeometry(spark, dir, nlist, nprobe, trainFraction, trainIters)
+    (ivfIndex(spark, dir, rl, tf, trainIters), rp)
+  }
 
   /** MEASURED applicability gate for [[prunedEmbeddingPairs]]: the
     * fraction of bucket pairs the triangle-inequality radius bound FAILS
@@ -590,16 +632,20 @@ object Similarity {
     * guessing. */
   def bucketPairSurvival(
       spark: SparkSession, dir: String, threshold: Double,
-      nlist: Int = 0): Double =
-    bucketPairSurvivalOver(spark,
-      Tables.load(spark, dir, "embeddings")
-        .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .select(col("vec_id"), col("emb_d")),
-      dir, threshold, nlist)
+      nlist: Int = 0): Double = {
+    val g = prunedGeom(spark, dir, nlist)
+    val thetaMax = math.acos(threshold) + 1e-9
+    val r = bucketPairAngles(g)
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("cang") - col("ra") - col("rb") <= lit(thetaMax), 1L)
+          .otherwise(0L)).as("kept"))
+      .head()
+    r.getLong(1).toDouble / math.max(1L, r.getLong(0))
+  }
 
   /** k×k bucket-pair frame with centroid angle and both radii — shared
-    * by the survival GATE ([[bucketPairSurvivalOver]]) and the pruned
-    * JOIN it gates ([[prunedEmbeddingPairsOver]]), so the radius bound
+    * by the survival GATE ([[bucketPairSurvival]]) and the pruned
+    * JOIN it gates ([[prunedEmbeddingPairs]]), so the radius bound
     * the gate measures is definitionally the bound the join applies (an
     * edit to the clamp or slack in one copy could otherwise silently
     * desynchronize the routing in `Dedup.embeddingPairsShared`). The
@@ -615,71 +661,6 @@ object Similarity {
         acos(least(lit(1.0), greatest(lit(-1.0), dot("cua", "cub")))))
   }
 
-  /** [[bucketPairSurvival]] over an arbitrary `(vec_id, emb_d)` corpus. */
-  def bucketPairSurvivalOver(
-      spark: SparkSession, corpus: DataFrame, memoKey: String,
-      threshold: Double, nlist: Int = 0): Double = {
-    val k = if (nlist > 0) nlist else autoNlist(corpusCountOver(spark, corpus, memoKey))
-    val g = prunedGeom(spark, corpus, memoKey, k)
-    val thetaMax = math.acos(threshold) + 1e-9
-    val r = bucketPairAngles(g)
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("cang") - col("ra") - col("rb") <= lit(thetaMax), 1L)
-          .otherwise(0L)).as("kept"))
-      .head()
-    r.getLong(1).toDouble / math.max(1L, r.getLong(0))
-  }
-
-  /** [[prunedEmbeddingPairs]] over an arbitrary `(vec_id, emb_d)` corpus
-    * frame; `memoKey` must identify the corpus uniquely in-session.
-    *
-    * Bucket count is the work dial: pair work inside a surviving bucket
-    * pair is |A|×|B|, so buckets must stay roughly constant-SIZED as the
-    * corpus grows (√n-ish bucket COUNT), or the join re-approaches n².
-    * nlist=0 (default) auto-scales via [[autoNlist]]. Exactness is
-    * nlist-INDEPENDENT — the triangle-inequality prune is valid for any
-    * partition — so the dial moves only performance, never results. */
-  def prunedEmbeddingPairsOver(
-      spark: SparkSession, corpus: DataFrame, memoKey: String,
-      threshold: Double, nlist: Int = 0): DataFrame = {
-    val k = if (nlist > 0) nlist else autoNlist(corpusCountOver(spark, corpus, memoKey))
-    val g = prunedGeom(spark, corpus, memoKey, k)
-    val memberAng = g.memberAng
-    val thetaMax = math.acos(threshold) + 1e-9
-    // bucket-level cut over the shared [[bucketPairAngles]] frame: drop
-    // pairs the radius bound clears whole; survivors carry the centroid
-    // angle for the member-level refine
-    val keep = bucketPairAngles(g)
-      .filter(col("cang") - col("ra") - col("rb") <= lit(thetaMax))
-      .select("la", "lb", "cang")
-    // Candidate mining is SKINNY (bucket id, vec_id, one double) and the
-    // triangle bound is re-applied PER MEMBER PAIR — θ(a,b) ≥ θ(cA,cB) −
-    // θ(a,cA) − θ(b,cB) — before any vector is fetched. This is the
-    // load-bearing cut: the bucket-level radius is inflated by any single
-    // outlier member (one stray vector re-admits every pair touching its
-    // bucket — measured 60× cold-build blow-up at 10× corpus), while the
-    // member-level bound is exact per pair and immune to it. Each
-    // unordered pair arises from exactly one orientation (id_a rides its
-    // own bucket's side), so no distinct pass is needed.
-    val ma = memberAng.select(col("list_id").as("la"),
-      col("neighbor_id").as("id_a"), col("ang").as("ang_a"))
-    val mb = memberAng.select(col("list_id").as("lb"),
-      col("neighbor_id").as("id_b"), col("ang").as("ang_b"))
-    val cands = ma.join(broadcast(keep), "la").join(mb, "lb")
-      .filter(col("id_a") < col("id_b") &&
-        col("cang") - col("ang_a") - col("ang_b") <= lit(thetaMax))
-      .select("id_a", "id_b")
-    // Exact cosine exactly as the brute baseline computes it (dot/(na·nb)
-    // on raw doubles), so results are bit-identical to the oracle.
-    val e = corpus.withColumn("nrm", sqrt(norm2("emb_d")))
-    val embA = e.select(col("vec_id").as("id_a"), col("emb_d").as("emb_a"), col("nrm").as("na"))
-    val embB = e.select(col("vec_id").as("id_b"), col("emb_d").as("emb_b"), col("nrm").as("nb"))
-    cands.join(embA, "id_a").join(embB, "id_b")
-      .withColumn("cos", dot("emb_a", "emb_b") / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-  }
-
   /** kNN LABEL CLASSIFICATION over `embeddings.label` — the semantic
     * quality check on top of the ANN suite: held-out probes (vec_id <
     * nProbes) are classified by majority vote among their k nearest
@@ -692,27 +673,7 @@ object Similarity {
     * candidate stage swaps for [[ivfTopK]]'s inverted lists and the vote
     * logic is unchanged. */
   def knnClassify(spark: SparkSession, dir: String, k: Int = 5, nProbes: Int = 50): DataFrame = {
-    // zero-norm drop + single-file-corpus guard: the same shared
-    // semantics and plan shape as [[bruteTopK]] (a NaN cosine would
-    // rank first in every vote window; the IVF twin excludes zero-norm
-    // via the index, and the two must agree) — mirrored in the oracle
-    val e = Tables.load(spark, dir, "embeddings")
-      .repartition(col("vec_id"))
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(norm2("emb_d")))
-      .filter(col("nrm") > 0.0)
-    val probes = e.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("query_id"), col("emb_d").as("emb_q"),
-        col("nrm").as("nq"), col("label").as("true_label"))
-    val train = e.filter(col("vec_id") >= nProbes)
-      .select(col("vec_id").as("neighbor_id"), col("emb_d").as("emb_c"),
-        col("nrm").as("nc"), col("label").as("nbr_label"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    val votes = probes.crossJoin(train)
-      .withColumn("cos_raw", dot("emb_q", "emb_c") / (col("nq") * col("nc")))
-      .withColumn("rnk", row_number().over(wTop))
-      .filter(col("rnk") <= k)
+    val votes = topByCos(labeledCosines(spark, dir, nProbes), k)
       .groupBy("query_id", "true_label", "nbr_label")
       .agg(count(lit(1)).as("n_votes"))
     val wVote = Window.partitionBy("query_id")
@@ -723,6 +684,32 @@ object Similarity {
         col("true_label"),
         (col("nbr_label") === col("true_label")).cast("int").as("correct"))
   }
+
+  /** The exact labeled candidate stage [[knnClassify]] and
+    * [[hardNegatives]] share: every held-out probe (vec_id < nProbes)
+    * against every train vector (vec_id >= nProbes), both labels
+    * attached, exact cosine dot/(nq·nc). Zero-norm drop + spread corpus,
+    * as in [[bruteTopK]]: a NaN cosine would rank first in every window,
+    * and the IVF twins exclude zero-norm via the index — the two must
+    * agree. Mirrored in the oracles. */
+  private def labeledCosines(spark: SparkSession, dir: String, nProbes: Int): DataFrame = {
+    val e = withNorms(corpus(spark, dir, spread = true))
+    val probes = e.filter(col("vec_id") < nProbes)
+      .select(col("vec_id").as("query_id"), col("emb_d").as("emb_q"),
+        col("nrm").as("nq"), col("label").as("true_label"))
+    val train = e.filter(col("vec_id") >= nProbes)
+      .select(col("vec_id").as("neighbor_id"), col("emb_d").as("emb_c"),
+        col("nrm").as("nc"), col("label").as("nbr_label"))
+    probes.crossJoin(train)
+      .withColumn("cos_raw", dot("emb_q", "emb_c") / (col("nq") * col("nc")))
+  }
+
+  /** THE index probe set: the inverted-list rows with vec_id below
+    * `nProbes`, as `(query_id, unit_q)` — every single- and two-level
+    * search, PQ serve and scanned-fraction measurement probes with it. */
+  private def indexProbes(lists: DataFrame, nProbes: Int): DataFrame =
+    lists.filter(col("neighbor_id") < nProbes)
+      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
 
   /** IVF probe-list selection, shared VERBATIM by every IVF consumer
     * ([[ivfTopK]], [[knnClassifyIvf]], [[hardNegativesIvf]]) so the
@@ -766,24 +753,14 @@ object Similarity {
       nprobe: Int = 0,
       trainFraction: Double = 0.0,
       trainIters: Int = 5): DataFrame = {
-    val (rl, rp) =
-      resolveGeometry(spark, dir, nlist, nprobe, trainFraction, trainIters)
-    val tf = resolveTrainFraction(spark, dir, trainFraction, rl)
-    val idx = ivfIndex(spark, dir, rl, tf, trainIters)
-    val lists = idx.lists
-    val centroids = idx.centroids
+    val (idx, rp) =
+      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
     val labels = Tables.load(spark, dir, "embeddings").select("vec_id", "label")
-    val probes = lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
-    val probeLists = selectProbeLists(probes, centroids, rp)
+    val probeLists = selectProbeLists(indexProbes(idx.lists, nProbes), idx.centroids, rp)
     // candidate stage: selected inverted lists only, train vectors only
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    val topk = probeLists
-      .join(lists.filter(col("neighbor_id") >= nProbes), "list_id")
-      .withColumn("cos_raw", dot("unit_q", "unit_c"))
-      .withColumn("rnk", row_number().over(wTop))
-      .filter(col("rnk") <= k)
+    val topk = topByCos(probeLists
+        .join(idx.lists.filter(col("neighbor_id") >= nProbes), "list_id")
+        .withColumn("cos_raw", dot("unit_q", "unit_c")), k)
       .select("query_id", "neighbor_id")
     // labels for the tiny frames only: nProbes×k candidates + nProbes queries
     val votes = topk
@@ -840,11 +817,7 @@ object Similarity {
       .orderBy(col("tf").desc, col("doc_id").asc).limit(depth)
       .withColumn("rk_kw", row_number().over(wKw))
       .select(col("doc_id"), col("rk_kw"))
-    val e = Tables.load(spark, dir, "embeddings")
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(norm2("emb_d")))
-      // zero-norm drop (shared cosine semantics; mirrored in the oracle)
-      .filter(col("nrm") > 0.0)
+    val e = withNorms(corpus(spark, dir))
     val probeVec = e.filter(col("vec_id") === probeId)
       .select(col("emb_d").as("emb_q"), col("nrm").as("nq"))
     val wVec = Window.orderBy(col("cos_raw").desc, col("doc_id").asc)
@@ -866,29 +839,6 @@ object Similarity {
         round(col("rrf_raw"), 6).as("rrf_score"))
   }
 
-  private final case class IvfIndex(lists: DataFrame, centroids: DataFrame)
-
-  private val ivfMemo = new graft.SessionMemo[IvfIndex]()
-
-  /** Build (or fetch) the IVF index for a corpus dir — quantizer training
-    * + inverted-list assignment happen ONCE per (session, dir), exactly
-    * as a real ANN index is built once and queried many times; only the
-    * per-probe search below is per-query work. The materialized lists are
-    * linear in the corpus (id, unit vector, list id). Session-scoping and
-    * lock-discipline per [[graft.SessionMemo]]. */
-  private def ivfIndex(
-      spark: SparkSession, dir: String, nlist: Int,
-      trainFraction: Double, trainIters: Int): IvfIndex =
-    // repartition: the single-file-corpus guard (see [[normalized]]) —
-    // without it the whole build AND every list-scan join downstream
-    // inherit the scan's single partition on a small staged corpus
-    ivfIndexOver(spark,
-      Tables.load(spark, dir, "embeddings")
-        .repartition(col("vec_id"))
-        .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .select(col("vec_id"), col("emb_d")),
-      dir, nlist, trainFraction, trainIters)
-
   /** Quantizer training seed. Round-16 finding, recorded so nobody
     * re-tries the obvious dials: quantizer DRAWS move recall@5 by
     * ±0.04-0.08 at the staged corpora, but neither seed restarts
@@ -904,21 +854,32 @@ object Similarity {
   /** Deterministic content-based training sample: keep a row iff the
     * Knuth-style hash of its id lands under fraction·2²⁰ — membership is
     * a pure function of (vec_id, fraction), immune to partition/fetch
-    * order (see the ivfIndexOver body comment). fraction ≥ 1 keeps
+    * order (see the ivfIndex body comment). fraction ≥ 1 keeps
     * everything without evaluating the hash. */
   private def trainSampleOf(vecs: DataFrame, fraction: Double): DataFrame =
     if (fraction >= 1.0) vecs
     else vecs.filter(
       pmod(xxhash64(col("vec_id")), lit(1048576L)) < lit((fraction * 1048576.0).toLong))
 
-  /** [[ivfIndex]] over an arbitrary `(vec_id, emb_d)` corpus frame;
-    * `memoKey` must identify the corpus uniquely within the session. */
-  private def ivfIndexOver(
-      spark: SparkSession, corpus: DataFrame, memoKey: String, nlist: Int,
+  private final case class IvfIndex(lists: DataFrame, centroids: DataFrame, nlist: Int)
+
+  private val ivfMemo = new graft.SessionMemo[IvfIndex]()
+
+  /** Build (or fetch) the IVF index for a corpus dir — quantizer training
+    * + inverted-list assignment happen ONCE per (session, dir), exactly
+    * as a real ANN index is built once and queried many times; only the
+    * per-probe search below is per-query work. The materialized lists are
+    * linear in the corpus (id, unit vector, list id). Session-scoping and
+    * lock-discipline per [[graft.SessionMemo]]. The build reads the
+    * spread corpus ([[normalized]]): without the exchange the whole
+    * build AND every list-scan join downstream inherit the scan's single
+    * partition on a small staged corpus. */
+  private def ivfIndex(
+      spark: SparkSession, dir: String, nlist: Int,
       trainFraction: Double, trainIters: Int): IvfIndex =
     ivfMemo.getOrCompute(spark,
-        s"$memoKey|$nlist|$trainFraction|$trainIters") {
-      val base = normalizedOf(corpus).cache()
+        s"$dir|$nlist|$trainFraction|$trainIters") {
+      val base = normalized(spark, dir).cache()
       try {
         val vecs = base.withColumn("features", array_to_vector(col("unit")))
         // Train the coarse quantizer on a seeded sample with few
@@ -945,8 +906,7 @@ object Similarity {
         // runs of the same build could train visibly different quantizers
         // (measured at the 200k corpus: recall@5 0.96 vs 0.86 across two
         // layouts of the identical sample).
-        val sampleRows = (trainFraction *
-          corpusCountOver(spark, corpus, memoKey)).toLong
+        val sampleRows = (trainFraction * corpusCount(spark, dir)).toLong
         val fitWidth = math.min(32L, math.max(4L, sampleRows / 8192L)).toInt
         val trainSample = trainSampleOf(vecs, trainFraction)
           .repartition(fitWidth, col("vec_id"))
@@ -970,7 +930,7 @@ object Similarity {
         val centroids = spark.createDataFrame(
           km.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq)
           .toDF("list_id", "centroid")
-        IvfIndex(lists, centroids)
+        IvfIndex(lists, centroids, nlist)
       } finally base.unpersist(blocking = false)
     }
 
@@ -979,25 +939,25 @@ object Similarity {
   private val ivf2Memo = new graft.SessionMemo[Ivf2Index]()
 
   /** Build (or fetch) the TWO-LEVEL residual IVF index (see
-    * [[autoSearchCells]]): level-1 KMeans as in [[ivfIndexOver]], then a
+    * [[autoSearchCells]]): level-1 KMeans as in [[ivfIndex]], then a
     * SHARED level-2 codebook trained on the residuals (unit − c1) —
     * cell id = l1·L2 + l2. Both centroid tables stay broadcast-sized
     * (l1 + l2 rows, never l1 × l2); the residual computation and
     * second assignment are one extra linear ingest pass. Memoized and
     * materialized like the single-level index. */
-  private def ivf2IndexOver(
-      spark: SparkSession, corpus: DataFrame, memoKey: String,
+  private def ivf2Index(
+      spark: SparkSession, dir: String,
       l1: Int, l2: Int, trainFraction: Double, trainIters: Int): Ivf2Index =
     ivf2Memo.getOrCompute(spark,
-        s"$memoKey|2L|$l1|$l2|$trainFraction|$trainIters") {
+        s"$dir|2L|$l1|$l2|$trainFraction|$trainIters") {
       require(l2 >= 2, s"ivf2Index: l2=$l2 — use the single-level index below 2")
-      val base = normalizedOf(corpus).cache()
+      val base = normalized(spark, dir).cache()
       try {
         val vecs = base.withColumn("features", array_to_vector(col("unit")))
         // same content-based sample + sample-scaled width as the
         // single-level build — the fixed coalesce(4) would serialize the
         // l1=65536 fit at exactly the scale this path activates
-        val n = corpusCountOver(spark, corpus, memoKey)
+        val n = corpusCount(spark, dir)
         def fitWidth(fraction: Double): Int =
           math.min(32L, math.max(4L, (fraction * n).toLong / 8192L)).toInt
         // canonical fit layout — same rationale as the single-level build
@@ -1051,8 +1011,7 @@ object Similarity {
     * ‖q − c1 − c2‖² = ‖c1‖² + ‖c2‖² + 2·c1·c2 − 2·(q·c1 + q·c2)
     * (every term computed on broadcast-sized frames — the l1 × l2
     * combined table never materializes), keep the top `nprobe` CELLS,
-    * and scan exactly those inverted lists with the same cosine top-k
-    * tail as [[ivfSearch]]. */
+    * and [[ivfSearch]] exactly those inverted lists. */
   def ivfTopKTwoLevel(
       spark: SparkSession,
       dir: String,
@@ -1065,18 +1024,8 @@ object Similarity {
       trainIters: Int = 5): DataFrame = {
     val (idx, rl1r, rl2, rp) =
       ivf2Resolve(spark, dir, l1, l2, nprobe, trainFraction, trainIters)
-    val probes = idx.lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
-    val cellsSel = ivf2SelectCells(idx, probes, rl1r, rl2, rp)
-    // the same cosine top-k tail as ivfSearch
-    val w = Window.partitionBy("query_id").orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    cellsSel.join(idx.lists, "list_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_raw", dot("unit_q", "unit_c"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cos_raw"), 6).as("cos"))
+    ivfSearch(ivf2SelectCells(idx, indexProbes(idx.lists, nProbes), rl1r, rl2, rp),
+      idx.lists, k)
   }
 
   /** The two-level route's auto probe budget — the fixed 6%-of-cells
@@ -1105,15 +1054,8 @@ object Similarity {
     val cells = rl1.toLong * rl2
     val rp = if (nprobe > 0) nprobe else ivf2AutoNprobe(cells)
     require(rp <= cells, s"ivfTopKTwoLevel: nprobe=$rp exceeds cells=$cells")
-    val tf = if (trainFraction > 0) trainFraction
-      else math.min(1.0, 32.0 * rl1 / math.max(n, 1L))
-    val idx = ivf2IndexOver(spark,
-      Tables.load(spark, dir, "embeddings")
-        .repartition(col("vec_id"))
-        .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .select(col("vec_id"), col("emb_d")),
-      dir, rl1, rl2, tf, trainIters)
-    (idx, rl1, rl2, rp)
+    val tf = if (trainFraction > 0) trainFraction else autoTrainFraction(rl1, n)
+    (ivf2Index(spark, dir, rl1, rl2, tf, trainIters), rl1, rl2, rp)
   }
 
   /** The two-step probe-cell cut of the two-level search: oversampled
@@ -1165,22 +1107,10 @@ object Similarity {
       trainFraction: Double = 0.0, trainIters: Int = 5): Double = {
     val (idx, rl1r, rl2, rp) =
       ivf2Resolve(spark, dir, l1, l2, nprobe, trainFraction, trainIters)
-    val probes = idx.lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
-      .localCheckpoint(true)
-    val nP = probes.count()
-    require(nP > 0, s"ivf2ScannedFraction: empty probe set for $dir")
-    // candidate rows ACTUALLY evaluated — the same join the serve path
-    // runs, own row excluded (round-17 review: the earlier list-size sum
-    // counted each probe's own row in the numerator while the
-    // denominator excluded it, contradicting the doc; ~2e-6 absolute at
-    // 5M, but the stated exclusion should be implemented, not claimed)
-    val evaluated = ivf2SelectCells(idx, probes, rl1r, rl2, rp)
-      .join(idx.lists.select("list_id", "neighbor_id"), "list_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .count()
-    val idxRows = idx.lists.count()
-    val frac = evaluated.toDouble / (nP.toDouble * math.max(1L, idxRows - 1))
+    val probes = indexProbes(idx.lists, nProbes).localCheckpoint(true)
+    val frac = scannedFraction(probes,
+      ivf2SelectCells(idx, probes, rl1r, rl2, rp), idx.lists,
+      s"ivf2ScannedFraction($dir)")
     // same served-vs-calibrated divergence surface as the single-level
     // twin: the two-level auto rp is the fixed 6%-of-cells rule, so any
     // measured fraction past 0.105 under auto geometry is a dense-cell
@@ -1210,14 +1140,25 @@ object Similarity {
     * SCALEBENCH seed sweeps, productized as a library call. */
   def recallCanary(spark: SparkSession, dir: String,
       k: Int = 5, nProbes: Int = 10): Double = {
-    val brute = bruteTopK(spark, dir, k, nProbes)
-      .select("query_id", "neighbor_id").localCheckpoint(true)
-    val denom = brute.count().toDouble
-    require(denom > 0, s"recallCanary($dir): brute-force top-$k is empty " +
-      "(no probe vectors below the probe-id cutoff, or an empty corpus)")
+    val (brute, denom) = bruteReference(spark, dir, k, nProbes, "recallCanary")
     val served = ivfTopK(spark, dir, k, nProbes)
       .select("query_id", "neighbor_id")
     brute.join(served, Seq("query_id", "neighbor_id")).count() / denom
+  }
+
+  /** The exact reference the recall family measures against: the
+    * [[bruteTopK]] `(query_id, neighbor_id)` pairs over the probe set,
+    * checkpointed (every rung and audit join re-reads them), and their
+    * count — an empty reference fails loudly, naming `what`, instead of
+    * dividing by zero or auditing nothing. */
+  private def bruteReference(spark: SparkSession, dir: String,
+      k: Int, nProbes: Int, what: String): (DataFrame, Double) = {
+    val brute = bruteTopK(spark, dir, k, nProbes)
+      .select("query_id", "neighbor_id").localCheckpoint(true)
+    val denom = brute.count().toDouble
+    require(denom > 0, s"$what($dir): brute-force top-$k is empty " +
+      "(no probe vectors below the probe-id cutoff, or an empty corpus)")
+    (brute, denom)
   }
 
   /** One rung of the promotion-gate escalation ladder: the probe budget
@@ -1253,11 +1194,7 @@ object Similarity {
       floor: Double = 0.95, maxSteps: Int = 4,
       startNprobe: Int = 0,
       onStep: CanaryStep => Unit = _ => ()): Seq[CanaryStep] = {
-    val brute = bruteTopK(spark, dir, k, nProbes)
-      .select("query_id", "neighbor_id").localCheckpoint(true)
-    val denom = brute.count().toDouble
-    require(denom > 0, s"canaryEscalate($dir): brute-force top-$k is empty " +
-      "(no probe vectors below the probe-id cutoff, or an empty corpus)")
+    val (brute, denom) = bruteReference(spark, dir, k, nProbes, "canaryEscalate")
     val n = corpusCount(spark, dir)
     val twoLevel = autoSearchCells(n)._2 > 1
     // total budget of the auto index (cells / lists): the ladder clamps
@@ -1318,7 +1255,7 @@ object Similarity {
       spark: SparkSession, dir: String,
       saved: Boolean = false, k: Int = 5, nProbes: Int = 10,
       hitsFloor: Int = 3): DataFrame =
-    recallBoundedOver(spark, dir,
+    recallAudit(spark, dir,
       if (saved) ivfTopKSaved(spark, dir, k, nProbes)
       else ivfTopK(spark, dir, k, nProbes),
       k, nProbes, hitsFloor)
@@ -1332,17 +1269,16 @@ object Similarity {
   def pqRecallBounded(
       spark: SparkSession, dir: String,
       k: Int = 5, nProbes: Int = 10, hitsFloor: Int = 3): DataFrame =
-    recallBoundedOver(spark, dir, pqTopK(spark, dir, k, nProbes),
+    recallAudit(spark, dir, pqTopK(spark, dir, k, nProbes),
       k, nProbes, hitsFloor)
 
   /** The shared audit join of the bounded-recall family: exact top-k
     * cardinality per probe + hits-floor boolean over whatever serve
     * frame the caller dispatches. */
-  private def recallBoundedOver(
+  private def recallAudit(
       spark: SparkSession, dir: String, servedDf: DataFrame,
       k: Int, nProbes: Int, hitsFloor: Int): DataFrame = {
-    val brute = bruteTopK(spark, dir, k, nProbes)
-      .select("query_id", "neighbor_id")
+    val (brute, _) = bruteReference(spark, dir, k, nProbes, "bounded recall audit")
     val served = servedDf.select("query_id", "neighbor_id")
     val exact = brute.groupBy("query_id").agg(count(lit(1)).as("k_exact"))
     val hits = brute.join(served, Seq("query_id", "neighbor_id"))
@@ -1400,10 +1336,12 @@ object Similarity {
   }
 
   /** IVF-Flat ANN: nlist-way KMeans coarse quantizer, nprobe-list search.
-    * Geometry defaults to the recall-AND-fraction-calibrated
-    * [[autoSearchNlist]]/[[autoNprobe]] rules (nlist ≈ 16√n as a power of two,
-    * nprobe ≈ 7.5% of lists with a small-corpus candidate floor, a
-    * per-centroid-sample training fraction); pass explicit values to
+    * Geometry defaults to the recall-AND-fraction-calibrated rules
+    * ([[resolveGeometry]]): nlist = the power of two at or above
+    * min(64√n, n/4) ([[autoSearchNlist]]), nprobe = the largest count
+    * whose MEASURED scanned fraction stays ≤ 9.8%, found by bisection
+    * ([[autoNprobeMeasured]]) and floored by [[candidateFloor]], and a
+    * per-centroid-sample training fraction; pass explicit values to
     * pin it. Deterministic under the pinned seed; rows-only check
     * (approximate results are not SQL-expressible), recall floors in
     * `SimilaritySpec` + recall AND scanned fraction measured at 10× in
@@ -1424,32 +1362,22 @@ object Similarity {
     if (nlist == 0 && autoSearchCells(corpusCount(spark, dir))._2 > 1)
       return ivfTopKTwoLevel(spark, dir, k, nProbes,
         nprobe = nprobe, trainFraction = trainFraction, trainIters = trainIters)
-    val (rl, rp) =
-      resolveGeometry(spark, dir, nlist, nprobe, trainFraction, trainIters)
-    val tf = resolveTrainFraction(spark, dir, trainFraction, rl)
-    val idx = ivfIndex(spark, dir, rl, tf, trainIters)
-    ivfSearch(idx.lists, idx.centroids, k, nProbes, rp)
+    val (idx, rp) =
+      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
+    ivfSearch(selectProbeLists(indexProbes(idx.lists, nProbes), idx.centroids, rp),
+      idx.lists, k)
   }
 
-  /** The nprobe-list search over an IVF index, shared by the in-session
-    * ([[ivfTopK]]) and persisted ([[ivfTopKSaved]]) paths — the serving
-    * logic must not depend on where the index frames came from. */
-  private def ivfSearch(
-      lists: DataFrame, centroids: DataFrame,
-      k: Int, nProbes: Int, nprobe: Int): DataFrame = {
-    val probes = lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
-    val probeLists = selectProbeLists(probes, centroids, nprobe)
-    // Scan only the selected inverted lists.
-    val w = Window.partitionBy("query_id").orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    probeLists.join(lists, "list_id")
+  /** The inverted-list search every IVF top-k shares — in-session
+    * ([[ivfTopK]]), persisted ([[ivfTopKSaved]]) and two-level
+    * ([[ivfTopKTwoLevel]]): scan only the `(query_id, unit_q, list_id)`
+    * cells the caller selected, own row excluded, and keep the cosine
+    * top-k. The serving logic must not depend on where the index frames
+    * came from or which quantizer picked the cells. */
+  private def ivfSearch(probeCells: DataFrame, lists: DataFrame, k: Int): DataFrame =
+    cosTopK(probeCells.join(lists, "list_id")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_raw", dot("unit_q", "unit_c"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cos_raw"), 6).as("cos"))
-  }
+      .withColumn("cos_raw", dot("unit_q", "unit_c")), k)
 
   /** IVF INDEX PERSISTENCE — the build-once/serve-forever lifecycle: the
     * memoized index is written as two parquet tables (the inverted
@@ -1476,16 +1404,14 @@ object Similarity {
       nProbes: Int = 10,
       nlist: Int = 0,
       nprobe: Int = 0): DataFrame = {
-    val (rl, rp) = resolveGeometry(spark, dir, nlist, nprobe)
+    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe, 0.0, 5)
     // SAVE ONCE per (session, corpus, geometry) — the write is ingest
     // work, like the build itself: re-saving on every serve call paid a
     // full repartition + nlist-directory partitioned write per query
     // (measured 4× the whole query once the auto geometry raised nlist
     // to 512 at sf0.1). Every call still READS the persisted tables from
     // disk, so the cold-serve path stays the thing measured.
-    val out = savedIvfMemo.getOrCompute(spark, s"$dir|$rl") {
-      val idx = ivfIndex(spark, dir, rl,
-        resolveTrainFraction(spark, dir, 0.0, rl), 5)
+    val out = savedIvfMemo.getOrCompute(spark, s"$dir|${idx.nlist}") {
       val o = Scale.scratchDir("graft_ivf")
       // ADAPTIVE layout (round 15): directory-per-list only when lists
       // are file-sized. The finer auto geometry (nlist ≈ 16√n) makes
@@ -1499,7 +1425,7 @@ object Similarity {
       // partitioned layout engages and a probe's nprobe lists map to
       // their own directories — the access-pattern-mirroring story,
       // applied only where it is true.
-      val avgListRows = corpusCount(spark, dir) / math.max(rl, 1)
+      val avgListRows = corpusCount(spark, dir) / math.max(idx.nlist, 1)
       if (avgListRows >= 256)
         idx.lists.repartition(col("list_id")).write.mode("overwrite")
           .partitionBy("list_id").parquet(s"$o/lists")
@@ -1509,36 +1435,33 @@ object Similarity {
       idx.centroids.write.mode("overwrite").parquet(s"$o/centroids")
       o
     }
+    val lists = spark.read.parquet(s"$out/lists")
     ivfSearch(
-      spark.read.parquet(s"$out/lists"),
-      spark.read.parquet(s"$out/centroids"),
-      k, nProbes, rp)
+      selectProbeLists(indexProbes(lists, nProbes), spark.read.parquet(s"$out/centroids"), rp),
+      lists, k)
   }
   private val savedIvfMemo = new graft.SessionMemo[String]()
 
-  /** Shared measurement core for the two cost-model fractions below:
-    * (probe count, index rows, candidate rows actually evaluated).
-    * Candidates are counted over the SAME join the search runs —
-    * selected inverted lists, own row excluded — so the numerator is
-    * the number of distance evaluations, not a list-size approximation;
-    * the index row count (zero-norm rows never enter the index) is the
+  /** The measurement both scanned fractions ([[ivfScannedFraction]],
+    * [[ivf2ScannedFraction]]) share: distance evaluations over the
+    * selected `cells` ÷ probes × (index rows − 1). Candidates are counted
+    * over the SAME join the search runs — selected inverted lists, own
+    * row excluded in numerator AND denominator — so the numerator is the
+    * number of distance evaluations, not a list-size approximation; the
+    * index row count (zero-norm rows never enter the index) is the
     * brute-force denominator, not the raw table count (round-16 ADVICE:
     * the raw-count denominator was biased by zero-norm rows and the
     * discarded self-match). */
-  private def candidateStats(
-      spark: SparkSession, dir: String, nProbes: Int,
-      rl: Int, rp: Int, tf: Double, trainIters: Int): (Long, Long, Long) = {
-    val idx = ivfIndex(spark, dir, rl, tf, trainIters)
-    val probes = idx.lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
+  private def scannedFraction(
+      probes: DataFrame, cells: DataFrame, lists: DataFrame, what: String): Double = {
     val nP = probes.count()
-    require(nP > 0, s"candidateStats($dir): no probe vectors with vec_id < $nProbes")
-    val idxRows = idx.lists.count()
-    val evaluated = selectProbeLists(probes, idx.centroids, rp)
-      .join(idx.lists.select("list_id", "neighbor_id"), "list_id")
+    require(nP > 0, s"$what: no probe vectors below the probe-id cutoff")
+    val evaluated = cells
+      .join(lists.select("list_id", "neighbor_id"), "list_id")
       .filter(col("query_id") =!= col("neighbor_id"))
       .count()
-    (nP, idxRows, evaluated)
+    val idxRows = lists.count()
+    evaluated.toDouble / (nP.toDouble * math.max(1L, idxRows - 1))
   }
 
   /** MEASURED scanned fraction of the IVF search at the given (or auto)
@@ -1559,11 +1482,12 @@ object Similarity {
       nprobe: Int = 0,
       trainFraction: Double = 0.0,
       trainIters: Int = 5): Double = {
-    val (rl, rp) =
-      resolveGeometry(spark, dir, nlist, nprobe, trainFraction, trainIters)
-    val tf = resolveTrainFraction(spark, dir, trainFraction, rl)
-    val (nP, idxRows, evaluated) = candidateStats(spark, dir, nProbes, rl, rp, tf, trainIters)
-    val frac = evaluated.toDouble / (nP.toDouble * math.max(1L, idxRows - 1))
+    val (idx, rp) =
+      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
+    val probes = indexProbes(idx.lists, nProbes)
+    val frac = scannedFraction(probes,
+      selectProbeLists(probes, idx.centroids, rp), idx.lists,
+      s"ivfScannedFraction($dir)")
     // round-18 (r17 ADVICE): the bisection calibrates on content-hash
     // probes while THIS number measures the id<10 evaluation probes —
     // when the two diverge past the calibrated target, say so on stderr
@@ -1571,17 +1495,17 @@ object Similarity {
     // bisection governed rp: on small corpora the 512-candidate floor
     // deliberately overshoots the target (ANN on 500 vectors SHOULD
     // degenerate toward a full scan), which is design, not divergence.
-    if (nlist == 0 && nprobe == 0) {
-      val floor = math.max(6,
-        ((512L * rl + math.max(idxRows, 1L) - 1) / math.max(idxRows, 1L)).toInt)
-      if (rp > floor && !withinServedBudget(frac))
-        System.err.println(String.format(java.util.Locale.ROOT,
-          "[graft] ivfScannedFraction(%s): served fraction %.3f exceeds the " +
-            "calibrated 0.098 target + divergence allowance (0.105) — the " +
-            "content-hash calibration probes and the id<10 served probes " +
-            "disagree on this corpus (measuredNprobeOf's HONEST LIMIT note)",
-          dir, Double.box(frac)))
-    }
+    // The floor is the one the bisection applied: over the RAW table
+    // count, never the post-zero-norm-drop index count.
+    if (nlist == 0 && nprobe == 0 &&
+        rp > candidateFloor(idx.nlist, corpusCount(spark, dir)) &&
+        !withinServedBudget(frac))
+      System.err.println(String.format(java.util.Locale.ROOT,
+        "[graft] ivfScannedFraction(%s): served fraction %.3f exceeds the " +
+          "calibrated 0.098 target + divergence allowance (0.105) — the " +
+          "content-hash calibration probes and the id<10 served probes " +
+          "disagree on this corpus (measuredNprobeOf's HONEST LIMIT note)",
+        dir, Double.box(frac)))
     frac
   }
 
@@ -1635,7 +1559,7 @@ object Similarity {
       // dim / nSub truncates: a non-divisor silently excludes the trailing
       // dims from training AND scoring (recall decays with no error), and
       // nSub > dim degenerates to subDim = 0 where every ADC distance is
-      // 0.0 — the lshEmbeddingPairsOver band-width contract, enforced
+      // 0.0 — the lshEmbeddingPairs band-width contract, enforced
       // here. dim itself is DATA-DERIVED (round 15): a 768-dim corpus
       // splits 96-dim subspaces under the same rule, no code change.
       val dim = embeddingDim(spark, dir)
@@ -1750,11 +1674,9 @@ object Similarity {
       return pqTopKTwoLevel(spark, dir, k, nProbes, nSub, nCodes, rerank,
         nprobe = nprobe)
     val subDim = dim / rs
-    val (rl, rp) = resolveGeometry(spark, dir, nlist, nprobe)
+    val (ivf, rp) = servedIvf(spark, dir, nlist, nprobe, 0.0, 5)
     val rr = if (rerank > 0) rerank else autoRerank(k)
     val pq = pqIndex(spark, dir, rs, nCodes)
-    val ivf = ivfIndex(spark, dir, rl,
-      resolveTrainFraction(spark, dir, 0.0, rl), 5)
     // IVFADC (round 15): the ADC scan is GATED by the coarse quantizer —
     // probes rank the broadcast centroids and score codes only inside
     // their nprobe inverted lists, so per-probe ADC work is
@@ -1766,13 +1688,12 @@ object Similarity {
     // doctrine: paying it per serve call would put a corpus-wide join
     // back into the path everything above is pruning.
     val codesListed = pqListedMemo.getOrCompute(spark,
-        s"$dir|$rs|$nCodes|$rl") {
+        s"$dir|$rs|$nCodes|${ivf.nlist}") {
       pq.codes
         .join(ivf.lists.select(col("neighbor_id"), col("list_id")), "neighbor_id")
         .localCheckpoint(true)
     }
-    val probes = ivf.lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
+    val probes = indexProbes(ivf.lists, nProbes)
     val probeCells = selectProbeLists(probes, ivf.centroids, rp)
     pqAdcServe(probes, probeCells, codesListed,
       ivf.lists.select(col("neighbor_id"), col("unit_c")),
@@ -1817,8 +1738,7 @@ object Similarity {
         .join(idx.lists.select(col("neighbor_id"), col("list_id")), "neighbor_id")
         .localCheckpoint(true)
     }
-    val probes = idx.lists.filter(col("neighbor_id") < nProbes)
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
+    val probes = indexProbes(idx.lists, nProbes)
     val cells = ivf2SelectCells(idx, probes, rl1, rl2, rp)
     pqAdcServe(probes, cells, codesListed,
       idx.lists.select(col("neighbor_id"), col("unit_c")),
@@ -1886,15 +1806,10 @@ object Similarity {
       .select("query_id", "neighbor_id")
     // Exact rerank of the finalists only — unit vectors fetched by id
     // from the inverted lists (rr rows per probe, never the corpus).
-    val w = Window.partitionBy("query_id").orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    finalists
+    cosTopK(finalists
       .join(probes, "query_id")
       .join(exact, "neighbor_id")
-      .withColumn("cos_raw", dot("unit_q", "unit_c"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cos_raw"), 6).as("cos"))
+      .withColumn("cos_raw", dot("unit_q", "unit_c")), k)
   }
 
   /** Default PQ subspace count — SUBSPACE WIDTH ≈ 4 dims (round 16):
@@ -1997,30 +1912,12 @@ object Similarity {
     * not what the oracle replays. The same holds for every
     * parameterized-with-defaults query (`bm25Rank` terms/k1/b,
     * `scrubBlocklist` blocklist, ...). */
-  def hardNegatives(spark: SparkSession, dir: String, nProbes: Int = 50): DataFrame = {
-    // zero-norm drop + single-file-corpus guard, as in [[knnClassify]]
-    val e = Tables.load(spark, dir, "embeddings")
-      .repartition(col("vec_id"))
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(norm2("emb_d")))
-      .filter(col("nrm") > 0.0)
-    val probes = e.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("query_id"), col("emb_d").as("emb_q"),
-        col("nrm").as("nq"), col("label").as("true_label"))
-    val train = e.filter(col("vec_id") >= nProbes)
-      .select(col("vec_id").as("neighbor_id"), col("emb_d").as("emb_c"),
-        col("nrm").as("nc"), col("label").as("nbr_label"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    probes.crossJoin(train)
-      .filter(col("nbr_label") =!= col("true_label"))
-      .withColumn("cos_raw", dot("emb_q", "emb_c") / (col("nq") * col("nc")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
+  def hardNegatives(spark: SparkSession, dir: String, nProbes: Int = 50): DataFrame =
+    topByCos(labeledCosines(spark, dir, nProbes)
+        .filter(col("nbr_label") =!= col("true_label")), 1)
       .select(col("query_id"), col("true_label"),
         col("neighbor_id"), col("nbr_label"),
         round(col("cos_raw"), 6).as("cos"))
-  }
 
   /** [[hardNegatives]] with the exact cross-join candidate stage swapped
     * for the memoized IVF inverted-list scan — the same swap
@@ -2041,28 +1938,19 @@ object Similarity {
       nprobe: Int = 0,
       trainFraction: Double = 0.0,
       trainIters: Int = 5): DataFrame = {
-    val (rl, rp) =
-      resolveGeometry(spark, dir, nlist, nprobe, trainFraction, trainIters)
-    val tf = resolveTrainFraction(spark, dir, trainFraction, rl)
-    val idx = ivfIndex(spark, dir, rl, tf, trainIters)
-    val lists = idx.lists
-    val centroids = idx.centroids
+    val (idx, rp) =
+      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
     val labels = Tables.load(spark, dir, "embeddings").select("vec_id", "label")
-    val probes = lists.filter(col("neighbor_id") < nProbes)
-      .join(labels, col("vec_id") === col("neighbor_id"))
-      .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"),
-        col("label").as("true_label"))
-    val probeLists = selectProbeLists(probes, centroids, rp)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    probeLists
-      .join(lists.filter(col("neighbor_id") >= nProbes), "list_id")
-      .join(labels.withColumnRenamed("vec_id", "neighbor_id")
-        .withColumnRenamed("label", "nbr_label"), Seq("neighbor_id"))
-      .filter(col("nbr_label") =!= col("true_label"))
-      .withColumn("cos_raw", dot("unit_q", "unit_c"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
+    val probes = indexProbes(idx.lists, nProbes)
+      .join(labels, col("vec_id") === col("query_id"))
+      .select(col("query_id"), col("unit_q"), col("label").as("true_label"))
+    val probeLists = selectProbeLists(probes, idx.centroids, rp)
+    topByCos(probeLists
+        .join(idx.lists.filter(col("neighbor_id") >= nProbes), "list_id")
+        .join(labels.withColumnRenamed("vec_id", "neighbor_id")
+          .withColumnRenamed("label", "nbr_label"), Seq("neighbor_id"))
+        .filter(col("nbr_label") =!= col("true_label"))
+        .withColumn("cos_raw", dot("unit_q", "unit_c")), 1)
       .select(col("query_id"), col("true_label"),
         col("neighbor_id"), col("nbr_label"),
         round(col("cos_raw"), 6).as("cos"))
@@ -2086,9 +1974,8 @@ object Similarity {
     * constant dimensions), so per-vector errors are bit-identical and
     * round to 6 dp. */
   def quantizationError(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-      .withColumn("emb", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-    val stats = e.select(posexplode(col("emb")).as(Seq("dim", "x")))
+    val e = corpus(spark, dir)
+    val stats = e.select(posexplode(col("emb_d")).as(Seq("dim", "x")))
       .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
       .agg(expr("array_sort(collect_list(struct(dim, mn, mx)))").as("s"))
       .select(expr("transform(s, p -> p.mn)").as("mns"),
@@ -2096,10 +1983,10 @@ object Similarity {
     e.crossJoin(broadcast(stats))
       .select(col("vec_id"), col("label"),
         round(sqrt(expr(
-          """aggregate(sequence(0, size(emb) - 1), CAST(0 AS DOUBLE), (acc, i) ->
+          """aggregate(sequence(0, size(emb_d) - 1), CAST(0 AS DOUBLE), (acc, i) ->
             |  acc + (CASE WHEN mxs[i] = mns[i] THEN CAST(0 AS DOUBLE) ELSE
-            |    (emb[i] - (mns[i] + ((least(floor(((emb[i] - mns[i]) / (mxs[i] - mns[i])) * 256.0), 255) + 0.5) * (mxs[i] - mns[i])) / 256.0)) *
-            |    (emb[i] - (mns[i] + ((least(floor(((emb[i] - mns[i]) / (mxs[i] - mns[i])) * 256.0), 255) + 0.5) * (mxs[i] - mns[i])) / 256.0))
+            |    (emb_d[i] - (mns[i] + ((least(floor(((emb_d[i] - mns[i]) / (mxs[i] - mns[i])) * 256.0), 255) + 0.5) * (mxs[i] - mns[i])) / 256.0)) *
+            |    (emb_d[i] - (mns[i] + ((least(floor(((emb_d[i] - mns[i]) / (mxs[i] - mns[i])) * 256.0), 255) + 0.5) * (mxs[i] - mns[i])) / 256.0))
             |  END))""".stripMargin)), 6).as("q_err"))
   }
 
@@ -2112,8 +1999,7 @@ object Similarity {
     * Float elements cast to double element-wise first, so the fold is
     * the same IEEE double sum in both engines. */
   def embeddingStats(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "embeddings")
-      .withColumn("emb_d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+    corpus(spark, dir)
       .withColumn("nrm", round(sqrt(norm2("emb_d")), 6))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),

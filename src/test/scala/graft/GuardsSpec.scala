@@ -130,6 +130,44 @@ class GuardsSpec extends SparkSpec {
     assert(!Similarity.withinServedBudget(0.106))
   }
 
+  test("candidate floor: ceil(512 * nlist / n), never under 6, over the raw table count") {
+    import Similarity.candidateFloor
+    assert(candidateFloor(16, 500L) == 17)       // 8192 / 500 = 16.4 -> 17
+    assert(candidateFloor(128, 8192L) == 8)      // exact division, no round-up
+    assert(candidateFloor(128, 8193L) == 8)      // 7.999 -> 8
+    assert(candidateFloor(16, 100000L) == 6)     // the budget term vanishes
+    assert(candidateFloor(1, 1L) == 512)
+    assert(candidateFloor(1, 0L) == 512)         // an empty count divides by 1
+    // zero-norm rows make the index (1364 rows) smaller than the table
+    // (1366): the floor the bisection applied is the table's 6, and an
+    // index-count recomputation would read 7 — so a bisection-chosen
+    // nprobe of 7 would wrongly count as floor-governed and silence the
+    // served-fraction divergence warning
+    assert(candidateFloor(16, 1366L) == 6)
+    assert(candidateFloor(16, 1364L) == 7)
+  }
+
+  test("Similarity keeps one loader, one ranking window and dir-keyed memos") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toSeq
+    def count(src: String, needle: String): Int =
+      java.util.regex.Pattern.quote(needle).r.findAllMatchIn(src).size
+    // the embeddings float -> double cast lives in Similarity.corpus only
+    val casts = sources
+      .map { case (f, src) => f -> count(src, "transform(embedding, x -> CAST(x AS DOUBLE))") }
+      .filter(_._2 > 0)
+    assert(casts == Seq("Similarity.scala" -> 1),
+      s"embeddings cast outside the one loader: $casts")
+    val sim = sources.collectFirst { case ("Similarity.scala", src) => src }.get
+    assert("""def \w+Over\(""".r.findFirstIn(sim).isEmpty,
+      "a frame-twin XOver operator is back in Similarity")
+    assert(!sim.contains("memoKey"), "a caller-supplied memo key is back in Similarity")
+    assert(count(sim, """orderBy(col("cos_raw").desc, col("neighbor_id").asc)""") == 1,
+      "the cosine top-k window must be declared once")
+  }
+
   test("Bench, Verify and Profile build one session with identical SQL conf") {
     // the three mains must plan alike: each takes its session from the
     // one factory and sets no SQL conf of its own afterwards

@@ -131,6 +131,26 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ivf == ivf2)
+    // the build depends on the corpus CONTENT, not its file layout: the
+    // same rows staged as one file and as seven files must serve the
+    // same top-k and measure the same bucket-pair survival. The auto
+    // geometry is near-exhaustive at fixture scale, so the starved
+    // 2-of-16-lists search is the comparison that sees the trained cells
+    val staged = Seq(1, 7).map { files =>
+      val tmp = java.nio.file.Files.createTempDirectory(s"layout$files").toString
+      graft.Tables.load(spark, sf, "embeddings").repartition(files)
+        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      val parts = new java.io.File(s"$tmp/embeddings.parquet").list()
+        .count(_.endsWith(".parquet"))
+      assert(parts == files, s"staged $parts files, wanted $files")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+      (rows(Similarity.ivfTopK(spark, tmp, 5, 10)),
+        rows(Similarity.ivfTopK(spark, tmp, 5, 10, nlist = 16, nprobe = 2)),
+        Similarity.bucketPairSurvival(spark, tmp, 0.4))
+    }
+    assert(staged(0)._1.nonEmpty)
+    assert(staged(0) == staged(1), "IVF build moved with the corpus file layout")
   }
 
   test("PQ recall@5 >= 0.9 vs brute force, and is deterministic") {
@@ -318,7 +338,7 @@ class SimilaritySpec extends SparkSpec {
     assert(pqRecall >= 0.8, s"PQ recall on 24-dim corpus = $pqRecall")
     // LSH planes must come out 24-wide; tight clusters → pairs exist and
     // every reported cosine clears the threshold
-    val lsh = Similarity.lshEmbeddingPairs(spark, tmp, threshold = 0.8).cache()
+    val lsh = Similarity.lshEmbeddingPairs(Similarity.corpus(spark, tmp), threshold = 0.8).cache()
     try {
       assert(lsh.count() > 0)
       assert(lsh.filter(col("cos") < 0.8).count() == 0)
@@ -334,9 +354,8 @@ class SimilaritySpec extends SparkSpec {
     // engine-wide convention (round 15): a zero vector has no direction;
     // its 0/0 = NaN cosine orders ABOVE every double in Spark and would
     // rank first in each descending top-k / pass every >= threshold
-    // filter. Every cosine operator must drop it — the index paths do it
-    // via normalizedOf, the exact paths via an explicit nrm > 0 filter,
-    // and the oracles mirror the drop.
+    // filter. Every cosine operator must drop it — all of them through the
+    // one withNorms step — and the oracles mirror the drop.
     val rnd = new scala.util.Random(7)
     val rows = (0 until 60).map { i =>
       val emb = if (i == 3 || i == 40) Seq.fill(16)(0.0f)
@@ -359,7 +378,7 @@ class SimilaritySpec extends SparkSpec {
     val hn = Similarity.hardNegatives(spark, tmp, 10)
     noZeroIds(hn, ("query_id", "neighbor_id"))
     assert(hn.filter(col("cos").isNaN).count() == 0)
-    val lsh = Similarity.lshEmbeddingPairs(spark, tmp, threshold = 0.2)
+    val lsh = Similarity.lshEmbeddingPairs(Similarity.corpus(spark, tmp), threshold = 0.2)
     noZeroIds(lsh, ("id_a", "id_b"))
     assert(lsh.filter(col("cos").isNaN).count() == 0)
     val exact = graft.operators.Dedup.embeddingPairs(spark, tmp, 0.2)
@@ -411,7 +430,7 @@ class SimilaritySpec extends SparkSpec {
   test("hyperplane-LSH near-dup pairs: full recall at sf0.001 vs exact") {
     val exact = Dedup.embeddingPairs(spark, sf, 0.4)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.lshEmbeddingPairs(spark, sf, 0.4)
+    val lsh = Similarity.lshEmbeddingPairs(Similarity.corpus(spark, sf), 0.4)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // LSH must never invent pairs, and should find most of the exact set
     assert(lsh.subsetOf(exact))
@@ -474,16 +493,19 @@ class SimilaritySpec extends SparkSpec {
       c <- 0 until 12; m <- 0 until 20
     } yield {
       val noise = Array.fill(64)(rnd.nextGaussian() * 0.02)
-      ((c * 20 + m).toLong, anchors(c).zip(noise).map { case (x, e) => x + e }.toSeq)
+      ((c * 20 + m).toLong,
+        anchors(c).zip(noise).map { case (x, e) => (x + e).toFloat }.toSeq, c)
     }
-    val corpus = spark.createDataFrame(rows).toDF("vec_id", "emb_d").cache()
+    val tmp = java.nio.file.Files.createTempDirectory("clustered").toString
+    spark.createDataFrame(rows).toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val corpus = Similarity.corpus(spark, tmp).cache()
     try {
-      val s = Similarity.bucketPairSurvivalOver(spark, corpus, "spec_clustered", 0.8, nlist = 12)
+      val s = Similarity.bucketPairSurvival(spark, tmp, 0.8, nlist = 12)
       assert(s <= 0.5, s"clustered-corpus survival = $s — gate failed to engage")
       def asSet(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pruned = asSet(Similarity.prunedEmbeddingPairsOver(
-        spark, corpus, "spec_clustered", 0.8, nlist = 12))
+      val pruned = asSet(Similarity.prunedEmbeddingPairs(spark, tmp, 0.8, nlist = 12))
       val withN = corpus.withColumn("nrm", sqrt(graft.functions.VecText.norm2("emb_d")))
       val a = withN.select(col("vec_id").as("id_a"), col("emb_d").as("ea"), col("nrm").as("na"))
       val b = withN.select(col("vec_id").as("id_b"), col("emb_d").as("eb"), col("nrm").as("nb"))
