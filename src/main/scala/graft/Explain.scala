@@ -13,11 +13,8 @@ object Explain {
     // times. Plan-evidence dumps can run at the bench's scale via
     // SPARK_GRAFT_SF_DIR (join-strategy size conditions are
     // data-dependent — a sf0.001 plan can broadcast where the sf0.1
-    // bench shuffles); GRAFT_PREFER_SMJ=true reproduces the
-    // sort-merge-preferring planner for before/after pairs.
+    // bench shuffles).
     val spark = GraftSession.local()
-    sys.env.get("GRAFT_PREFER_SMJ").foreach(
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", _))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

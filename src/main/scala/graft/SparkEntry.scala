@@ -762,7 +762,10 @@ object SparkEntry {
     // block/posting counts over string shingles (hash-collision-free at
     // corpus scale, same assumption as the jaccard oracles); the prefix
     // posting volume multiplies by a DOUBLE 0.2 so ceil sees the same
-    // IEEE product in both engines (15*0.2 > 3 in binary)
+    // IEEE product in both engines (a DECIMAL 0.2 would not). The
+    // product rounds to the exact decimal ceiling here: 15*0.2 is 3.0,
+    // and ceil(n*t) equals ceil of the exact n*t for every n < 3000 and
+    // t in {0.1, ..., 0.9}
     "q_blocking_cost" ->
       s"""WITH $shinglesCte,
          |p AS (SELECT lang, unnest(s) AS shingle FROM sh),

@@ -97,11 +97,70 @@ object Dedup {
         .localCheckpoint(true)
     }
 
-  /** MinHash LSH near-dup pairs: signature → band buckets → candidate
-    * pairs → exact-Jaccard verification at `threshold`.
-    *
-    * The band join is the scale path: candidates are only pairs sharing a
-    * (band_idx, band_hash) bucket — O(n·bands) shuffle, no cross join. */
+  // ---- the candidate rule and the verify tail -----------------------
+  // Every pair miner is block → candidate → exact verify; each step has
+  // one home here, so a new candidate filter goes in once for them all.
+
+  /** THE shingle postings: one `(cols…, shingle)` row per distinct
+    * shingle of each doc of a shingled frame ([[shingledOf]]). */
+  private def postings(docs: DataFrame, cols: String*): DataFrame =
+    docs.select(cols.map(col) :+ explode(col("sh")).as("shingle"): _*)
+
+  /** THE prefix length: a set of `sz` tokens keeping a ≥ `t` share of
+    * itself in its partner misses ≤ sz − ⌈t·sz⌉ of them, so its first
+    * sz − ⌈t·sz⌉ + 1 tokens in one global order must hit the partner. */
+  private def prefixLength(sz: Column, t: Double): Column = sz - ceil(sz * t) + 1
+
+  /** THE rarest-first prefix: each `entity`'s `postings` rows in one
+    * global order — ascending frequency of `token`, then the token —
+    * cut to the first `keep` (a per-row column); `postings`' columns. */
+  private def rarestFirstPrefix(
+      postings: DataFrame, entity: String, token: String, keep: Column): DataFrame = {
+    val dfreq = postings.groupBy(token).agg(count(lit(1)).as("dfreq"))
+    val w = Window.partitionBy(entity).orderBy(col("dfreq").asc, col(token).asc)
+    postings.join(dfreq, token)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= keep)
+      .select(postings.columns.map(col): _*)
+  }
+
+  /** One side of a pair join: `keys` as they are, `id` renamed `id_<s>`
+    * and every `carry` column suffixed `_<s>`. */
+  private def pairSide(df: DataFrame, s: String, id: String,
+      carry: Seq[String], keys: Seq[String] = Nil): DataFrame =
+    df.select(keys.map(col) ++
+      (col(id).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+
+  /** THE blocking self-join: rows of `blocked` sharing all `keys`, once
+    * per unordered pair (`id_a < id_b`) and where `prune` holds — once
+    * per shared key, so callers dedupe. */
+  private[graft] def blockingJoin(blocked: DataFrame, keys: Seq[String], id: String,
+      carry: Seq[String] = Nil, prune: Column = lit(true)): DataFrame =
+    pairSide(blocked, "a", id, carry, keys)
+      .join(pairSide(blocked, "b", id, carry, keys), keys)
+      .filter(col("id_a") < col("id_b") && prune)
+
+  /** Jaccard's size-ratio prune: J(A,B) ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|). */
+  private def sizeRatio(t: Double): Column =
+    col("sz_a") * t <= col("sz_b") && col("sz_b") * t <= col("sz_a")
+
+  /** Each candidate `(id_a, id_b)` with its payload `cols` fetched by
+    * `id` from `payloadA`/`payloadB`, once per unique candidate. */
+  private[graft] def withPayloads(cands: DataFrame, payloadA: DataFrame,
+      payloadB: DataFrame, id: String, cols: String*): DataFrame =
+    cands.join(pairSide(payloadA, "a", id, cols), "id_a")
+      .join(pairSide(payloadB, "b", id, cols), "id_b")
+
+  /** THE verify tail: `measure` scores each pair and pairs under
+    * `threshold` drop → `(id_a, id_b, name)`, unrounded. */
+  private[graft] def verified(pairs: DataFrame, name: String, threshold: Double)(
+      measure: Column): DataFrame =
+    pairs.withColumn(name, measure)
+      .filter(col(name) >= threshold)
+      .select("id_a", "id_b", name)
+
+  // ---- MinHash pairs -------------------------------------------------
+
   /** Thresholded near-dup PAIR GRAPHS, each built ONCE per (session,
     * dir, params) and shared by the standalone pair query and the
     * cross-method dashboard ([[dedupSummary]]) — the same
@@ -114,6 +173,11 @@ object Dedup {
     * memoized frames ([[graft.SessionMemo]] session scoping). */
   private val pairsMemo = new graft.SessionMemo[DataFrame]()
 
+  /** MinHash LSH near-dup pairs: signature → band buckets → candidate
+    * pairs → exact-Jaccard verification at `threshold`.
+    *
+    * The band join is the scale path: candidates are only pairs sharing a
+    * (band_idx, band_hash) bucket — O(n·bands) shuffle, no cross join. */
   def minhashPairs(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     pairsMemo.getOrCompute(spark, s"minhash|$dir|$threshold") {
       minhashPairsUncached(spark, dir, threshold)
@@ -142,21 +206,11 @@ object Dedup {
       .withColumn("band", explode(expr(s"array(${bandExprs.mkString(", ")})")))
       .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
     Tables.withCached(banded) {
-      val a = banded.as("a")
-      val b = banded.as("b")
-      val candidates = a.join(b,
-          col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      val cands = blockingJoin(banded, Seq("band_idx", "band_hash"), "doc_id")
+        .select("id_a", "id_b")
         .distinct()
-      val shA = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val shB = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      candidates
-        .join(shA, "id_a").join(shB, "id_b")
-        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+      verified(withPayloads(cands, sh, sh, "doc_id", "sh"), "jaccard", threshold)(
+        jaccard("sh_a", "sh_b"))
     }
   }
 
@@ -205,14 +259,9 @@ object Dedup {
     // reason as minhashPairs (each side otherwise re-runs the per-token
     // md5 + simhash vote over the whole corpus)
     Tables.withCached(banded) {
-      val a = banded.as("a")
-      val b = banded.as("b")
-      a.join(b,
-          col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+      blockingJoin(banded, Seq("band_idx", "band_val"), "doc_id", Seq("simhash"))
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming"))
         .distinct()
         .filter(col("hamming") <= maxHamming)
     }
@@ -220,7 +269,7 @@ object Dedup {
 
   // ---- n-gram Jaccard (blocked, oracle-checkable) --------------------
 
-  /** Blocked word-3-gram Jaccard via an INVERTED-INDEX join (PPJoin-style):
+  /** Blocked word-3-gram Jaccard via the FULL inverted-index join:
     * explode shingles, join postings on (lang, shingle), count common
     * shingles per pair, then jaccard = c / (|A| + |B| − c). Identical
     * results to the naive all-pairs intersect, but cost is
@@ -237,24 +286,13 @@ object Dedup {
     // exactly once per doc; size/explode read the materialized arrays and
     // the join key is already an 8-byte hash.
     val docs = docShinglesShared(spark, dir)
-    val postings = docs.select(col("lang"), col("doc_id"), col("sz"),
-      explode(col("sh")).as("shingle"))
-    val a = postings.select(col("lang"), col("shingle"),
-      col("doc_id").as("id_a"), col("sz").as("sz_a"))
-    val b = postings.select(col("lang"), col("shingle"),
-      col("doc_id").as("id_b"), col("sz").as("sz_b"))
-    // Size-ratio pruning: J(A,B) ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|), so
-    // pairs outside the ratio can be dropped BEFORE aggregation without
-    // changing the result set.
-    a.join(b, Seq("lang", "shingle"))
-      .filter(col("id_a") < col("id_b") &&
-        col("sz_a") * threshold <= col("sz_b") &&
-        col("sz_b") * threshold <= col("sz_a"))
+    // the size-ratio prune drops blocked pairs BEFORE the aggregation
+    val common = blockingJoin(postings(docs, "lang", "doc_id", "sz"),
+        Seq("lang", "shingle"), "doc_id", Seq("sz"), sizeRatio(threshold))
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard",
+    verified(common, "jaccard", threshold)(
         col("c").cast("double") / (col("sz_a") + col("sz_b") - col("c")))
-      .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
@@ -281,35 +319,19 @@ object Dedup {
 
   private def ngramJaccardPairsPrefixUncached(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val docs = docShinglesShared(spark, dir)
-    val postings = docs.select(col("lang"), col("doc_id"), col("sz"),
-      explode(col("sh")).as("shingle"))
-    val dfreq = postings.groupBy("shingle")
-      .agg(count(lit(1)).as("dfreq"))
-    val wDoc = Window.partitionBy("doc_id")
-      .orderBy(col("dfreq").asc, col("shingle").asc)
-    val prefix = postings.join(dfreq, "shingle")
-      .withColumn("rk", row_number().over(wDoc))
-      .filter(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
+    val prefix = rarestFirstPrefix(postings(docs, "lang", "doc_id", "sz"),
+        "doc_id", "shingle", prefixLength(col("sz"), threshold))
       .select("lang", "shingle", "doc_id", "sz")
     // the prefix frame feeds BOTH self-join sides — cached so the df
     // aggregation + per-doc ordering window run once, not per side
     // (the minhashPairs/simhashPairs band-frame rationale)
     Tables.withCached(prefix) {
-      val a = prefix.select(col("lang"), col("shingle"),
-        col("doc_id").as("id_a"), col("sz").as("sz_a"))
-      val b = prefix.select(col("lang"), col("shingle"),
-        col("doc_id").as("id_b"), col("sz").as("sz_b"))
-      val cands = a.join(b, Seq("lang", "shingle"))
-        .filter(col("id_a") < col("id_b") &&
-          col("sz_a") * threshold <= col("sz_b") &&
-          col("sz_b") * threshold <= col("sz_a"))
+      val cands = blockingJoin(prefix, Seq("lang", "shingle"), "doc_id", Seq("sz"),
+          sizeRatio(threshold))
         .select("id_a", "id_b")
         .distinct()
-      val shA = docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val shB = docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      cands.join(shA, "id_a").join(shB, "id_b")
-        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-        .filter(col("jaccard") >= threshold)
+      verified(withPayloads(cands, docs, docs, "doc_id", "sh"), "jaccard", threshold)(
+          jaccard("sh_a", "sh_b"))
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
     }
   }
@@ -325,7 +347,7 @@ object Dedup {
     *
     * Scale shape: the prefix-filtering theorem carries over
     * ASYMMETRICALLY. If C(A→B) ≥ t then A misses at most
-    * |A| − ⌈t·|A|⌉ shingles, so A's ⌈(1−t)·|A|⌉ + 1 RAREST shingles
+    * |A| − ⌈t·|A|⌉ shingles, so A's |A| − ⌈t·|A|⌉ + 1 RAREST shingles
     * must hit B — only that prefix of the contained side is indexed,
     * while the container side posts everything. Candidate cost is
     * Σ_s df_prefix(s)·df(s), linear in corpus size for Zipfian df when
@@ -339,39 +361,27 @@ object Dedup {
 
   private def containmentPairsUncached(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val docs = docShinglesShared(spark, dir)
-    val postings = docs.select(col("lang"), col("doc_id"), col("sz"),
-      explode(col("sh")).as("shingle"))
-    val dfreq = postings.groupBy("shingle")
-      .agg(count(lit(1)).as("dfreq"))
-    val wDoc = Window.partitionBy("doc_id")
-      .orderBy(col("dfreq").asc, col("shingle").asc)
-    val aPrefix = postings.join(dfreq, "shingle")
-      .withColumn("rk", row_number().over(wDoc))
-      .filter(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
-      .select(col("lang"), col("shingle"),
-        col("doc_id").as("id_in"), col("sz").as("sz_in"))
-    val outSide = postings.select(col("lang"), col("shingle"),
-      col("doc_id").as("id_out"), col("sz").as("sz_out"))
+    val keys = Seq("lang", "shingle")
+    val all = postings(docs, "lang", "doc_id", "sz")
+    // side a is the contained side (its prefix only), side b the
+    // container (every posting)
+    val inSide = pairSide(rarestFirstPrefix(all, "doc_id", "shingle",
+      prefixLength(col("sz"), threshold)), "a", "doc_id", Seq("sz"), keys)
     // Containment admits no symmetric size-ratio prune (the container may
     // be arbitrarily large), but the smaller-into-larger direction pins
     // each unordered pair to one candidate row — with an id tiebreak for
-    // EQUAL sizes: `sz_in <= sz_out` alone admitted both directions of an
+    // EQUAL sizes: `sz_a <= sz_b` alone admitted both directions of an
     // equal-size pair (exact duplicates are the common case), emitting
     // two rows for one unordered pair and double-counting it in every
     // downstream rollup.
-    val cands = aPrefix.join(outSide, Seq("lang", "shingle"))
-      .filter(col("sz_in") < col("sz_out") ||
-        (col("sz_in") === col("sz_out") && col("id_in") < col("id_out")))
-      .select("id_in", "id_out")
+    val cands = inSide.join(pairSide(all, "b", "doc_id", Seq("sz"), keys), keys)
+      .filter(col("sz_a") < col("sz_b") ||
+        (col("sz_a") === col("sz_b") && col("id_a") < col("id_b")))
+      .select("id_a", "id_b")
       .distinct()
-    val shIn = docs.select(col("doc_id").as("id_in"), col("sh").as("sh_in"))
-    val shOut = docs.select(col("doc_id").as("id_out"), col("sh").as("sh_out"))
-    cands.join(shIn, "id_in").join(shOut, "id_out")
-      .withColumn("containment",
-        size(array_intersect(col("sh_in"), col("sh_out"))).cast("double") /
-          size(col("sh_in")))
-      .filter(col("containment") >= threshold)
-      .select(col("id_in"), col("id_out"),
+    verified(withPayloads(cands, docs, docs, "doc_id", "sh"), "containment", threshold)(
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") / size(col("sh_a")))
+      .select(col("id_a").as("id_in"), col("id_b").as("id_out"),
         round(col("containment"), 6).as("containment"))
   }
 
@@ -399,21 +409,21 @@ object Dedup {
     * that justify (or veto) the prefix filter BEFORE running the join:
     * per language, block count, posting volume, heaviest block, the full
     * inverted-index candidate cost Σ_s C(df(s), 2), and the posting
-    * volume the prefix filter would index (Σ_doc ⌈(1−t)·|sh|⌉+1 — a
+    * volume the prefix filter would index (Σ_doc |sh| − ⌈t·|sh|⌉ + 1 — a
     * function of doc sizes only, so tie-order-free and exactly
     * replayable). hotShingleProfile names the worst offenders; this is
     * the aggregate cost model a planner reads. All integer counts, one
     * rounded reduction ratio; reuses the memoized shingle frame. */
   def blockingCost(spark: SparkSession, dir: String, threshold: Double = 0.2): DataFrame = {
     val docs = docShinglesShared(spark, dir)
-    val blocks = docs.select(col("lang"), explode(col("sh")).as("shingle"))
+    val blocks = postings(docs, "lang")
       .groupBy("lang", "shingle").agg(count(lit(1)).as("b"))
     val full = blocks.groupBy("lang").agg(
       count(lit(1)).as("n_blocks"), sum("b").as("n_postings"),
       max("b").as("max_block"),
       sum(expr("b * (b - 1) div 2")).as("full_pairs"))
     val pre = docs.groupBy("lang").agg(
-      sum(col("sz") - ceil(col("sz") * threshold) + 1).as("n_prefix_postings"))
+      sum(prefixLength(col("sz"), threshold)).as("n_prefix_postings"))
     full.join(pre, "lang")
       .select(col("lang"), col("n_blocks"), col("n_postings"), col("max_block"),
         col("full_pairs"), col("n_prefix_postings"),
@@ -456,26 +466,17 @@ object Dedup {
   private[graft] def fuzzyNameCandidates(
       spark: SparkSession, dir: String, maxDist: Int): DataFrame = {
     val q = 3
-    val prefLen = maxDist * q + 1
     val names = Tables.load(spark, dir, "part")
       .select("p_name").distinct()
       .withColumn("len", length(col("p_name")))
     val grams = names.withColumn("gram",
       explode(expr(
         s"array_distinct(transform(sequence(1, greatest(len - ${q - 1}, 1)), i -> substring(p_name, i, $q)))")))
-    val dfreq = grams.groupBy("gram").agg(count(lit(1)).as("dfreq"))
-    val wName = Window.partitionBy("p_name")
-      .orderBy(col("dfreq").asc, col("gram").asc)
-    val prefix = grams.join(dfreq, "gram")
-      .withColumn("rk", row_number().over(wName))
-      .filter(col("rk") <= prefLen)
-      .select("gram", "p_name", "len")
-    val a = prefix.select(col("gram"), col("p_name").as("name_a"), col("len").as("len_a"))
-    val b = prefix.select(col("gram"), col("p_name").as("name_b"), col("len").as("len_b"))
-    val candLong = a.join(b, "gram")
-      .filter(col("name_a") < col("name_b") &&
-        abs(col("len_a") - col("len_b")) <= maxDist)
-      .select("name_a", "name_b")
+    val prefix = rarestFirstPrefix(grams, "p_name", "gram", lit(maxDist * q + 1))
+    def named(pairs: DataFrame): DataFrame =
+      pairs.select(col("id_a").as("name_a"), col("id_b").as("name_b"))
+    val candLong = named(blockingJoin(prefix, Seq("gram"), "p_name", Seq("len"),
+      abs(col("len_a") - col("len_b")) <= maxDist))
     // Completeness fallback: the q-gram count filter only forces a shared
     // gram when max(len) > q − 1 + maxDist·q; shorter names (none in the
     // test corpus, but the bound must not depend on data) keep the
@@ -483,10 +484,7 @@ object Dedup {
     val short = names.filter(col("len") <= q - 1 + maxDist * q)
     val bandedShort = short.withColumn("blen",
       explode(expr(s"sequence(len - $maxDist, len)")))
-    val candShort = bandedShort.select(col("blen"), col("p_name").as("name_a"))
-      .join(bandedShort.select(col("blen"), col("p_name").as("name_b")), "blen")
-      .filter(col("name_a") < col("name_b"))
-      .select("name_a", "name_b")
+    val candShort = named(blockingJoin(bandedShort, Seq("blen"), "p_name"))
     candLong.unionAll(candShort).distinct()
   }
 
@@ -558,15 +556,14 @@ object Dedup {
   /** The candidate-generate → exact-verify → verdict core of
     * [[dedupIncremental]], parameterized on the two shingled sides and
     * the full new-batch id list so the spec can drive it with synthetic
-    * boilerplate injected. `newDocs`/`oldDocs` carry (doc_id, lang, sh,
-    * sz); `allNew` is every new-batch doc id (shingleable or not). */
+    * boilerplate injected. `newDocs`/`oldDocs` carry (doc_id, lang,
+    * sh); `allNew` is every new-batch doc id (shingleable or not). */
   private[graft] def incrementalVerdicts(
       newDocs: DataFrame, oldDocs: DataFrame, allNew: DataFrame,
       threshold: Double, dfCap: Long): DataFrame = {
-    val newP = newDocs.select(col("lang"), col("doc_id").as("new_id"),
-      explode(col("sh")).as("shingle"))
-    val oldP = oldDocs.select(col("lang"), col("doc_id").as("old_id"),
-      explode(col("sh")).as("shingle"))
+    val keys = Seq("lang", "shingle")
+    val newP = postings(newDocs, "lang", "doc_id")
+    val oldP = postings(oldDocs, "lang", "doc_id")
     // df over BOTH sides: the guard must catch a template that is hot in
     // the corpus, in the arrivals, or across them. The hot list is
     // vocabulary-scale × pathology-only — broadcast by construction.
@@ -575,18 +572,16 @@ object Dedup {
       .groupBy("lang", "shingle").agg(count(lit(1)).as("dfreq"))
       .filter(col("dfreq") > dfCap)
       .select("lang", "shingle")
-    val cands = newP.join(broadcast(hot), Seq("lang", "shingle"), "left_anti")
-      .join(oldP.join(broadcast(hot), Seq("lang", "shingle"), "left_anti"),
-        Seq("lang", "shingle"))
-      .select("new_id", "old_id").distinct()
+    // side a is the new batch, side b the corpus
+    def coldSide(p: DataFrame, s: String): DataFrame =
+      pairSide(p, s, "doc_id", Nil, keys).join(broadcast(hot), keys, "left_anti")
+    val cands = coldSide(newP, "a").join(coldSide(oldP, "b"), keys)
+      .select("id_a", "id_b").distinct()
     // Exact verification on the FULL shingle arrays — hot shingles count
     // toward the Jaccard even though they never generate candidates.
-    val shN = newDocs.select(col("doc_id").as("new_id"), col("sh").as("sh_n"))
-    val shO = oldDocs.select(col("doc_id").as("old_id"), col("sh").as("sh_o"))
-    val matches = cands.join(shN, "new_id").join(shO, "old_id")
-      .withColumn("j", jaccard("sh_n", "sh_o"))
-      .filter(col("j") >= threshold)
-      .groupBy(col("new_id").as("doc_id"))
+    val matches = verified(withPayloads(cands, newDocs, oldDocs, "doc_id", "sh"), "j", threshold)(
+        jaccard("sh_a", "sh_b"))
+      .groupBy(col("id_a").as("doc_id"))
       .agg(count(lit(1)).as("n_matches"),
         round(max("j"), 6).as("best_jaccard"))
     allNew
@@ -894,14 +889,12 @@ object Dedup {
     // keeping them here would let the survival-gated routing change
     // RESULTS instead of only cost. Mirrored in the oracle.
     val e = Similarity.withNorms(Similarity.corpus(spark, dir))
-    val a = e.repartition(col("vec_id"))
-      .select(col("vec_id").as("id_a"), col("emb_d").as("emb_a"), col("nrm").as("na"))
-    val b = e.select(col("vec_id").as("id_b"), col("emb_d").as("emb_b"), col("nrm").as("nb"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", dot("emb_a", "emb_b") / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+    val vec = Seq("emb_d", "nrm")
+    Similarity.cosineVerified(
+      pairSide(e.repartition(col("vec_id")), "a", "vec_id", vec)
+        .crossJoin(pairSide(e, "b", "vec_id", vec))
+        .filter(col("id_a") < col("id_b")),
+      threshold)
   }
 
   private val embPairsMemo = new graft.SessionMemo[DataFrame]()

@@ -182,22 +182,22 @@ object Similarity {
       // candidate pair, and cosine is computed exactly once.
       val banded = base
         .select(col("vec_id"), posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-      val a = banded.select(col("band_idx"), col("band_val"), col("vec_id").as("id_a"))
-      val b = banded.select(col("band_idx"), col("band_val"), col("vec_id").as("id_b"))
-      val cands = a.join(b, Seq("band_idx", "band_val"))
-        .filter(col("id_a") < col("id_b"))
+      val cands = Dedup.blockingJoin(banded, Seq("band_idx", "band_val"), "vec_id")
         .select("id_a", "id_b")
         .distinct()
-      val embA = base.select(col("vec_id").as("id_a"),
-        col("emb_d").as("emb_a"), col("nrm").as("na"))
-      val embB = base.select(col("vec_id").as("id_b"),
-        col("emb_d").as("emb_b"), col("nrm").as("nb"))
-      cands.join(embA, "id_a").join(embB, "id_b")
-        .withColumn("cos", dot("emb_a", "emb_b") / (col("na") * col("nb")))
-        .filter(col("cos") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+      cosineVerified(Dedup.withPayloads(cands, base, base, "vec_id", "emb_d", "nrm"),
+        threshold)
     }
   }
+
+  /** THE cosine verify tail: exact cos = dot/(‖a‖·‖b‖) over pairs that
+    * carry both sides' `emb_d` and `nrm` ([[withNorms]]; suffixed
+    * `_a`/`_b` per [[Dedup.withPayloads]]), kept at ≥ `threshold` and
+    * rounded to 6 dp — the oracle's formula, bit for bit. */
+  private[graft] def cosineVerified(pairs: DataFrame, threshold: Double): DataFrame =
+    Dedup.verified(pairs, "cos", threshold)(
+        dot("emb_d_a", "emb_d_b") / (col("nrm_a") * col("nrm_b")))
+      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
 
   /** BOUNDED-RECALL AUDIT of the LSH near-dup miner against the exact
     * pair join (round 20 — the bounded-oracle scheme extended to the
@@ -299,12 +299,7 @@ object Similarity {
     // zero-norm drop removes nothing here — candidates come from the
     // index, which never holds a zero-norm vector.
     val e = withNorms(corpus(spark, dir))
-    val embA = e.select(col("vec_id").as("id_a"), col("emb_d").as("emb_a"), col("nrm").as("na"))
-    val embB = e.select(col("vec_id").as("id_b"), col("emb_d").as("emb_b"), col("nrm").as("nb"))
-    cands.join(embA, "id_a").join(embB, "id_b")
-      .withColumn("cos", dot("emb_a", "emb_b") / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+    cosineVerified(Dedup.withPayloads(cands, e, e, "vec_id", "emb_d", "nrm"), threshold)
   }
 
   /** The bucket geometry the pruned pair join and its applicability gate

@@ -168,6 +168,23 @@ class GuardsSpec extends SparkSpec {
       "the cosine top-k window must be declared once")
   }
 
+  test("pair miners keep one postings, one prefix rule and one cosine verify tail") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toSeq
+    def sites(needle: String): Seq[(String, Int)] = sources
+      .map { case (f, src) => f -> java.util.regex.Pattern.quote(needle).r.findAllMatchIn(src).size }
+      .filter(_._2 > 0)
+    def inDedup(needle: String): Int = sites(needle).toMap.getOrElse("Dedup.scala", 0)
+    assert(inDedup("""explode(col("sh"))""") == 1, "a second shingle postings explode in Dedup")
+    assert(inDedup("- ceil(") == 1, "a second prefix-length rule in Dedup")
+    assert(sites("""orderBy(col("dfreq").asc""") == Seq("Dedup.scala" -> 1),
+      "the rarest-first prefix order must be declared once")
+    assert(sites("""round(col("cos"), 6).as("cos")""") == Seq("Similarity.scala" -> 1),
+      "the cosine verify tail must be declared once")
+  }
+
   test("Bench, Verify and Profile build one session with identical SQL conf") {
     // the three mains must plan alike: each takes its session from the
     // one factory and sets no SQL conf of its own afterwards
@@ -236,9 +253,9 @@ class GuardsSpec extends SparkSpec {
     assert(streamStatePartitions(2, 1L) == 4)
   }
 
-  test("session conf is set only by GraftSession.withConfs and Explain") {
+  test("session conf is set only by GraftSession.withConfs") {
     // every scoped conf change goes through the one save/set/restore
-    // helper; Explain's plan-flag toggle is the only other setter
+    // helper; no main sets a conf of its own
     import scala.jdk.CollectionConverters._
     val setters = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
       .iterator().asScala
@@ -248,7 +265,7 @@ class GuardsSpec extends SparkSpec {
         src.contains("conf.set") || src.contains("conf.unset")
       }
       .map(_.getFileName.toString).toSet
-    assert(setters == Set("GraftSession.scala", "Explain.scala"),
+    assert(setters == Set("GraftSession.scala"),
       s"conf.set/conf.unset outside GraftSession.withConfs: $setters")
   }
 

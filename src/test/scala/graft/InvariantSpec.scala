@@ -153,10 +153,14 @@ class InvariantSpec extends SparkSpec {
   test("prefix-filtered ngram pairs equal the full inverted-index pairs") {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val full = asSet(Dedup.ngramJaccardPairs(spark, sf, 0.2))
-    val pref = asSet(Dedup.ngramJaccardPairsPrefix(spark, sf, 0.2))
-    assert(full.nonEmpty)
-    assert(pref == full, s"missing=${full -- pref} extra=${pref -- full}")
+    // 0.2 is the components graph, 0.5 curation's near-dup cut; at 0.8
+    // the prefix is shortest
+    for (t <- Seq(0.2, 0.5, 0.8)) {
+      val full = asSet(Dedup.ngramJaccardPairs(spark, sf, t))
+      val pref = asSet(Dedup.ngramJaccardPairsPrefix(spark, sf, t))
+      assert(full.nonEmpty, s"no pairs at $t")
+      assert(pref == full, s"at $t: missing=${full -- pref} extra=${pref -- full}")
+    }
   }
 
   test("hot-shingle profile ranks contiguously with non-increasing df per language") {
@@ -208,7 +212,7 @@ class InvariantSpec extends SparkSpec {
 
   test("asymmetric prefix blocking loses no containment pair vs the exhaustive join") {
     // containmentPairs indexes only each contained-side doc's
-    // ((1-t)*|A|)+1 rarest shingles; the one-sided prefix-filtering
+    // |A| - ceil(t*|A|) + 1 rarest shingles; the one-sided prefix-filtering
     // theorem says that loses nothing. Verify against the exhaustive
     // all-pairs join over STRING shingles (independent of the engine's
     // 64-bit shingle hashing, so this also re-checks collision-freedom

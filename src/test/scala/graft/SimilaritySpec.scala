@@ -124,6 +124,15 @@ class SimilaritySpec extends SparkSpec {
     // makes fixture-scale search near-exhaustive by design, and the
     // recalibrated geometry measures 1.0 here
     assert(recall >= 0.9, s"IVF recall@5 = $recall")
+    // the auto geometry scans every list at fixture scale, so the rebuild
+    // also compares the starved 2-of-16-lists search, which sees the
+    // trained cells
+    def starved() = Similarity.ivfTopK(spark, sf, 5, 10, nlist = 16, nprobe = 2)
+      .select("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val starved1 = starved()
+    val frac = Similarity.ivfScannedFraction(spark, sf, nlist = 16, nprobe = 2)
+    assert(frac < 1.0, s"the starved search scans every list ($frac)")
     // drop the memoized index first — a memo hit would compare the same
     // build with itself and pass even if the build were nondeterministic
     Similarity.clearIndexMemosForTest(spark)
@@ -131,6 +140,7 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ivf == ivf2)
+    assert(starved1 == starved(), "the starved IVF search moved across a rebuild")
     // the build depends on the corpus CONTENT, not its file layout: the
     // same rows staged as one file and as seven files must serve the
     // same top-k and measure the same bucket-pair survival. The auto
