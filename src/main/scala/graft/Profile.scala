@@ -62,27 +62,29 @@ object Profile {
         val acc = new Acc
         spark.sparkContext.addSparkListener(acc)
         spark.sparkContext.setJobDescription(n)
+        val c0 = org.apache.spark.graft.ListenerBridge.compiledClasses()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
         val wall = (System.nanoTime() - t0) / 1e6
+        val compiles = org.apache.spark.graft.ListenerBridge.compiledClasses() - c0
         // listener bus is async: drain before reading
         org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
         spark.sparkContext.removeSparkListener(acc)
         spark.sparkContext.setJobDescription(null)
-        (n, ok, wall, acc)
+        (n, ok, wall, acc, compiles)
       }
     }
-    println(f"%nQUERY SUMMARY (pass 2, steady-state)  wall = driver wall; stageWall = Σ stage clock; exec = Σ task executor time")
-    println(f"${"query"}%-32s ${"wall_ms"}%9s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"stageWall"}%9s ${"exec_ms"}%8s ${"shufR_MB"}%9s ${"in_MB"}%7s")
-    rows.sortBy(-_._3).foreach { case (n, ok, wall, a) =>
+    println(f"%nQUERY SUMMARY (pass 2, steady-state)  wall = driver wall; stageWall = Σ stage clock; exec = Σ task executor time; compiles = classes Janino compiled")
+    println(f"${"query"}%-32s ${"wall_ms"}%9s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"stageWall"}%9s ${"exec_ms"}%8s ${"shufR_MB"}%9s ${"in_MB"}%7s ${"compiles"}%8s")
+    rows.sortBy(-_._3).foreach { case (n, ok, wall, a, compiles) =>
       val ts = a.stages.values
       println(f"$n%-32s ${wall.toLong}%9d ${a.jobs}%5d ${ts.size}%6d ${ts.map(_.tasks).sum}%6d " +
         f"${ts.map(_.wallMs).sum}%9d ${ts.map(_.execRunMs).sum}%8d " +
-        f"${ts.map(_.shufReadB).sum / 1e6}%9.1f ${ts.map(_.inputB).sum / 1e6}%7.1f" +
+        f"${ts.map(_.shufReadB).sum / 1e6}%9.1f ${ts.map(_.inputB).sum / 1e6}%7.1f $compiles%8d" +
         (if (ok) "" else "  FAILED"))
     }
     // per-stage detail for explicitly named queries only (arg mode)
-    if (args.nonEmpty) rows.foreach { case (n, _, wall, a) =>
+    if (args.nonEmpty) rows.foreach { case (n, _, wall, a, _) =>
       println(s"\n---- $n (wall ${wall.toLong} ms, ${a.jobs} jobs) ----")
       a.stages.toSeq.sortBy(-_._2.wallMs).take(12).foreach { case (id, s) =>
         println(f"  stage $id%4d wall ${s.wallMs}%6d ms exec ${s.execRunMs}%7d ms " +

@@ -2,10 +2,17 @@ package graft.operators
 
 import graft.{GraftSession, Tables}
 import graft.functions.VecText._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{StructField, StructType}
+import scala.collection.mutable
 
 /** Deduplication suite over `documents` / `embeddings` — the training-data
   * pipeline operators the reference lacks (BASELINE.json north star).
@@ -494,10 +501,11 @@ object Dedup {
     * directly), each cluster canonicalized to its lexicographically
     * smallest member, emitted as a complete name→canonical mapping
     * (singletons map to themselves — the mapping must cover the whole
-    * vocabulary to be applicable as a join). The propagation is the same
-    * bounded-round min-label loop the doc/embedding cluster paths use —
-    * `least`/`min` order strings lexicographically, so the machinery is
-    * type-generic — and the match graph it runs on is the q-gram
+    * vocabulary to be applicable as a join). The labelling is the same
+    * [[minLabelComponents]] the doc/embedding cluster paths use — it
+    * orders ids in Spark's ordering for their type, UTF8String byte order
+    * here, so the min is Spark's `min` over names — and the match graph
+    * it runs on is the q-gram
     * prefix-blocked candidate set, so the whole pipeline
     * (block → verify → cluster → canonicalize) is sub-quadratic.
     * `levenshtein` + recursive reachability replay exactly in DuckDB →
@@ -597,18 +605,16 @@ object Dedup {
     * (min doc_id) per cluster, so "keep one copy" is well-defined even
     * when duplicates chain A~B~C without A~C matching directly.
     *
-    * Min-label propagation: every vertex starts as its own component and
-    * repeatedly takes the minimum label among itself and its neighbors;
-    * convergence in O(graph diameter) rounds, each one distributed
-    * join + aggregate (near-dup components are shallow in practice —
-    * this is the join-formulated version of the large-star/small-star
-    * MapReduce CC algorithm). Lineage is truncated per round
-    * (localCheckpoint), so plans stay flat no matter the round count.
-    * The driver-side loop holds only a changed-row COUNT, never data. */
+    * Every vertex is labelled with the minimum id of its component
+    * ([[minLabelComponents]]): a pair graph that fits one partition is
+    * union-found in a single task; a larger one runs distributed
+    * min-label propagation rounds (the join-formulated version of the
+    * large-star/small-star MapReduce CC algorithm). Either way the labels
+    * come back localCheckpoint'd, so the plan stays flat. */
   private val componentsMemo = new graft.SessionMemo[DataFrame]()
 
-  /** Memoized per (session, dir, threshold): the iterative label
-    * propagation runs once per session even when several consumers (the
+  /** Memoized per (session, dir, threshold): the labelling runs once
+    * per session even when several consumers (the
     * components query, [[dedupRepresentative]]) ask for the same graph —
     * the final labels frame is localCheckpoint'd, so the cached result
     * is data, not a recomputation recipe. Session-scoping and
@@ -623,19 +629,107 @@ object Dedup {
       ngramJaccardPairsPrefix(spark, dir, threshold).select("id_a", "id_b"))
       .select(col("id").as("doc_id"), col("comp").as("component_id"))
 
-  /** Min-label propagation over an undirected pair list `(id_a, id_b)` →
-    * `(id, comp)` where comp = min id reachable. Shared by the text
-    * ([[dedupComponents]]) and embedding ([[embeddingClusters]]) cluster
+  /** Adjacency rows one partition of the label-propagation loop takes:
+    * the loop derives its shuffle width from it, and a pair graph whose
+    * symmetric adjacency stays under it is labelled in one task instead
+    * ([[labelsInOneTask]]). */
+  private[graft] val AdjacencyRowsPerPartition = 2000000L
+
+  /** Whether a symmetric adjacency of `adjRows` rows is labelled by one
+    * union-find task rather than the rounds: exactly the graphs the loop
+    * would run in a single partition at any session width. A function of
+    * the row count alone — the session width caps the loop's partitions
+    * ([[loopPartitions]]) and never moves this choice. */
+  private[graft] def labelsInOneTask(adjRows: Long,
+      bound: Long = AdjacencyRowsPerPartition): Boolean = adjRows < bound
+
+  /** The loop's shuffle width: one partition per budget of adjacency
+    * rows, floor 1, capped at the session width so a genuinely huge pair
+    * graph keeps the session's parallelism. */
+  private[graft] def loopPartitions(adjRows: Long, width: Long): Long =
+    math.max(1L, math.min(width, adjRows / AdjacencyRowsPerPartition + 1L))
+
+  /** Connected components of an undirected pair list `(id_a, id_b)` →
+    * `(id, comp)` where comp = min id reachable, in Spark's ordering for
+    * the id type (Long doc/vector ids, or UTF8String byte order for
+    * [[fuzzyCanonical]]'s names). Shared by the text
+    * ([[dedupComponents]], [[dedupRepresentative]]), embedding
+    * ([[embeddingClusters]]) and entity ([[fuzzyCanonical]]) cluster
     * paths.
     *
     * The frames are post-threshold pair lists — orders smaller than the
-    * corpus — so the loop's cost is FIXED per-round driver/job overhead,
-    * and the round count is the whole game (round-21 profile: the old
-    * one-hop loop ran the embedding cluster graph to ~30 rounds = 127
-    * driver jobs for 3 s of wall on milliseconds of compute). Three
-    * levers, all output-invariant (any correct propagation reaches the
-    * same min-reachable fixpoint, which is what the DuckDB recursive-
-    * reachability oracle and `PropertySpec`'s union-find reference pin):
+    * corpus — so the cost is fixed per-job driver overhead and the
+    * classes each job compiles, not data. One count job sizes the
+    * symmetric adjacency (2 rows per pair); a graph under `oneTaskBound`
+    * rows (the loop's own per-partition budget) is labelled by
+    * [[unionFindLabels]] — one labelling job, no rounds, no conf scope —
+    * and only a larger graph runs the distributed rounds of
+    * [[roundLabels]]. Both reach the same min-reachable fixpoint, which
+    * the DuckDB recursive-reachability oracle and `PropertySpec`'s
+    * union-find reference pin; specs pass `oneTaskBound = 0` to reach the
+    * rounds on small graphs. */
+  private[graft] def minLabelComponents(edges: DataFrame,
+      oneTaskBound: Long = AdjacencyRowsPerPartition): DataFrame = {
+    val pairs = edges.select("id_a", "id_b")
+    // the pair RDD is built once: the labelling job over it reuses any
+    // shuffle output the count job materialized upstream
+    val pairRows = pairs.queryExecution.toRdd
+    val adjRows = 2L * pairRows.count()
+    if (labelsInOneTask(adjRows, oneTaskBound)) unionFindLabels(pairs, pairRows)
+    else roundLabels(pairs, adjRows)
+  }
+
+  /** One-task labelling: the pair rows are coalesced into a single
+    * partition, the distinct ids sorted in Spark's ordering for their
+    * type, and the edges union-found over the sorted indexes, always
+    * hanging the larger root under the smaller — so each root is its
+    * component's minimum id, exactly the fixpoint of the rounds. Emits
+    * one `(id, comp)` row per id and truncates the lineage
+    * (`localCheckpoint`) like the rounds' final labels. */
+  private def unionFindLabels(pairs: DataFrame, pairRows: RDD[InternalRow]): DataFrame = {
+    val idType = pairs.schema("id_a").dataType
+    val labels = pairRows.coalesce(1).mapPartitions { rows =>
+      val ord = TypeUtils.getInterpretedOrdering(idType)
+      // pair k's endpoints sit at 2k and 2k+1; values are copied because
+      // the upstream operator may reuse its row buffers
+      val ends = mutable.ArrayBuffer.empty[Any]
+      rows.foreach { r =>
+        ends += InternalRow.copyValue(r.get(0, idType))
+        ends += InternalRow.copyValue(r.get(1, idType))
+      }
+      val sorted = ends.toArray.sorted(ord)
+      val ids = mutable.ArrayBuffer.empty[Any]
+      sorted.foreach(v => if (ids.isEmpty || !ord.equiv(ids.last, v)) ids += v)
+      def indexOf(v: Any): Int = ids.search(v)(ord).insertionPoint
+      val parent = Array.tabulate(ids.length)(identity)
+      def find(i: Int): Int = {
+        var root = i
+        while (parent(root) != root) root = parent(root)
+        var j = i
+        while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+        root
+      }
+      var k = 0
+      while (k < ends.length) {
+        val (ra, rb) = (find(indexOf(ends(k))), find(indexOf(ends(k + 1))))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        k += 2
+      }
+      ids.indices.iterator.map(i =>
+        new GenericInternalRow(Array[Any](ids(i), ids(find(i)))): InternalRow)
+    }.localCheckpoint()
+    val n = labels.count()
+    ColumnBridge.materialized(pairs.sparkSession, labels,
+      StructType(Seq(StructField("id", idType), StructField("comp", idType))), n)
+  }
+
+  /** The distributed rounds, for pair graphs too large for one task.
+    *
+    * Min-label propagation; the round count is the whole game
+    * (round-21 profile: the old one-hop loop ran the embedding cluster
+    * graph to ~30 rounds = 127 driver jobs for 3 s of wall on
+    * milliseconds of compute). Three levers, all output-invariant (any
+    * correct propagation reaches the same min-reachable fixpoint):
     *   - labels START at min(id, min neighbor) — init buys hop 1 free;
     *   - each round takes ONE keyed min over THREE label sources — own
     *     label, neighbor labels (one hop), and label-of-label (PATH
@@ -651,7 +745,7 @@ object Dedup {
     *     loop stops the round convergence happens.
     * Lineage truncated per round (localCheckpoint) so plans stay flat;
     * the driver loop holds only a changed-row COUNT, never data. */
-  private[graft] def minLabelComponents(edges: DataFrame): DataFrame = {
+  private def roundLabels(edges: DataFrame, adjRows: Long): DataFrame = {
     // adj materializes under the CALLER's conf (its lineage may hold the
     // corpus-sized pair mining, which wants AQE); everything after runs
     // under the loop conf below.
@@ -659,21 +753,17 @@ object Dedup {
       edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(true)
     val spark = adj0.sparkSession
-    // Loop conf: the rounds run over POST-THRESHOLD pair graphs, orders
-    // smaller than the corpus, so their cost is per-round stage/job
-    // overhead, not data. Shuffle parallelism derives from the measured
-    // adjacency size (~2M rows per partition, floor 1, capped at the
-    // session width so a genuinely huge pair graph keeps the session's
-    // parallelism), and AQE is OFF: each round is one fixed-shape
-    // materialization over a tiny frame, where adaptive per-stage
-    // re-planning only multiplies driver jobs (round-21 profile: 112 jobs
-    // for 3 s of summed executor work on the embedding cluster graph)
-    // while the coalescing it would buy is what the derived count
-    // already provides. Conf is read per action, so the scope is exact.
+    // Loop conf: each round is one fixed-shape materialization over a
+    // frame orders smaller than the corpus, so shuffle parallelism
+    // derives from the adjacency size ([[loopPartitions]]) and AQE is
+    // OFF — adaptive per-stage re-planning only multiplies driver jobs
+    // (round-21 profile: 112 jobs for 3 s of summed executor work on the
+    // embedding cluster graph) while the coalescing it would buy is what
+    // the derived count already provides. Conf is read per action, so
+    // the scope is exact.
     val width = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val parts = math.max(1L, math.min(width, adj0.count() / 2000000L + 1L))
     GraftSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> parts.toString) {
+        "spark.sql.shuffle.partitions" -> loopPartitions(adjRows, width).toString) {
     var labels = adj0
       .groupBy(col("id_a"))
       .agg(min("id_b").as("nbr_min"))
@@ -982,7 +1072,7 @@ object Dedup {
     * that collapse classes — exactly what a curation pass inspects
     * before deleting). Exact pairs are the oracle baseline; the
     * hyperplane-LSH candidate path in [[Similarity]] swaps in at corpus
-    * scale, and the component step is the same bounded-round propagation
+    * scale, and the component step is the same [[minLabelComponents]]
     * the text path uses. */
   def embeddingClusters(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
     val comp = minLabelComponents(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Iterative graph analytics on DataFrames — the loop lives on the
   * driver, every iteration is one distributed join + keyed aggregation
   * (the standard Pregel-on-relational shape; see also
-  * [[Dedup.dedupComponents]]' min-label propagation).
+  * [[Dedup.minLabelComponents]]' propagation rounds).
   */
 object Graph {
 

@@ -1,12 +1,20 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 
-/** Bridge to the `private[spark]` listener bus drain — used only by the
-  * optimization-round instrument [[graft.Profile]] so per-query stage
-  * metrics are fully delivered before the listener is read (the bus is
-  * async; reading without a drain undercounts the last stages). No
-  * correctness path uses this. */
+/** Bridge to `private[spark]` instrumentation — used by the
+  * optimization-round instrument [[graft.Profile]] and by specs that read
+  * listener metrics. No correctness path uses this. */
 object ListenerBridge {
+  /** Drain the listener bus, so per-query stage metrics are fully
+    * delivered before a listener is read (the bus is async; reading
+    * without a drain undercounts the last stages). */
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Generated classes Janino has compiled in this JVM so far (the count
+    * of Spark's compilation-time histogram). Spark's codegen cache is
+    * JVM-wide, so a delta around one query counts the classes that query
+    * compiled rather than found in the cache. */
+  def compiledClasses(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

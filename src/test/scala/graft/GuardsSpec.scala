@@ -253,6 +253,27 @@ class GuardsSpec extends SparkSpec {
     assert(streamStatePartitions(2, 1L) == 4)
   }
 
+  test("pair graphs under the partition budget label in one task at any session width") {
+    import graft.operators.Dedup.{AdjacencyRowsPerPartition => budget, labelsInOneTask, loopPartitions}
+    val rows = Seq(0L, 1L, 12L, budget - 1, budget, budget + 1, 5 * budget, 1L << 40)
+    for (r <- rows) {
+      // the choice reads the row count alone: it is exactly "the loop's
+      // uncapped width is one partition"
+      assert(labelsInOneTask(r) == (r < budget), s"rows $r")
+      assert(labelsInOneTask(r) == (loopPartitions(r, Long.MaxValue) == 1L), s"rows $r")
+      for (width <- Seq(1L, 4L, 200L)) {
+        val parts = loopPartitions(r, width)
+        assert(parts >= 1L && parts <= width, s"rows $r width $width")
+      }
+    }
+    // a narrow session caps the loop at one partition without ever
+    // sending a graph over the budget to the one-task path
+    assert(loopPartitions(5 * budget, 1L) == 1L && !labelsInOneTask(5 * budget))
+    assert(loopPartitions(5 * budget, 200L) == 6L)
+    // specs reach the rounds with bound 0: no graph is under it
+    assert(!labelsInOneTask(0L, 0L))
+  }
+
   test("session conf is set only by GraftSession.withConfs") {
     // every scoped conf change goes through the one save/set/restore
     // helper; no main sets a conf of its own

@@ -74,11 +74,33 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  /** Driver union-find reference: every node of `edges` mapped to the
+    * minimum id of its connected component under `ord`. */
+  private def componentMins[K](edges: Seq[(K, K)])(implicit ord: Ordering[K]): Map[K, K] = {
+    val parent = scala.collection.mutable.Map.empty[K, K]
+    def find(x: K): K = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.groupBy(find).flatMap {
+      case (_, members) => val m = members.min; members.map(_ -> m)
+    }
+  }
+
+  // the default bound labels these small graphs in one union-find task;
+  // bound 0 sends the same graphs through the distributed rounds
+  private val ccPaths = Seq("one task" -> graft.operators.Dedup.AdjacencyRowsPerPartition,
+    "rounds" -> 0L)
+
   test("min-label components equal a union-find reference on random graphs") {
-    // guards the propagation loop's restructurings (min-neighbor init,
-    // union-into-one-min rounds, biennial convergence count): on any
-    // random edge list the distributed fixpoint must assign every node
-    // the minimum id reachable in its connected component
+    // guards both labelling paths (the one-task union-find and the
+    // contraction rounds with min-neighbor init and path doubling): on
+    // any random edge list each must assign every node the minimum id
+    // reachable in its connected component
     import spark.implicits._
     val gen = for {
       n <- Gen.choose(2, 40)       // node id space
@@ -87,45 +109,62 @@ class PropertySpec extends SparkSpec {
         a <- Gen.choose(0L, n.toLong); b <- Gen.choose(0L, n.toLong)
       } yield (math.min(a, b), math.max(a, b)))
     } yield edges.filter(e => e._1 != e._2)
-    check(Prop.forAll(gen) { edges =>
-      edges.isEmpty || {
-        val df = edges.toDF("id_a", "id_b")
-        val got = graft.operators.Dedup.minLabelComponents(df)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // driver union-find reference
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
+    for ((path, bound) <- ccPaths) withClue(s"$path: ") {
+      check(Prop.forAll(gen) { edges =>
+        edges.isEmpty || {
+          val df = edges.toDF("id_a", "id_b")
+          val got = graft.operators.Dedup.minLabelComponents(df, bound)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          got == componentMins(edges)
         }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val roots = nodes.groupBy(find).flatMap { case (_, members) =>
-          val m = members.min; members.map(_ -> m)
-        }
-        got == roots
-      }
-    })
+      })
+    }
+  }
+
+  test("min-label components take the byte-order min of non-ASCII string ids") {
+    // fuzzyCanonical keys on names, and Spark orders strings by their
+    // UTF-8 bytes: "Ａ" (U+FF21, EF BC A1) sorts before the emoji
+    // (U+1F600, F0 9F 98 80) although Java's UTF-16 order puts the
+    // emoji's surrogate D83D first, and "Straße" before "solo" although
+    // a locale collation would not
+    import spark.implicits._
+    val edges = Seq("zoe" -> "é", "é" -> "中文", "Zoë" -> "zoe",
+      "\uD83D\uDE00" -> "\uFF21", "ß" -> "a\u0301", "solo" -> "Straße")
+    val byteOrder: Ordering[String] = Ordering.by((s: String) =>
+      s.getBytes("UTF-8").toSeq.map(_ & 0xff))(Ordering.Implicits.seqOrdering[Seq, Int])
+    // the reference's order is Spark's: `least` agrees on every edge
+    val least_ = edges.toDF("id_a", "id_b")
+      .select(col("id_a"), col("id_b"), least(col("id_a"), col("id_b")))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+    edges.foreach { case (a, b) => assert(least_((a, b)) == byteOrder.min(a, b), s"$a ~ $b") }
+    val want = componentMins(edges)(byteOrder)
+    assert(want("中文") == "Zoë" && want("\uD83D\uDE00") == "\uFF21" && want("solo") == "Straße")
+    for ((path, bound) <- ccPaths) withClue(s"$path: ") {
+      val got = graft.operators.Dedup.minLabelComponents(edges.toDF("id_a", "id_b"), bound)
+      assert(got.schema.map(_.dataType) == Seq(StringType, StringType))
+      assert(got.collect().map(r => r.getString(0) -> r.getString(1)).toMap == want)
+    }
   }
 
   test("min-label components keep only the final labels checkpoint persisted") {
     // a 64-node chain takes several rounds even with path doubling; every
-    // superseded labels/adjacency checkpoint must be released, so the
-    // persisted set grows by at most the returned frame's own checkpoint
+    // superseded labels/adjacency checkpoint must be released, and the
+    // one-task path persists nothing but its labels, so on either path
+    // the persisted set grows by at most the returned frame's own
+    // checkpoint
     import spark.implicits._
     import org.apache.spark.sql.execution.LogicalRDD
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val labels = graft.operators.Dedup.minLabelComponents(edges)
-    val grown = sc.getPersistentRDDs.keySet -- before
-    val own = labels.queryExecution.logical.collectLeaves()
-      .collect { case r: LogicalRDD => r.rdd.id }.toSet
-    assert(grown.subsetOf(own) && grown.size <= 1,
-      s"persisted RDDs grew by $grown; only the final labels ($own) may stay")
-    assert(labels.collect().map(_.getLong(1)).toSet == Set(0L))
+    for ((path, bound) <- ccPaths) withClue(s"$path: ") {
+      val before = sc.getPersistentRDDs.keySet
+      val labels = graft.operators.Dedup.minLabelComponents(edges, bound)
+      val grown = sc.getPersistentRDDs.keySet -- before
+      val own = labels.queryExecution.logical.collectLeaves()
+        .collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(grown.subsetOf(own) && grown.size <= 1,
+        s"persisted RDDs grew by $grown; only the final labels ($own) may stay")
+      assert(labels.collect().map(_.getLong(1)).toSet == Set(0L))
+    }
   }
 }
