@@ -13,22 +13,23 @@ object Scale {
 
   final case class Cust(c_custkey: Long, c_mktsegment: String, c_acctbal: Double)
 
-  /** Scratch directory for the layout-rewrite operators, registered for
-    * recursive deletion at JVM exit — repeated verify/bench runs used to
-    * leak a full table copy per invocation (each `createTempDirectory`
-    * held events/orders duplicates until the OS cleaned /tmp). One
-    * shutdown hook drains a shared list, so registration is O(1) per
-    * call and deletion order is irrelevant (paths are independent). */
+  /** Scratch directory for every operator that writes and re-reads
+    * data (layout rewrites, sink/source round-trips, persisted indexes
+    * and sketches): a fresh `createTempDirectory` per call, so two
+    * processes or two sessions running the same query never share one.
+    * Each is registered for recursive deletion at JVM exit — repeated
+    * verify/bench runs used to leak a full table copy per invocation
+    * (each directory held events/orders duplicates until the OS cleaned
+    * /tmp). One shutdown hook drains a shared list, so registration is
+    * O(1) per call and deletion order is irrelevant (paths are
+    * independent). A caller whose result is materialized can drop its
+    * directory sooner with [[deleteScratch]]. */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       scratchDirs.forEach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount) // children before parents
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => } // best-effort: exit cleanup only
+        try deleteTree(p)
+        catch { case _: Throwable => } // best-effort: exit cleanup only
       }
     }))
   }
@@ -38,6 +39,24 @@ object Scale {
     scratchDirs.add(p)
     p.toString
   }
+
+  /** Eagerly delete a [[scratchDir]] whose contents the caller no longer
+    * reads (its result is checkpointed), and forget it at exit. */
+  private[graft] def deleteScratch(path: String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    deleteTree(p)
+    scratchDirs.remove(p)
+  }
+
+  /** Recursive delete, children before parents; a missing path is a no-op. */
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      } finally walk.close()
+    }
 
   /** Salted two-phase aggregation for skewed keys. `event_type` has ~5
     * values over the whole table — a single-phase groupBy sends ALL rows

@@ -339,67 +339,32 @@ object Similarity {
     // n²-ish bucket pairs at exactly the scale the dial exists for
     math.max(16, math.min(256L, n / 125L).toInt)
 
-  /** The uncapped coarse-cell target, shared by the single-level rule
-    * ([[autoSearchNlist]]) and the two-level split that restores it past
-    * the cap ([[autoSearchCells]]): `min(64√n, n/4)`. Recalibrated
-    * round 16 at the NEW 200k-vector third scale point, under the
-    * width-fixed CANONICAL build (the round's first reading — 0.80 at
-    * the old 16√n — was a single-partition-build artifact, not the
-    * rule; see the ivfIndex comments). Measured canonical grid,
-    * recall@5 at ~9% measured fraction: 20k → 4096 lists 0.84 but
-    * 8192 = 1.00; 200k → 8192 = 0.94-0.96, 32768 = 0.96 (16384 sits in
-    * a weak-draw dip, 0.88-0.92 — quantizer draws move recall ±0.04-
-    * 0.08, so the rule picks the cell count whose MARGIN survived
-    * across draws at both staged points). The n/4 population term binds
-    * below n≈65k and keeps ≥2 vectors/cell after the pow2 round-up. */
-  private def uncappedCellTarget(n: Long): Double = {
-    val nn = math.max(n, 1L)
-    math.min(64.0 * math.sqrt(nn.toDouble), (nn / 4.0).max(16.0))
-  }
-
   /** Data-derived IVF SEARCH geometry: `nlist = 2^⌈log2 min(64√n, n/4)⌉`
     * (floor 16, cap 65536 — the centroid table stays ≤ 32 MB at 64-dim,
-    * still broadcastable). PRECISELY the smallest power of two AT OR
-    * ABOVE [[uncappedCellTarget]]. Past ~1.05M vectors the cap binds and
-    * [[autoSearchCells]] restores the target with a second residual
-    * quantizer level. (History: the round-14 rule (2√n cap 1024,
-    * nprobe = 3/8·nlist) held recall by scanning a constant ~40-55% of
-    * the corpus; round 15 recalibrated to 16√n at ≤10% scanned on the
-    * 20k corpus; round 16's 200k third scale point moved the target to
-    * 64√n — see [[uncappedCellTarget]] for the measured pairs.) */
-  private def autoSearchNlist(nForSearch: Long): Int = {
-    val target = uncappedCellTarget(nForSearch)
+    * still broadcastable). Past ~1.05M vectors (64√n > 65536) the cap
+    * binds and the list count stops growing; the measured-fraction
+    * nprobe ([[autoNprobeMeasured]]) and the served-fraction gate
+    * ([[withinServedBudget]]) still hold there, only the scanned share
+    * stops shrinking with √n. The 64√n term was recalibrated round 16
+    * at the 200k-vector third scale point, under the width-fixed
+    * CANONICAL build (the round's first reading — 0.80 at the old 16√n
+    * — was a single-partition-build artifact, not the rule; see the
+    * ivfIndex comments). Measured canonical grid, recall@5 at ~9%
+    * measured fraction: 20k → 4096 lists 0.84 but 8192 = 1.00; 200k →
+    * 8192 = 0.94-0.96, 32768 = 0.96 (16384 sits in a weak-draw dip,
+    * 0.88-0.92 — quantizer draws move recall ±0.04-0.08, so the rule
+    * picks the cell count whose MARGIN survived across draws at both
+    * staged points). The n/4 population term binds below n≈65k and
+    * keeps ≥2 vectors/cell after the pow2 round-up. (History: the
+    * round-14 rule (2√n cap 1024, nprobe = 3/8·nlist) held recall by
+    * scanning a constant ~40-55% of the corpus; round 15 recalibrated
+    * to 16√n at ≤10% scanned on the 20k corpus.) */
+  private[graft] def autoSearchNlist(nForSearch: Long): Int = {
+    val nn = math.max(nForSearch, 1L)
+    val target = math.min(64.0 * math.sqrt(nn.toDouble), (nn / 4.0).max(16.0))
     var nlist = 16
     while (nlist < 65536 && nlist < target) nlist *= 2
     nlist
-  }
-
-  /** TWO-LEVEL (residual) coarse-quantizer geometry — the published next
-    * step the [[autoSearchNlist]] doc promised, now code (round 16):
-    * past ~17M vectors the single-level 65536-list cap binds and the
-    * scanned fraction would grow linearly again. The standard fix
-    * (FAISS's residual coarse quantizers / the inverted multi-index
-    * family) splits the cell id across two codebooks: level 1 stays a
-    * trainable, broadcastable ≤65536-centroid KMeans; level 2 is a
-    * SHARED residual codebook of `l2` centroids, and a vector's cell is
-    * the pair (l1, l2) — `l1 × l2` effective cells from `l1 + l2`
-    * trained/broadcast centroids. Returns (l1, l2): l2 = 1 (single
-    * level) until the UNCAPPED cell target ([[uncappedCellTarget]],
-    * 64√n) outgrows the cap at n ≈ 1.05M — i.e. for every corpus this
-    * repo can materialize — then the smallest power of two restoring
-    * the target (cap 1024 ⇒ ~67M cells ⇒ the rule holds to ~10¹²
-    * vectors). Spec-pinned (`SimilaritySpec`): modeled scan fraction
-    * stays sub-10% at mock n = 2e6/2e7/1e8/1e9/1e11, and the fixture-scale
-    * mechanics run the real search path with a forced small (l1, l2). */
-  private[graft] def autoSearchCells(n: Long): (Int, Int) = {
-    val l1 = autoSearchNlist(n)
-    val target = uncappedCellTarget(n)
-    if (target <= 65536.0) (l1, 1)
-    else {
-      var l2 = 2
-      while (l1.toLong * l2 < target && l2 < 1024) l2 *= 2
-      (l1, l2)
-    }
   }
 
   /** The nprobe rule, single source of truth — MEASURED-fraction
@@ -606,7 +571,7 @@ object Similarity {
     (rl, rp, tf)
   }
 
-  /** THE single-level IVF handle every serve and measurement path takes:
+  /** THE IVF handle every serve, measurement and canary rung takes:
     * the index at the resolved geometry ([[resolveGeometry]]) and the
     * resolved nprobe. */
   private def servedIvf(spark: SparkSession, dir: String,
@@ -700,8 +665,8 @@ object Similarity {
   }
 
   /** THE index probe set: the inverted-list rows with vec_id below
-    * `nProbes`, as `(query_id, unit_q)` — every single- and two-level
-    * search, PQ serve and scanned-fraction measurement probes with it. */
+    * `nProbes`, as `(query_id, unit_q)` — every IVF search, PQ serve and
+    * scanned-fraction measurement probes with it. */
   private def indexProbes(lists: DataFrame, nProbes: Int): DataFrame =
     lists.filter(col("neighbor_id") < nProbes)
       .select(col("neighbor_id").as("query_id"), col("unit_c").as("unit_q"))
@@ -841,7 +806,7 @@ object Similarity {
     * useless as a recall proxy), extra Lloyd iterations (0.88 at
     * 5/10/15), nor k-means|| init (0.88, 13 minutes of driver-local
     * kmeans++ at k=16384) beat a plain seeded draw. The dials that DO
-    * move the operating point are cell count ([[uncappedCellTarget]])
+    * move the operating point are cell count ([[autoSearchNlist]])
     * and the measured-fraction nprobe ([[autoNprobeMeasured]]); a weak
     * draw is caught by [[recallCanary]]. */
   private val TrainSeed = 1L
@@ -929,205 +894,14 @@ object Similarity {
       } finally base.unpersist(blocking = false)
     }
 
-  private final case class Ivf2Index(
-    lists: DataFrame, centroids1: DataFrame, centroids2: DataFrame)
-  private val ivf2Memo = new graft.SessionMemo[Ivf2Index]()
-
-  /** Build (or fetch) the TWO-LEVEL residual IVF index (see
-    * [[autoSearchCells]]): level-1 KMeans as in [[ivfIndex]], then a
-    * SHARED level-2 codebook trained on the residuals (unit − c1) —
-    * cell id = l1·L2 + l2. Both centroid tables stay broadcast-sized
-    * (l1 + l2 rows, never l1 × l2); the residual computation and
-    * second assignment are one extra linear ingest pass. Memoized and
-    * materialized like the single-level index. */
-  private def ivf2Index(
-      spark: SparkSession, dir: String,
-      l1: Int, l2: Int, trainFraction: Double, trainIters: Int): Ivf2Index =
-    ivf2Memo.getOrCompute(spark,
-        s"$dir|2L|$l1|$l2|$trainFraction|$trainIters") {
-      require(l2 >= 2, s"ivf2Index: l2=$l2 — use the single-level index below 2")
-      val base = normalized(spark, dir).cache()
-      try {
-        val vecs = base.withColumn("features", array_to_vector(col("unit")))
-        // same content-based sample + sample-scaled width as the
-        // single-level build — the fixed coalesce(4) would serialize the
-        // l1=65536 fit at exactly the scale this path activates
-        val n = corpusCount(spark, dir)
-        def fitWidth(fraction: Double): Int =
-          math.min(32L, math.max(4L, (fraction * n).toLong / 8192L)).toInt
-        // canonical fit layout — same rationale as the single-level build
-        def canonical(df: DataFrame, width: Int): DataFrame =
-          df.repartition(width, col("vec_id")).sortWithinPartitions("vec_id")
-        val trainSample = canonical(
-          trainSampleOf(vecs, trainFraction), fitWidth(trainFraction))
-        // SAME seed as the single-level build; km2 derives +1 so the two
-        // levels never share a draw
-        val km1 = new KMeans().setK(l1).setSeed(TrainSeed).setMaxIter(trainIters)
-          .setInitMode("random").setFeaturesCol("features")
-          .setPredictionCol("l1").fit(trainSample)
-        val c1 = spark.createDataFrame(
-          km1.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq)
-          .toDF("l1", "centroid1")
-        // level-1 assignment + residuals: linear ingest work, the frame
-        // the level-2 training sample and the final assignment share
-        val assigned1 = km1.transform(vecs)
-          .select(col("vec_id"), col("unit"), col("l1"))
-          .join(broadcast(c1), "l1")
-          .withColumn("rfeat", array_to_vector(
-            expr("zip_with(unit, centroid1, (x, c) -> x - c)")))
-        // the shared residual codebook needs only ~32 samples per
-        // centroid, like the level-1 rule — and l2 is small (≤1024)
-        val tf2 = math.min(1.0, 32.0 * l2 / math.max(n, 1L))
-        val km2 = new KMeans().setK(l2).setSeed(TrainSeed + 1).setMaxIter(trainIters)
-          .setInitMode("random").setFeaturesCol("rfeat")
-          .setPredictionCol("l2")
-          .fit(canonical(
-            trainSampleOf(assigned1.select(col("vec_id"), col("rfeat")), tf2),
-            fitWidth(tf2)))
-        val lists = km2.transform(assigned1)
-          .select(col("vec_id").as("neighbor_id"), col("unit").as("unit_c"),
-            (col("l1").cast("long") * l2 + col("l2")).as("list_id"))
-          .localCheckpoint(true)
-        val c2 = spark.createDataFrame(
-          km2.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq)
-          .toDF("l2", "centroid2")
-        Ivf2Index(lists, c1, c2)
-      } finally base.unpersist(blocking = false)
-    }
-
-  /** Two-level IVF search — the residual twin of [[ivfTopK]], routed to
-    * automatically when [[autoSearchCells]] says the single-level cap
-    * binds (never on a corpus this repo can materialize; forced small
-    * geometries are spec-exercised). Probe cell ranking is the standard
-    * two-step: rank level-1 centroids by the same ‖c‖² − 2q·c metric as
-    * [[selectProbeLists]], keep an OVERSAMPLED nprobe1 = ⌈2·nprobe/l2⌉
-    * level-1 cells, expand each against the broadcast level-2 table and
-    * rank the (l1, l2) pairs by the exact combined-centroid distance
-    * ‖q − c1 − c2‖² = ‖c1‖² + ‖c2‖² + 2·c1·c2 − 2·(q·c1 + q·c2)
-    * (every term computed on broadcast-sized frames — the l1 × l2
-    * combined table never materializes), keep the top `nprobe` CELLS,
-    * and [[ivfSearch]] exactly those inverted lists. */
-  def ivfTopKTwoLevel(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 5,
-      nProbes: Int = 10,
-      l1: Int = 0,
-      l2: Int = 0,
-      nprobe: Int = 0,
-      trainFraction: Double = 0.0,
-      trainIters: Int = 5): DataFrame = {
-    val (idx, rl1r, rl2, rp) =
-      ivf2Resolve(spark, dir, l1, l2, nprobe, trainFraction, trainIters)
-    ivfSearch(ivf2SelectCells(idx, indexProbes(idx.lists, nProbes), rl1r, rl2, rp),
-      idx.lists, k)
-  }
-
-  /** The two-level route's auto probe budget — the fixed 6%-of-cells
-    * rule (ceil, floor 6, never above the cell count), ONE copy shared
-    * by [[ivf2Resolve]] and [[canaryEscalate]]'s resolved-start
-    * recording so the ladder's head names exactly the budget the auto
-    * dispatch serves. */
-  private def ivf2AutoNprobe(cells: Long): Int =
-    math.min(cells, math.max(6L, (cells * 3 + 49) / 50)).toInt
-
-  /** Geometry + index resolution shared by [[ivfTopKTwoLevel]] and the
-    * measured-fraction probe [[ivf2ScannedFraction]] — one copy so the
-    * measured fraction describes exactly the cells the serve path
-    * scans. Returns (index, l1, l2, nprobe-in-cells). */
-  private def ivf2Resolve(
-      spark: SparkSession, dir: String, l1: Int, l2: Int, nprobe: Int,
-      trainFraction: Double, trainIters: Int): (Ivf2Index, Int, Int, Int) = {
-    val n = corpusCount(spark, dir)
-    val (rl1, rl2) =
-      if (l1 > 0 && l2 > 0) (l1, l2)
-      else autoSearchCells(n)
-    require(rl2 >= 2,
-      s"two-level route: derived l2=$rl2 — the corpus is below the " +
-        "cap-bind point; use the auto dispatch (ivfTopK / pqTopK route " +
-        "here past it)")
-    val cells = rl1.toLong * rl2
-    val rp = if (nprobe > 0) nprobe else ivf2AutoNprobe(cells)
-    require(rp <= cells, s"ivfTopKTwoLevel: nprobe=$rp exceeds cells=$cells")
-    val tf = if (trainFraction > 0) trainFraction else autoTrainFraction(rl1, n)
-    (ivf2Index(spark, dir, rl1, rl2, tf, trainIters), rl1, rl2, rp)
-  }
-
-  /** The two-step probe-cell cut of the two-level search: oversampled
-    * level-1 group cut, then exact combined-centroid ranking of the
-    * (l1, l2) pairs, top `rp` CELLS per probe. Extracted so the scanned
-    * fraction can be MEASURED on the same selection the serve path
-    * uses. */
-  private def ivf2SelectCells(
-      idx: Ivf2Index, probes: DataFrame, rl1: Int, rl2: Int, rp: Int): DataFrame = {
-    // level 1: oversampled cell-group cut (the best (l1,l2) pair is not
-    // always inside the single best l1 group — 2× covers the residual
-    // displacement at the published oversampling convention)
-    val nprobe1Base =
-      math.min(rl1.toLong, math.max(4L, (2L * rp + rl2 - 1) / rl2))
-    val w1 = Window.partitionBy("query_id").orderBy(col("d1").asc, col("l1").asc)
-    val lvl1 = probes.crossJoin(broadcast(idx.centroids1
-        .withColumn("cn2_1", norm2("centroid1"))))
-      .withColumn("qd1", dot("unit_q", "centroid1"))
-      .withColumn("d1", col("cn2_1") - lit(2.0) * col("qd1"))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= nprobe1Base)
-      .select(col("query_id"), col("unit_q"), col("l1"),
-        col("centroid1"), col("cn2_1"), col("qd1"))
-    // level 2: exact combined-centroid distance over nprobe1 × l2 rows
-    // per probe; keep the top nprobe CELLS
-    val wc = Window.partitionBy("query_id")
-      .orderBy(col("d12").asc, col("list_id").asc)
-    lvl1.crossJoin(broadcast(idx.centroids2
-        .withColumn("cn2_2", norm2("centroid2"))))
-      .withColumn("d12",
-        col("cn2_1") + col("cn2_2") + lit(2.0) * dot("centroid1", "centroid2")
-          - lit(2.0) * (col("qd1") + dot("unit_q", "centroid2")))
-      .withColumn("list_id", col("l1").cast("long") * rl2 + col("l2"))
-      .withColumn("rc", row_number().over(wc))
-      .filter(col("rc") <= rp)
-      .select(col("query_id"), col("unit_q"), col("list_id"))
-  }
-
-  /** MEASURED scanned fraction of the two-level route — the residual
-    * twin of [[ivfScannedFraction]] (round-17, closing the verdict's
-    * "modeled, not measured" gap): actual inverted-list rows behind the
-    * cells [[ivf2SelectCells]] picks for the standard probe set, over
-    * probes × (index rows − 1) (own-row exclusion, as in the
-    * single-level measurement). Shares [[ivf2Resolve]] with the serve
-    * path, so the number describes the query actually served. */
-  def ivf2ScannedFraction(
-      spark: SparkSession, dir: String, nProbes: Int = 10,
-      l1: Int = 0, l2: Int = 0, nprobe: Int = 0,
-      trainFraction: Double = 0.0, trainIters: Int = 5): Double = {
-    val (idx, rl1r, rl2, rp) =
-      ivf2Resolve(spark, dir, l1, l2, nprobe, trainFraction, trainIters)
-    val probes = indexProbes(idx.lists, nProbes).localCheckpoint(true)
-    val frac = scannedFraction(probes,
-      ivf2SelectCells(idx, probes, rl1r, rl2, rp), idx.lists,
-      s"ivf2ScannedFraction($dir)")
-    // same served-vs-calibrated divergence surface as the single-level
-    // twin: the two-level auto rp is the fixed 6%-of-cells rule, so any
-    // measured fraction past 0.105 under auto geometry is a dense-cell
-    // probe-set divergence worth a loud line, not a floor artifact
-    if (l1 == 0 && l2 == 0 && nprobe == 0 && !withinServedBudget(frac))
-      System.err.println(String.format(java.util.Locale.ROOT,
-        "[graft] ivf2ScannedFraction(%s): served fraction %.3f exceeds the " +
-          "calibrated target + divergence allowance (0.105) — the served " +
-          "id<10 probes sit in denser-than-average cells on this corpus",
-        dir, Double.box(frac)))
-    frac
-  }
-
   /** RECALL CANARY — the promotion gate a serving deployment runs after
     * training a quantizer and BEFORE routing traffic to it. The round-19
     * 5M three-draw sweep measured a genuinely weak draw (seed 3 served
     * recall@5 0.92 vs 0.98 for seeds 1-2 under the same auto geometry),
     * so draw quality is an operational property to VALIDATE, not assume:
     * one bounded exact scan per promotion, not per query. Returns
-    * recall@k of the shipped [[ivfTopK]] dispatch (single- or two-level,
-    * whatever the auto rule serves at this corpus size — the same
-    * dispatch production traffic takes) against the exact [[bruteTopK]]
+    * recall@k of the shipped [[ivfTopK]] serve at its auto geometry (the
+    * same path production traffic takes) against the exact [[bruteTopK]]
     * answer over the same probe set. The exact scan is O(nProbes × n):
     * at 100 TB the canary runs on a bounded probe SAMPLE and the
     * deployment gates `recallCanary(...) >= floor` before swapping the
@@ -1157,9 +931,8 @@ object Similarity {
   }
 
   /** One rung of the promotion-gate escalation ladder: the probe budget
-    * served (`nprobe` — lists on the single-level route, CELLS on the
-    * two-level route), the canary recall@k measured at it, and the
-    * scanned fraction it paid. */
+    * served (`nprobe` inverted lists), the canary recall@k measured at
+    * it, and the scanned fraction it paid. */
   final case class CanaryStep(nprobe: Int, recall: Double, fraction: Double)
 
   /** PROMOTION-GATE ESCALATION (round 20, the r19 verdict's ask #1) —
@@ -1169,8 +942,8 @@ object Similarity {
     * draw; this ladder is what a deployment does about it. Measures the
     * canary at the auto geometry (head of the result, its RESOLVED
     * probe budget named), then while recall sits under `floor`, grows
-    * the budget ×7/6 per rung through the SAME [[ivfTopK]] dispatch
-    * production serves, re-measuring recall AND scanned fraction each
+    * the budget ×7/6 per rung through the SAME [[ivfTopK]] serve
+    * production takes, re-measuring recall AND scanned fraction each
     * rung. Terminates when a rung clears the floor, when the measured
     * fraction exits the [[ServedFractionBound]] budget (escalating past
     * it would quietly convert the index into a linear scan), or after
@@ -1190,29 +963,17 @@ object Similarity {
       startNprobe: Int = 0,
       onStep: CanaryStep => Unit = _ => ()): Seq[CanaryStep] = {
     val (brute, denom) = bruteReference(spark, dir, k, nProbes, "canaryEscalate")
-    val n = corpusCount(spark, dir)
-    val twoLevel = autoSearchCells(n)._2 > 1
-    // total budget of the auto index (cells / lists): the ladder clamps
-    // here — a rung past it is not an escalation, it IS the exhaustive
-    // scan, and the resolvers reject it loudly by contract
-    val maxBudget: Int =
-      if (twoLevel) {
-        val (l1, l2) = autoSearchCells(n)
-        math.min(Int.MaxValue.toLong, l1.toLong * l2).toInt
-      } else resolveGeometry(spark, dir, 0, 0)._1
+    // the auto index's list count clamps the ladder — a rung past it is
+    // not an escalation, it IS the exhaustive scan, and the resolver
+    // rejects it loudly by contract
+    val (maxBudget, autoNprobe, _) = resolveGeometry(spark, dir, 0, 0)
     val npStart =
-      if (startNprobe > 0) math.min(startNprobe, maxBudget)
-      else if (twoLevel) {
-        val (l1, l2) = autoSearchCells(n)
-        ivf2AutoNprobe(l1.toLong * l2)
-      } else resolveGeometry(spark, dir, 0, 0)._2
+      if (startNprobe > 0) math.min(startNprobe, maxBudget) else autoNprobe
     def measure(np: Int): CanaryStep = {
       val served = ivfTopK(spark, dir, k, nProbes, nprobe = np)
         .select("query_id", "neighbor_id")
       val rec = brute.join(served, Seq("query_id", "neighbor_id")).count() / denom
-      val frac =
-        if (twoLevel) ivf2ScannedFraction(spark, dir, nProbes, nprobe = np)
-        else ivfScannedFraction(spark, dir, nProbes, nprobe = np)
+      val frac = ivfScannedFraction(spark, dir, nProbes, nprobe = np)
       val step = CanaryStep(np, rec, frac)
       onStep(step)
       step
@@ -1221,9 +982,9 @@ object Similarity {
     while (steps.last.recall < floor && steps.size <= maxSteps &&
         withinServedBudget(steps.last.fraction) &&
         steps.last.nprobe < maxBudget) {
-      // ×7/6 (ceil, always +1 at least): two in-budget rungs fit between
-      // the 6%-of-cells auto point and the 0.105 fraction bound, so the
-      // ladder explores the whole promotion budget before rejecting
+      // ×7/6 (ceil, always +1 at least): small rungs, so the ladder
+      // explores the promotion budget before the 0.105 fraction bound
+      // rejects the draw
       val next = math.min(maxBudget.toLong,
         math.max(steps.last.nprobe + 1L, (steps.last.nprobe * 7L + 5) / 6)).toInt
       steps :+= measure(next)
@@ -1350,25 +1111,17 @@ object Similarity {
       nprobe: Int = 0,
       trainFraction: Double = 0.0,
       trainIters: Int = 5): DataFrame = {
-    // past the 65536-list cap-bind point the auto geometry routes to the
-    // two-level residual index ([[autoSearchCells]] — never on a corpus
-    // this repo materializes, so every existing oracle/spec rides the
-    // single-level path unchanged); explicit nlist pins stay single-level
-    if (nlist == 0 && autoSearchCells(corpusCount(spark, dir))._2 > 1)
-      return ivfTopKTwoLevel(spark, dir, k, nProbes,
-        nprobe = nprobe, trainFraction = trainFraction, trainIters = trainIters)
     val (idx, rp) =
       servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
     ivfSearch(selectProbeLists(indexProbes(idx.lists, nProbes), idx.centroids, rp),
       idx.lists, k)
   }
 
-  /** The inverted-list search every IVF top-k shares — in-session
-    * ([[ivfTopK]]), persisted ([[ivfTopKSaved]]) and two-level
-    * ([[ivfTopKTwoLevel]]): scan only the `(query_id, unit_q, list_id)`
-    * cells the caller selected, own row excluded, and keep the cosine
-    * top-k. The serving logic must not depend on where the index frames
-    * came from or which quantizer picked the cells. */
+  /** The inverted-list search both IVF top-ks share — in-session
+    * ([[ivfTopK]]) and persisted ([[ivfTopKSaved]]): scan only the
+    * `(query_id, unit_q, list_id)` cells the caller selected, own row
+    * excluded, and keep the cosine top-k. The serving logic must not
+    * depend on where the index frames came from. */
   private def ivfSearch(probeCells: DataFrame, lists: DataFrame, k: Int): DataFrame =
     cosTopK(probeCells.join(lists, "list_id")
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -1437,28 +1190,6 @@ object Similarity {
   }
   private val savedIvfMemo = new graft.SessionMemo[String]()
 
-  /** The measurement both scanned fractions ([[ivfScannedFraction]],
-    * [[ivf2ScannedFraction]]) share: distance evaluations over the
-    * selected `cells` ÷ probes × (index rows − 1). Candidates are counted
-    * over the SAME join the search runs — selected inverted lists, own
-    * row excluded in numerator AND denominator — so the numerator is the
-    * number of distance evaluations, not a list-size approximation; the
-    * index row count (zero-norm rows never enter the index) is the
-    * brute-force denominator, not the raw table count (round-16 ADVICE:
-    * the raw-count denominator was biased by zero-norm rows and the
-    * discarded self-match). */
-  private def scannedFraction(
-      probes: DataFrame, cells: DataFrame, lists: DataFrame, what: String): Double = {
-    val nP = probes.count()
-    require(nP > 0, s"$what: no probe vectors below the probe-id cutoff")
-    val evaluated = cells
-      .join(lists.select("list_id", "neighbor_id"), "list_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .count()
-    val idxRows = lists.count()
-    evaluated.toDouble / (nP.toDouble * math.max(1L, idxRows - 1))
-  }
-
   /** MEASURED scanned fraction of the IVF search at the given (or auto)
     * geometry: distance evaluations the search actually performs
     * (candidate rows inside the selected inverted lists, own row
@@ -1468,7 +1199,14 @@ object Similarity {
     * can hide an index whose "approximate" search scans most of the
     * corpus (the round-14 geometry did exactly that at a constant 3/8).
     * Measured, not nprobe/nlist: skewed list sizes and probe placement
-    * make the true fraction differ from the count ratio. */
+    * make the true fraction differ from the count ratio. Candidates are
+    * counted over the SAME join the search runs — selected inverted
+    * lists, own row excluded in numerator AND denominator — so the
+    * numerator is the number of distance evaluations, not a list-size
+    * approximation; the index row count (zero-norm rows never enter the
+    * index) is the brute-force denominator, not the raw table count
+    * (round-16 ADVICE: the raw-count denominator was biased by
+    * zero-norm rows and the discarded self-match). */
   def ivfScannedFraction(
       spark: SparkSession,
       dir: String,
@@ -1480,9 +1218,15 @@ object Similarity {
     val (idx, rp) =
       servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
     val probes = indexProbes(idx.lists, nProbes)
-    val frac = scannedFraction(probes,
-      selectProbeLists(probes, idx.centroids, rp), idx.lists,
-      s"ivfScannedFraction($dir)")
+    val nP = probes.count()
+    require(nP > 0,
+      s"ivfScannedFraction($dir): no probe vectors below the probe-id cutoff")
+    val evaluated = selectProbeLists(probes, idx.centroids, rp)
+      .join(idx.lists.select("list_id", "neighbor_id"), "list_id")
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .count()
+    val idxRows = idx.lists.count()
+    val frac = evaluated.toDouble / (nP.toDouble * math.max(1L, idxRows - 1))
     // round-18 (r17 ADVICE): the bisection calibrates on content-hash
     // probes while THIS number measures the id<10 evaluation probes —
     // when the two diverge past the calibrated target, say so on stderr
@@ -1526,7 +1270,6 @@ object Similarity {
     pqMemo.clearSession(spark)
     pqListedMemo.clearSession(spark)
     ivfMemo.clearSession(spark)
-    ivf2Memo.clearSession(spark)
     geomMemo.clearSession(spark)
     savedIvfMemo.clearSession(spark)
     nprobeMemo.clearSession(spark)
@@ -1621,13 +1364,14 @@ object Similarity {
     * (codebooks trained per subspace by deterministic driver-local
     * Lloyd's k-means on a bounded key-ordered sample —
     * [[trainSubCodebook]], index built once per session via
-    * [[pqIndex]]). Search is the FAISS-standard two-level shape: the
+    * [[pqIndex]]). Search is the FAISS-standard IVFADC shape: the
     * coarse quantizer ([[ivfIndex]], shared with [[ivfTopK]]) gates the
     * ADC scan to `nprobe` inverted lists, probes rank the gated
     * candidates by asymmetric distance (per-subspace lookup-table
     * sums), keep `rerank` finalists, and exact cosine re-ranks the
     * finalists. Both stages are sub-linear per probe: ADC touches
-    * nprobe·(n/nlist) ≈ O(√n) code rows, the exact rerank a CONSTANT
+    * nprobe·(n/nlist) ≈ O(√n) code rows up to the 65536-list cap
+    * ([[autoSearchNlist]], ~1.05M vectors), the exact rerank a CONSTANT
     * [[autoRerank]] budget — the former design (full-corpus ADC scan +
     * ⌈n/8⌉ rerank) was linear in n per probe at both stages. 256-entry
     * codebooks (8-bit, the standard trade) keep ADC sharp enough that
@@ -1636,8 +1380,10 @@ object Similarity {
     *
     * Scale story: the corpus is stored as nSub bytes per vector (32×
     * less than float32 dims at the 8-bit default), the coarse gate
-    * shrinks as nlist grows with √n, and the exact rerank touches only
-    * `rerank` rows per probe. The approximate stage is rows-only
+    * shrinks as nlist grows with √n until the list cap binds (past it
+    * the ADC share is held by the same measured-fraction nprobe and
+    * served-fraction gate as [[ivfTopK]]), and the exact rerank touches
+    * only `rerank` rows per probe. The approximate stage is rows-only
     * checked; the spec asserts recall vs [[bruteTopK]], and the
     * historical SCALEBENCH artifacts record recall@5 WITH the measured
     * scanned fraction. */
@@ -1658,16 +1404,6 @@ object Similarity {
     val rs = if (nSub > 0) nSub else autoNSub(dim)
     require(rs >= 1 && dim % rs == 0,
       s"pqTopK: nSub=$rs must divide the $dim-dim embedding exactly")
-    // past the 65536-list cap-bind point the auto geometry swaps the
-    // coarse gate for the two-level residual cell cut, exactly like
-    // [[ivfTopK]]'s dispatch (round 18, closing the r17 verdict's
-    // "PQ has no route past the cap-bind point"): without it, pqTopK's
-    // single-level gate saturates at the cap past ~1.05M vectors and
-    // its per-probe ADC fraction stops tracking √n. Explicit nlist pins
-    // stay single-level, so every existing oracle/spec is unchanged.
-    if (nlist == 0 && autoSearchCells(corpusCount(spark, dir))._2 > 1)
-      return pqTopKTwoLevel(spark, dir, k, nProbes, nSub, nCodes, rerank,
-        nprobe = nprobe)
     val subDim = dim / rs
     val (ivf, rp) = servedIvf(spark, dir, nlist, nprobe, 0.0, 5)
     val rr = if (rerank > 0) rerank else autoRerank(k)
@@ -1689,75 +1425,7 @@ object Similarity {
         .localCheckpoint(true)
     }
     val probes = indexProbes(ivf.lists, nProbes)
-    val probeCells = selectProbeLists(probes, ivf.centroids, rp)
-    pqAdcServe(probes, probeCells, codesListed,
-      ivf.lists.select(col("neighbor_id"), col("unit_c")),
-      pq.codebookBc, rs, nCodes, subDim, rr, k)
-  }
-
-  /** [[pqTopK]] with the TWO-LEVEL residual coarse gate — the IVFADC
-    * twin of [[ivfTopKTwoLevel]] (round 18): identical PQ codebook,
-    * ADC ranking and constant exact rerank, but the cell cut comes
-    * from [[ivf2SelectCells]] over the (l1, l2) residual index instead
-    * of the capped single-level quantizer, so the per-probe ADC
-    * fraction keeps tracking √n past the 65536-list cap-bind point
-    * (~1.05M vectors) instead of freezing at cap·(n/65536). Routed to
-    * automatically by [[pqTopK]] under auto geometry; never reached on
-    * a corpus this repo materializes (fixture geometries are
-    * spec-forced, the 5M staged corpus measures the shipped dispatch). */
-  def pqTopKTwoLevel(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 5,
-      nProbes: Int = 10,
-      nSub: Int = 0,
-      nCodes: Int = 256,
-      rerank: Int = 0,
-      l1: Int = 0,
-      l2: Int = 0,
-      nprobe: Int = 0): DataFrame = {
-    val dim = embeddingDim(spark, dir)
-    val rs = if (nSub > 0) nSub else autoNSub(dim)
-    require(rs >= 1 && dim % rs == 0,
-      s"pqTopKTwoLevel: nSub=$rs must divide the $dim-dim embedding exactly")
-    val subDim = dim / rs
-    val rr = if (rerank > 0) rerank else autoRerank(k)
-    val (idx, rl1, rl2, rp) = ivf2Resolve(spark, dir, l1, l2, nprobe, 0.0, 5)
-    val pq = pqIndex(spark, dir, rs, nCodes)
-    // same ingest-time attachment as the single-level path; the "2L"
-    // key term keeps a forced-geometry fixture from serving the
-    // single-level attachment of the same (dir, rs, nCodes)
-    val codesListed = pqListedMemo.getOrCompute(spark,
-        s"$dir|$rs|$nCodes|2L|$rl1|$rl2") {
-      pq.codes
-        .join(idx.lists.select(col("neighbor_id"), col("list_id")), "neighbor_id")
-        .localCheckpoint(true)
-    }
-    val probes = indexProbes(idx.lists, nProbes)
-    val cells = ivf2SelectCells(idx, probes, rl1, rl2, rp)
-    pqAdcServe(probes, cells, codesListed,
-      idx.lists.select(col("neighbor_id"), col("unit_c")),
-      pq.codebookBc, rs, nCodes, subDim, rr, k)
-  }
-
-  /** The IVFADC serve tail shared by [[pqTopK]] (single-level gate) and
-    * [[pqTopKTwoLevel]] (residual-cell gate): ADC-rank the gated
-    * candidates per probe, keep `rr` finalists, exact-cosine rerank.
-    * `probeCells` is the coarse cut — (query_id, unit_q, list_id) rows
-    * naming exactly the inverted lists each probe scans — so the gate
-    * choice lives entirely in the caller and the ranking/rerank
-    * semantics cannot drift between the two routes. */
-  private def pqAdcServe(
-      probes: DataFrame,
-      probeCells: DataFrame,
-      codesListed: DataFrame,
-      exact: DataFrame,
-      bcCb: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
-      rs: Int,
-      nCodes: Int,
-      subDim: Int,
-      rr: Int,
-      k: Int): DataFrame = {
+    val bcCb = pq.codebookBc
     import org.apache.spark.sql.types._
     val adcSchema = StructType(Seq(
       StructField("query_id", LongType),
@@ -1767,7 +1435,8 @@ object Similarity {
     // Probes score gated candidates by ADC: sum over subspaces of the
     // exact distance from the probe's subvector to the candidate's
     // codeword.
-    val cands = probeCells.join(codesListed, "list_id")
+    val cands = selectProbeLists(probes, ivf.centroids, rp)
+      .join(codesListed, "list_id")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("unit_q"), col("neighbor_id"), col("codes"))
       .mapPartitions { it =>
@@ -1803,7 +1472,7 @@ object Similarity {
     // from the inverted lists (rr rows per probe, never the corpus).
     cosTopK(finalists
       .join(probes, "query_id")
-      .join(exact, "neighbor_id")
+      .join(ivf.lists.select(col("neighbor_id"), col("unit_c")), "neighbor_id")
       .withColumn("cos_raw", dot("unit_q", "unit_c")), k)
   }
 
@@ -1834,19 +1503,16 @@ object Similarity {
   private[graft] def autoRerank(k: Int): Int = math.max(256, 32 * k)
 
   /** ONE bound for every served-vs-calibrated fraction surface (the
-    * canary ladder and both measurement warnings, via
+    * canary ladder and the [[ivfScannedFraction]] warning, via
     * [[withinServedBudget]]), so a retarget of the 0.098 budget cannot
-    * desynchronize them: the 0.098 calibrated
-    * target + 0.007 divergence allowance for the id<10 evaluation
-    * probes. The single-level target is bisection-calibrated
-    * ([[measuredNprobeOf]]); the two-level auto nprobe is the fixed
-    * 6%-of-cells rule — both serve under the same ≤10% done-bar this
-    * bound polices. */
+    * desynchronize them: the 0.098 calibrated target
+    * ([[measuredNprobeOf]]) + 0.007 divergence allowance for the id<10
+    * evaluation probes, under the ≤10% done-bar. */
   private[graft] val ServedFractionBound = 0.105
 
   /** Whether a measured served fraction stays inside
     * [[ServedFractionBound]] — the one comparison the canary ladder and
-    * both scanned-fraction warnings share. */
+    * the scanned-fraction warning share. */
   private[graft] def withinServedBudget(frac: Double): Boolean =
     frac <= ServedFractionBound
 

@@ -130,14 +130,14 @@ object Sketches {
     * re-read, merge from the STORED bytes. One copy shared by the plain
     * and bounded saved variants (round-19 review). */
   private def savedMerge(spark: SparkSession, daily: DataFrame): DataFrame = {
-    val tmp = Scratch.dir(spark, "hll_sketches") // per-process root — see Scratch
+    val tmp = Scale.scratchDir("graft_hll_sketches")
     daily.write.mode("overwrite").parquet(s"$tmp/daily")
     val out = spark.read.parquet(s"$tmp/daily")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
         hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_users"))
       .localCheckpoint(true)
-    Scratch.delete(tmp)
+    Scale.deleteScratch(tmp)
     out
   }
 

@@ -690,54 +690,6 @@ object SqlInterface {
   }
 }
 
-/** Driver-local scratch for sink/source round-trips: one fixed root under
-  * java.io.tmpdir so repeated bench runs reuse (never leak) disk; callers
-  * delete their subdir once the round-trip result is materialized (the
-  * eager localCheckpoint of the join makes deletion safe).
-  */
-private[operators] object Scratch {
-  // Per-PROCESS root: two concurrent drivers running the same round-trip
-  // query must not overwrite/delete each other's scratch files mid-read
-  // (the subdir names are query-fixed: 'csv', 'fmt', 'hll_sketches').
-  // Within one JVM the root is stable, so repeated bench runs reuse the
-  // same dirs; callers still delete their subdir once the round-trip
-  // result is materialized, so per-process roots don't accumulate data.
-  private val root =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_scratch_p${ProcessHandle.current().pid()}")
-
-  // Per-process roots are unique forever, so a crash between dir() and
-  // the caller's delete would strand data no later run reclaims (the old
-  // fixed root was clobbered by the next run). Normal JVM exits sweep
-  // the whole root here; a kill -9 still leaks, which the fixed-name
-  // scheme also did.
-  Runtime.getRuntime.addShutdownHook(new Thread(() => delete(root.toString)))
-
-  /** Session-scoped subdir: the per-process root defends against
-    * cross-process races, but two SESSIONS in one JVM (Thrift/Connect —
-    * a target [[graft.SessionMemo]] explicitly supports) running the
-    * same round-trip query would share a query-fixed name and delete
-    * each other's files between write and re-read. */
-  def dir(spark: org.apache.spark.sql.SparkSession, name: String): String = {
-    val sid = org.apache.spark.sql.graft.ColumnBridge.sessionUUID(spark)
-    val p = root.resolve(s"${sid}_$name")
-    java.nio.file.Files.createDirectories(p)
-    p.toString
-  }
-
-  def delete(path: String): Unit = {
-    import java.nio.file._
-    val p = Paths.get(path)
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      } finally walk.close()
-    }
-  }
-}
-
 /** CSV source/sink parity (reference S1/S2/S5 —
   * `/root/reference/utils/kmeans_utils.py:28-46,112-130`): declared-schema
   * CSV read, inferred-schema CSV read, and a CSV round-trip through a sink.
@@ -762,7 +714,7 @@ object CsvIo {
     val stats = Relational.userStats(spark, dir)
       .withColumn("last_seen",
         timestamp_seconds(lit(1100000000L) + col("custkey")))
-    val tmp = Scratch.dir(spark, "csv")
+    val tmp = Scale.scratchDir("graft_csv")
     // repartition(1), NOT coalesce(1): coalesce propagates upstream and
     // would collapse the whole join+agg pipeline into a single task; the
     // round-robin exchange keeps upstream parallel and only the final
@@ -789,7 +741,7 @@ object CsvIo {
       .join(s2, Seq("custkey", "avg_buy", "min_buy", "max_buy", "last_seen"))
       .withColumn("last_seen", unix_timestamp(col("last_seen")))
       .localCheckpoint(true)
-    Scratch.delete(tmp)
+    Scale.deleteScratch(tmp)
     joined
   }
 
@@ -803,7 +755,7 @@ object CsvIo {
   def formatRoundTrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val stats = Relational.userStats(spark, dir)
-    val tmp = Scratch.dir(spark, "fmt")
+    val tmp = Scale.scratchDir("graft_fmt")
     // Cache once: without it the agg pipeline re-runs per sink (two full
     // recomputes); repartition(1) keeps each sink to one file so the
     // re-reads list one object instead of 32 shuffle-partition files.
@@ -819,7 +771,7 @@ object CsvIo {
       val o = spark.read.schema(declared).orc(s"$tmp/stats_orc")
       j.join(o, Seq("custkey", "avg_buy", "min_buy", "max_buy"))
     }
-    Scratch.delete(tmp)
+    Scale.deleteScratch(tmp)
     out
   }
 }

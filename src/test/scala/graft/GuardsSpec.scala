@@ -125,7 +125,7 @@ class GuardsSpec extends SparkSpec {
     // edge: the calibrated 0.098 target + 0.007 allowance for the
     // served (id<10) probes
     assert(Similarity.withinServedBudget(0.098)) // the calibrated target
-    assert(Similarity.withinServedBudget(0.065)) // the committed 5M point
+    assert(Similarity.withinServedBudget(0.065)) // a historical 5M-vector reading
     assert(Similarity.withinServedBudget(0.105)) // the allowance edge
     assert(!Similarity.withinServedBudget(0.106))
   }
@@ -166,6 +166,13 @@ class GuardsSpec extends SparkSpec {
     assert(!sim.contains("memoKey"), "a caller-supplied memo key is back in Similarity")
     assert(count(sim, """orderBy(col("cos_raw").desc, col("neighbor_id").asc)""") == 1,
       "the cosine top-k window must be declared once")
+    // one coarse quantizer: every IVF and PQ serve goes through IvfIndex
+    val coarse = sources.flatMap { case (_, src) =>
+      """case class (Ivf\w*Index)\b""".r.findAllMatchIn(src).map(_.group(1)) }
+    assert(coarse == Seq("IvfIndex"), s"coarse-index case classes: $coarse")
+    val twoLevel = sources.filter { case (_, src) =>
+      """(?i)TwoLevel|ivf2""".r.findFirstIn(src).nonEmpty }.map(_._1)
+    assert(twoLevel.isEmpty, s"a two-level ANN symbol is back in $twoLevel")
   }
 
   test("pair miners keep one postings, one prefix rule and one cosine verify tail") {
