@@ -91,7 +91,7 @@ object SparkEntry {
     "q_hot_shingles" -> ((s: SparkSession, d: String) => Dedup.hotShingleProfile(s, d)),
     "q_blocking_cost" -> ((s: SparkSession, d: String) => Dedup.blockingCost(s, d)),
     "q_dedup_summary" -> Dedup.dedupSummary _,
-    "q_dedup_embedding" -> ((s: SparkSession, d: String) => Dedup.embeddingPairsShared(s, d, 0.4)),
+    "q_dedup_embedding" -> ((s: SparkSession, d: String) => Dedup.embeddingPairs(s, d, 0.4)),
     "q_dedup_embedding_tight" -> ((s: SparkSession, d: String) => Dedup.tightEmbeddingPairs(s, d)),
     "q_dedup_embedding_clusters" -> ((s: SparkSession, d: String) => Dedup.embeddingClusters(s, d, 0.4)),
     // similarity search (north-star extension)

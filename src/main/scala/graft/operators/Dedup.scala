@@ -409,7 +409,7 @@ object Dedup {
       .unionAll(one("simhash", simhashPairs(spark, dir)))
       .unionAll(one("ngram", ngramJaccardPairs(spark, dir)))
       .unionAll(one("containment", containmentPairs(spark, dir)))
-      .unionAll(one("embedding", embeddingPairsShared(spark, dir, 0.4)))
+      .unionAll(one("embedding", embeddingPairs(spark, dir, 0.4)))
   }
 
   /** BLOCKING-COST LEDGER for the shingle inverted index — the numbers
@@ -950,70 +950,47 @@ object Dedup {
 
   // ---- embedding near-dup --------------------------------------------
 
-  /** Embedding cosine near-dup pairs — exact all-pairs within the corpus.
+  private val embPairsMemo = new graft.SessionMemo[DataFrame]()
+
+  /** Embedding cosine near-dup pairs — exact all-pairs within the corpus,
+    * built ONCE per (session, dir, threshold) and shared by the pair
+    * query, [[embeddingClusters]], the dedup dashboard and the LSH recall
+    * audit — the "compute the similarity graph once" step of a
+    * semantic-dedup pipeline; the materialized frame holds only the
+    * thresholded pairs, not the candidate set.
     *
     * The quadratic pair scan is NOT an accident here: at a low threshold
     * (0.4) on a weakly-clustered embedding space, exact pair mining is
     * Ω(n²) — measured on this corpus, member→centroid angles are ~70°
-    * against arccos(0.4) ≈ 66°, so the triangle-inequality bound prunes
-    * NOTHING ([[Similarity.prunedEmbeddingPairs]], survival 1.0) and
-    * exhaustive hyperplane banding is equally impossible (near-boundary
-    * band-collision degenerates to all-pairs). Every EXACT engine,
-    * including the DuckDB oracle, pays the same n² — so this formulation
-    * makes it fast rather than pretending to avoid it: codegen'd dot on
-    * predeclared norms, and the left side repartitioned so the cross
-    * join parallelizes across the cluster instead of planning as a
-    * single 1×1-partition task (measured 32× task-parallelism win).
-    * At 100 TB the semantics themselves must change — the documented
-    * swap-ins are the recall-floored LSH miner
-    * ([[Similarity.lshEmbeddingPairs]]), ANN top-k ([[Similarity]]), or
-    * a tight-dup threshold where [[Similarity.prunedEmbeddingPairs]]'s
-    * geometric pruning engages. */
-  def embeddingPairs(spark: SparkSession, dir: String, threshold: Double = 0.45): DataFrame = {
-    // Norms are computed ONCE per vector, not per pair (3× fewer array
-    // folds); cos = dot/(na·nb) is bit-identical to the oracle formula.
-    // Zero-norm vectors are DROPPED (round 15, engine-wide cosine
-    // semantics): their 0/0 = NaN cosine orders above every double in
-    // Spark, so `NaN >= threshold` would emit bogus pairs — and the
-    // pruned/banded fast paths already exclude them via the index, so
-    // keeping them here would let the survival-gated routing change
-    // RESULTS instead of only cost. Mirrored in the oracle.
-    val e = Similarity.withNorms(Similarity.corpus(spark, dir))
-    val vec = Seq("emb_d", "nrm")
-    Similarity.cosineVerified(
-      pairSide(e.repartition(col("vec_id")), "a", "vec_id", vec)
-        .crossJoin(pairSide(e, "b", "vec_id", vec))
-        .filter(col("id_a") < col("id_b")),
-      threshold)
-  }
-
-  private val embPairsMemo = new graft.SessionMemo[DataFrame]()
-
-  /** The cosine pair graph, built ONCE per (session, dir, threshold) and
-    * shared by the pair query, [[embeddingClusters]], and the dedup
-    * dashboard — the "compute the similarity graph once" step of a
-    * semantic-dedup pipeline; the materialized frame holds only the
-    * thresholded pairs, not the candidate set.
-    *
-    * THRESHOLD-AWARE ROUTING, decided by measurement instead of a guess:
-    * [[Similarity.bucketPairSurvival]] asks (one k²-row aggregate over
-    * the memoized IVF geometry) what fraction of bucket pairs the
-    * triangle-inequality bound would prune at this threshold. When most
-    * bucket pairs are eliminated (survival ≤ 0.5) the EXACT pruned join
-    * ([[Similarity.prunedEmbeddingPairs]]) carries the graph — no
-    * corpus-wide cross join; when the corpus is too weakly clustered for
-    * ANY exact method to prune (this repo's synthetic embeddings at 0.4:
-    * measured survival 1.0), the parallelized exact scan
-    * ([[embeddingPairs]] — see its docstring for why that regime is
-    * Ω(n²) for every engine) runs instead. Both paths are bit-identical
-    * (spec-pinned), so routing moves cost, never results. */
-  def embeddingPairsShared(spark: SparkSession, dir: String, threshold: Double): DataFrame =
+    * against arccos(0.4) ≈ 66°, so a triangle-inequality bound over IVF
+    * buckets prunes NOTHING (measured bucket-pair survival 1.0 at
+    * sf0.001, sf0.01 and sf0.1) and exhaustive hyperplane banding is
+    * equally impossible (near-boundary band-collision degenerates to
+    * all-pairs). Every EXACT engine, including the DuckDB oracle, pays
+    * the same n² — so this formulation makes it fast rather than
+    * pretending to avoid it: codegen'd dot on predeclared norms, and the
+    * left side repartitioned so the cross join parallelizes across the
+    * cluster instead of planning as a single 1×1-partition task
+    * (measured 32× task-parallelism win). At 100 TB the semantics
+    * themselves must change — the documented swap-ins are the
+    * recall-floored LSH miner ([[Similarity.lshEmbeddingPairs]]) or ANN
+    * top-k ([[Similarity]]). */
+  def embeddingPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame =
     embPairsMemo.getOrCompute(spark, s"$dir|$threshold") {
-      val survival = Similarity.bucketPairSurvival(spark, dir, threshold)
-      val pairs =
-        if (survival <= 0.5) Similarity.prunedEmbeddingPairs(spark, dir, threshold)
-        else embeddingPairs(spark, dir, threshold)
-      pairs.localCheckpoint(true)
+      // Norms are computed ONCE per vector, not per pair (3× fewer array
+      // folds); cos = dot/(na·nb) is bit-identical to the oracle formula.
+      // Zero-norm vectors are DROPPED (round 15, engine-wide cosine
+      // semantics): their 0/0 = NaN cosine orders above every double in
+      // Spark, so `NaN >= threshold` would emit bogus pairs, and the
+      // banded miner excludes them too. Mirrored in the oracle.
+      val e = Similarity.withNorms(Similarity.corpus(spark, dir))
+      val vec = Seq("emb_d", "nrm")
+      Similarity.cosineVerified(
+        pairSide(e.repartition(col("vec_id")), "a", "vec_id", vec)
+          .crossJoin(pairSide(e, "b", "vec_id", vec))
+          .filter(col("id_a") < col("id_b")),
+        threshold)
+        .localCheckpoint(true)
     }
 
   /** Deterministic 3-view AUGMENTED corpus over `embeddings` — THREE
@@ -1065,8 +1042,8 @@ object Dedup {
       nBits = 768, nBands = 32)
 
   /** SEMANTIC-DEDUP CLUSTERS — the SemDeDup-style end of the embedding
-    * near-dup path: connected components over the cosine pair graph
-    * ([[embeddingPairs]]), rolled up per cluster with member count,
+    * near-dup path: connected components over the memoized exact cosine
+    * pair graph ([[embeddingPairs]]), rolled up per cluster with member count,
     * dropped count (keep-one semantics), and distinct-label count (a
     * purity signal: a cluster spanning several labels marks embeddings
     * that collapse classes — exactly what a curation pass inspects
@@ -1076,7 +1053,7 @@ object Dedup {
     * the text path uses. */
   def embeddingClusters(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
     val comp = minLabelComponents(
-      embeddingPairsShared(spark, dir, threshold).select("id_a", "id_b"))
+      embeddingPairs(spark, dir, threshold).select("id_a", "id_b"))
     comp.join(
         Tables.load(spark, dir, "embeddings")
           .select(col("vec_id").as("id"), col("label")), "id")

@@ -127,9 +127,9 @@ object Similarity {
     * 2⁻²⁴ random collisions, sub-linear measured ratio). The width is
     * threshold-bound: at θ ≈ 66° wide bands gut recall (p²⁴ ≈ 1.6e-5),
     * so a 100 TB LOOSE-threshold semantic dedup cannot ride hyperplane
-    * banding alone — it routes through IVF-clustered candidate
-    * generation ([[prunedEmbeddingPairs]] and the survival-gated
-    * [[Dedup.embeddingPairsShared]]) or accepts per-shard exactness.
+    * banding alone — it needs ANN top-k candidates ([[ivfTopK]]) or
+    * accepts per-shard exactness; no exact method prunes there (see
+    * [[Dedup.embeddingPairs]]).
     * This function stays the loose-threshold default because at the
     * recall floor it is measurably the cheapest correct config at test
     * scale, and its candidate volume is the documented trade.
@@ -205,7 +205,7 @@ object Similarity {
     * count at `threshold` (DuckDB-recomputable — the q_dedup_embedding
     * dialect) plus a recall-floor boolean over the banded miner's
     * pairs. The exact half rides the session-memoized
-    * [[Dedup.embeddingPairsShared]] frame, so in-session it costs one
+    * [[Dedup.embeddingPairs]] frame, so in-session it costs one
     * localCheckpoint read, and at 100 TB it is promotion-time audit
     * scaffolding — the banded miner ([[lshEmbeddingPairs]]) carries the
     * query. Floor provenance: measured recall at the registered 192×32
@@ -216,7 +216,7 @@ object Similarity {
   def lshRecallBounded(
       spark: SparkSession, dir: String,
       threshold: Double = 0.4, floor: Double = 0.8): DataFrame = {
-    val exact = Dedup.embeddingPairsShared(spark, dir, threshold)
+    val exact = Dedup.embeddingPairs(spark, dir, threshold)
       .select("id_a", "id_b")
     val mined = lshEmbeddingPairs(corpus(spark, dir), threshold)
       .select(col("id_a"), col("id_b"), lit(1).as("hit"))
@@ -228,116 +228,6 @@ object Similarity {
         (coalesce(avg(when(col("hit").isNotNull, 1.0).otherwise(0.0)),
           lit(1.0)) >= floor).as("recall_floor_met"))
   }
-
-  /** EXACT centroid-pruned cosine pair join — triangle-inequality
-    * pruning over IVF buckets, bit-identical to the brute-force pairs
-    * (spec-pinned at two thresholds).
-    *
-    * Shape: vectors are bucketed by the memoized IVF coarse quantizer
-    * ([[ivfIndex]]); each bucket gets an angular radius r = max angle to
-    * its (unit) centroid. For bucket pair (A, B) the triangle inequality
-    * on angles gives θ(a,b) ≥ θ(cA,cB) − rA − rB for every a∈A, b∈B —
-    * so any bucket pair whose lower bound exceeds arccos(threshold) is
-    * pruned WHOLE, provably containing no qualifying pair; survivors are
-    * re-tested PER MEMBER PAIR (θ(cA,cB) − θ(a,cA) − θ(b,cB) ≤ θmax) on
-    * a skinny (id, id, angle) stream before any vector is fetched, so a
-    * single outlier member can't re-admit its whole bucket. Pruning uses
-    * a 1e-9 slack on the angle bound so float rounding can only ADD
-    * candidates, never drop a qualifying pair.
-    *
-    * APPLICABILITY — measured honestly: pruning engages only when the
-    * corpus clusters tightly relative to the threshold, i.e. typical
-    * member→centroid angles ≪ arccos(threshold). On this repo's
-    * synthetic embeddings at threshold 0.4 that condition FAILS (member
-    * angles ≈ 70° vs θmax ≈ 66° — measured survival 1.0), and no exact
-    * method can do better there: a low-threshold exact pair join over a
-    * weakly-clustered space is Ω(n²) for every engine (exhaustive LSH
-    * banding degenerates identically). The oracled dedup queries
-    * therefore run the parallelized exact scan
-    * ([[Dedup.embeddingPairs]]), and this operator is the exact
-    * FAST PATH for the tight-cluster regime (real near-dup corpora at
-    * dup-grade thresholds ≥ 0.8), where bucket pairs prune wholesale and
-    * the plan carries no corpus-wide cross join.
-    *
-    * Bucket count is the work dial: pair work inside a surviving bucket
-    * pair is |A|×|B|, so buckets must stay roughly constant-SIZED as the
-    * corpus grows (√n-ish bucket COUNT), or the join re-approaches n².
-    * nlist=0 (default) auto-scales via [[autoNlist]]. Exactness is
-    * nlist-INDEPENDENT — the triangle-inequality prune is valid for any
-    * partition — so the dial moves only performance, never results. */
-  def prunedEmbeddingPairs(
-      spark: SparkSession, dir: String, threshold: Double,
-      nlist: Int = 0): DataFrame = {
-    val g = prunedGeom(spark, dir, nlist)
-    val memberAng = g.memberAng
-    val thetaMax = math.acos(threshold) + 1e-9
-    // bucket-level cut over the shared [[bucketPairAngles]] frame: drop
-    // pairs the radius bound clears whole; survivors carry the centroid
-    // angle for the member-level refine
-    val keep = bucketPairAngles(g)
-      .filter(col("cang") - col("ra") - col("rb") <= lit(thetaMax))
-      .select("la", "lb", "cang")
-    // Candidate mining is SKINNY (bucket id, vec_id, one double) and the
-    // triangle bound is re-applied PER MEMBER PAIR — θ(a,b) ≥ θ(cA,cB) −
-    // θ(a,cA) − θ(b,cB) — before any vector is fetched. This is the
-    // load-bearing cut: the bucket-level radius is inflated by any single
-    // outlier member (one stray vector re-admits every pair touching its
-    // bucket — measured 60× cold-build blow-up at 10× corpus), while the
-    // member-level bound is exact per pair and immune to it. Each
-    // unordered pair arises from exactly one orientation (id_a rides its
-    // own bucket's side), so no distinct pass is needed.
-    val ma = memberAng.select(col("list_id").as("la"),
-      col("neighbor_id").as("id_a"), col("ang").as("ang_a"))
-    val mb = memberAng.select(col("list_id").as("lb"),
-      col("neighbor_id").as("id_b"), col("ang").as("ang_b"))
-    val cands = ma.join(broadcast(keep), "la").join(mb, "lb")
-      .filter(col("id_a") < col("id_b") &&
-        col("cang") - col("ang_a") - col("ang_b") <= lit(thetaMax))
-      .select("id_a", "id_b")
-    // Exact cosine exactly as the brute baseline computes it (dot/(na·nb)
-    // on raw doubles), so results are bit-identical to the oracle. The
-    // zero-norm drop removes nothing here — candidates come from the
-    // index, which never holds a zero-norm vector.
-    val e = withNorms(corpus(spark, dir))
-    cosineVerified(Dedup.withPayloads(cands, e, e, "vec_id", "emb_d", "nrm"), threshold)
-  }
-
-  /** The bucket geometry the pruned pair join and its applicability gate
-    * share: unit centroids, per-member angle to own centroid, per-bucket
-    * angular radius. Memoized per (dir, k) — the gate measuring survival
-    * and the pruned join that follows must not build it twice. `nlist`
-    * 0 derives k via [[autoNlist]]. */
-  private final case class PrunedGeom(
-    cUnit: DataFrame, memberAng: DataFrame, radii: DataFrame)
-  private val geomMemo = new graft.SessionMemo[PrunedGeom]()
-  private def prunedGeom(spark: SparkSession, dir: String, nlist: Int): PrunedGeom = {
-    val k = if (nlist > 0) nlist else autoNlist(corpusCount(spark, dir))
-    geomMemo.getOrCompute(spark, s"$dir|$k") {
-      val idx = ivfIndex(spark, dir, k, 0.25, 5)
-      val cUnit = idx.centroids
-        .withColumn("cn", sqrt(norm2("centroid")))
-        .withColumn("cu", expr("transform(centroid, x -> x / cn)"))
-        .select("list_id", "cu")
-      // per-member angle to its own (unit) centroid — feeds BOTH the
-      // bucket-level radius cut and the member-level refine
-      val memberAng = idx.lists.join(broadcast(cUnit), "list_id")
-        .withColumn("ang",
-          acos(least(lit(1.0), greatest(lit(-1.0), dot("unit_c", "cu")))))
-        .select("list_id", "neighbor_id", "ang")
-        .localCheckpoint(true)
-      val radii = memberAng.groupBy("list_id").agg(max("ang").as("radius"))
-      PrunedGeom(cUnit, memberAng, radii)
-    }
-  }
-
-  /** Bucket count dial shared by the pruned join and the gate: ~125
-    * vectors per bucket, floor 16 (shares the ANN suite's index at small
-    * scale factors), cap 256 (quantizer training cost bound). */
-  private def autoNlist(n: Long): Int =
-    // cap in LONG before narrowing: (n/125).toInt wraps negative past
-    // ~2.7e11 vectors and the max/min would collapse nlist to 16 —
-    // n²-ish bucket pairs at exactly the scale the dial exists for
-    math.max(16, math.min(256L, n / 125L).toInt)
 
   /** Data-derived IVF SEARCH geometry: `nlist = 2^⌈log2 min(64√n, n/4)⌉`
     * (floor 16, cap 65536 — the centroid table stays ≤ 32 MB at 64-dim,
@@ -390,17 +280,11 @@ object Similarity {
     *   - never above nlist itself. */
   private val nprobeMemo = new graft.SessionMemo[java.lang.Integer]()
   private def autoNprobeMeasured(
-      spark: SparkSession, dir: String, nlist: Int, n: Long,
-      trainFraction: Double, trainIters: Int): Int =
-    // the RESOLVED training params are part of the key (round-16 ADVICE):
-    // a caller pinning trainFraction/trainIters serves an index trained
-    // with them, so the fraction must be measured against THAT index —
-    // and because [[ivfIndex]] memoizes on the same (dir, nlist, tf, ti),
-    // the measurement build below IS the serving index, never an extra
-    // throwaway build
-    nprobeMemo.getOrCompute(spark,
-        s"$dir|nprobe|$nlist|$trainFraction|$trainIters") {
-      val idx = ivfIndex(spark, dir, nlist, trainFraction, trainIters)
+      spark: SparkSession, dir: String, nlist: Int, n: Long): Int =
+    // [[ivfIndex]] memoizes on the same (dir, nlist), so the measurement
+    // build below IS the serving index, never an extra throwaway build
+    nprobeMemo.getOrCompute(spark, s"$dir|nprobe|$nlist") {
+      val idx = ivfIndex(spark, dir, nlist)
       Integer.valueOf(
         measuredNprobeOf(idx.lists, idx.centroids, nlist, n, s"for $dir"))
     }.intValue()
@@ -489,8 +373,8 @@ object Similarity {
     math.max(6, ((512L * nlist + nn - 1) / nn).toInt)
   }
 
-  /** Quantizer TRAINING fraction when the caller does not pin one:
-    * targets ~32 training vectors per centroid (min(1, 32·nlist/n)) —
+  /** Quantizer TRAINING fraction — the one recipe every [[ivfIndex]]
+    * build uses: ~32 training vectors per centroid (min(1, 32·nlist/n)) —
     * the round-14 fixed 25% starved a fine quantizer (4096 lists on a
     * 5 000-row sample is ~1 vector per centroid; measured recall 0.72 →
     * 0.92 at the same scanned fraction once training saw the full
@@ -545,80 +429,34 @@ object Similarity {
     d
   }
 
-  /** Resolve caller-supplied (nlist, nprobe, trainFraction) against the
-    * auto rules: 0 (the default) means derive — an explicit value always
-    * wins, so spec/serving calls can still pin geometry. A lone pinned
-    * `nlist` gets the measured nprobe ([[autoNprobeMeasured]]) of the
-    * PINNED value (never of the auto nlist — mixing the two would produce
-    * an incoherent fraction); a lone pinned `nprobe` resolves nlist from
-    * the data and is validated against it, so an impossible pair fails
-    * loudly instead of silently degenerating to a full scan. The train
-    * fraction resolves once, here ([[autoTrainFraction]] of the resolved
-    * nlist), so the index that measures nprobe IS the index served.
-    * Returns (nlist, nprobe, trainFraction). */
+  /** Resolve caller-supplied (nlist, nprobe) against the auto rules: 0
+    * (the default) means derive — an explicit value always wins, so
+    * spec/serving calls can still pin geometry. A lone pinned `nlist`
+    * gets the measured nprobe ([[autoNprobeMeasured]]) of the PINNED
+    * value (never of the auto nlist — mixing the two would produce an
+    * incoherent fraction); a lone pinned `nprobe` resolves nlist from the
+    * data and is validated against it, so an impossible pair fails
+    * loudly instead of silently degenerating to a full scan. Returns
+    * (nlist, nprobe). */
   private def resolveGeometry(spark: SparkSession, dir: String,
-      nlist: Int, nprobe: Int,
-      trainFraction: Double = 0.0, trainIters: Int = 5): (Int, Int, Double) = {
+      nlist: Int, nprobe: Int): (Int, Int) = {
     // lazy: pinning every param must not pay even the memoized count
     lazy val n = corpusCount(spark, dir)
     val rl = if (nlist > 0) nlist else autoSearchNlist(n)
-    val tf = if (trainFraction > 0) trainFraction else autoTrainFraction(rl, n)
-    val rp = if (nprobe > 0) nprobe
-      else autoNprobeMeasured(spark, dir, rl, n, tf, trainIters)
+    val rp = if (nprobe > 0) nprobe else autoNprobeMeasured(spark, dir, rl, n)
     require(rp <= rl,
       s"IVF geometry: nprobe=$rp exceeds nlist=$rl — pin both params " +
         "coherently (a probe cannot scan more lists than exist)")
-    (rl, rp, tf)
+    (rl, rp)
   }
 
   /** THE IVF handle every serve, measurement and canary rung takes:
     * the index at the resolved geometry ([[resolveGeometry]]) and the
     * resolved nprobe. */
   private def servedIvf(spark: SparkSession, dir: String,
-      nlist: Int, nprobe: Int,
-      trainFraction: Double, trainIters: Int): (IvfIndex, Int) = {
-    val (rl, rp, tf) =
-      resolveGeometry(spark, dir, nlist, nprobe, trainFraction, trainIters)
-    (ivfIndex(spark, dir, rl, tf, trainIters), rp)
-  }
-
-  /** MEASURED applicability gate for [[prunedEmbeddingPairs]]: the
-    * fraction of bucket pairs the triangle-inequality radius bound FAILS
-    * to prune at `threshold`. ~1.0 on a weakly-clustered corpus (pruning
-    * buys nothing — run the parallelized exact scan instead); small on a
-    * tightly-clustered corpus at dup-grade thresholds (the pruned join
-    * wins). A k²-row computation over the memoized index — the cost of
-    * asking is one tiny aggregate, so callers can DECIDE instead of
-    * guessing. */
-  def bucketPairSurvival(
-      spark: SparkSession, dir: String, threshold: Double,
-      nlist: Int = 0): Double = {
-    val g = prunedGeom(spark, dir, nlist)
-    val thetaMax = math.acos(threshold) + 1e-9
-    val r = bucketPairAngles(g)
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("cang") - col("ra") - col("rb") <= lit(thetaMax), 1L)
-          .otherwise(0L)).as("kept"))
-      .head()
-    r.getLong(1).toDouble / math.max(1L, r.getLong(0))
-  }
-
-  /** k×k bucket-pair frame with centroid angle and both radii — shared
-    * by the survival GATE ([[bucketPairSurvival]]) and the pruned
-    * JOIN it gates ([[prunedEmbeddingPairs]]), so the radius bound
-    * the gate measures is definitionally the bound the join applies (an
-    * edit to the clamp or slack in one copy could otherwise silently
-    * desynchronize the routing in `Dedup.embeddingPairsShared`). The
-    * broadcast hint keeps the only cross-shaped node over the k-row
-    * centroid frame, never the corpus. */
-  private def bucketPairAngles(g: PrunedGeom): DataFrame = {
-    val ca = g.cUnit.join(g.radii, "list_id")
-      .select(col("list_id").as("la"), col("cu").as("cua"), col("radius").as("ra"))
-    val cb = g.cUnit.join(g.radii, "list_id")
-      .select(col("list_id").as("lb"), col("cu").as("cub"), col("radius").as("rb"))
-    ca.crossJoin(broadcast(cb))
-      .withColumn("cang",
-        acos(least(lit(1.0), greatest(lit(-1.0), dot("cua", "cub")))))
+      nlist: Int, nprobe: Int): (IvfIndex, Int) = {
+    val (rl, rp) = resolveGeometry(spark, dir, nlist, nprobe)
+    (ivfIndex(spark, dir, rl), rp)
   }
 
   /** kNN LABEL CLASSIFICATION over `embeddings.label` — the semantic
@@ -710,11 +548,8 @@ object Similarity {
       k: Int = 5,
       nProbes: Int = 50,
       nlist: Int = 0,
-      nprobe: Int = 0,
-      trainFraction: Double = 0.0,
-      trainIters: Int = 5): DataFrame = {
-    val (idx, rp) =
-      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
+      nprobe: Int = 0): DataFrame = {
+    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe)
     val labels = Tables.load(spark, dir, "embeddings").select("vec_id", "label")
     val probeLists = selectProbeLists(indexProbes(idx.lists, nProbes), idx.centroids, rp)
     // candidate stage: selected inverted lists only, train vectors only
@@ -811,6 +646,12 @@ object Similarity {
     * draw is caught by [[recallCanary]]. */
   private val TrainSeed = 1L
 
+  /** Lloyd iterations of the quantizer fit — few, because quantizer
+    * quality needs only the density shape, not convergence (the
+    * [[TrainSeed]] ledger: 5, 10 and 15 iterations measured the same
+    * recall). */
+  private val TrainIters = 5
+
   /** Deterministic content-based training sample: keep a row iff the
     * Knuth-style hash of its id lands under fraction·2²⁰ — membership is
     * a pure function of (vec_id, fraction), immune to partition/fetch
@@ -834,27 +675,25 @@ object Similarity {
     * spread corpus ([[normalized]]): without the exchange the whole
     * build AND every list-scan join downstream inherit the scan's single
     * partition on a small staged corpus. */
-  private def ivfIndex(
-      spark: SparkSession, dir: String, nlist: Int,
-      trainFraction: Double, trainIters: Int): IvfIndex =
-    ivfMemo.getOrCompute(spark,
-        s"$dir|$nlist|$trainFraction|$trainIters") {
+  private def ivfIndex(spark: SparkSession, dir: String, nlist: Int): IvfIndex =
+    ivfMemo.getOrCompute(spark, s"$dir|$nlist") {
       val base = normalized(spark, dir).cache()
       try {
         val vecs = base.withColumn("features", array_to_vector(col("unit")))
-        // Train the coarse quantizer on a seeded sample with few
-        // iterations — quantizer quality needs only the density shape,
-        // not convergence, and at corpus scale full-data training would
-        // dominate the build.
+        // Train the coarse quantizer on a seeded sample
+        // ([[autoTrainFraction]]) with few iterations ([[TrainIters]]) —
+        // at corpus scale full-data training would dominate the build.
         // CONTENT-based sample (round-16 diff review), not Bernoulli
         // sample(): position-based sampling decides membership by row
         // iteration order, which downstream of any shuffle is not
         // guaranteed stable across retries/machines — the trained
         // centroids (and every recall artifact) would drift between
         // otherwise-identical runs. Hashing the id makes membership a
-        // pure function of the data. At every corpus this repo stages
-        // the auto trainFraction is 1.0, so the sample IS the corpus
-        // and nothing measured changes.
+        // pure function of the data. Under the auto geometry every
+        // corpus this repo stages trains on fraction 1.0 (the sample IS
+        // the corpus); a pinned coarse nlist on a larger corpus samples
+        // (16 lists over sf0.1's 2000 vectors: 0.256 — the layout spec's
+        // sampled build).
         // Width: repartition (not coalesce — it cannot widen a
         // single-file scan) to ≈8k rows per partition, 4..32: a fixed
         // 4 serialized the k=8192 fit at the 200k calibration corpus
@@ -866,7 +705,9 @@ object Similarity {
         // runs of the same build could train visibly different quantizers
         // (measured at the 200k corpus: recall@5 0.96 vs 0.86 across two
         // layouts of the identical sample).
-        val sampleRows = (trainFraction * corpusCount(spark, dir)).toLong
+        val n = corpusCount(spark, dir)
+        val trainFraction = autoTrainFraction(nlist, n)
+        val sampleRows = (trainFraction * n).toLong
         val fitWidth = math.min(32L, math.max(4L, sampleRows / 8192L)).toInt
         val trainSample = trainSampleOf(vecs, trainFraction)
           .repartition(fitWidth, col("vec_id"))
@@ -876,7 +717,7 @@ object Similarity {
         // of driver-local kmeans++ and landed the same recall as a
         // random draw — init MODE is not the lever (see [[TrainSeed]]
         // for the full dead-dial ledger).
-        val km = new KMeans().setK(nlist).setSeed(TrainSeed).setMaxIter(trainIters)
+        val km = new KMeans().setK(nlist).setSeed(TrainSeed).setMaxIter(TrainIters)
           .setInitMode("random")
           .setFeaturesCol("features")
           .setPredictionCol("list_id").fit(trainSample)
@@ -966,7 +807,7 @@ object Similarity {
     // the auto index's list count clamps the ladder — a rung past it is
     // not an escalation, it IS the exhaustive scan, and the resolver
     // rejects it loudly by contract
-    val (maxBudget, autoNprobe, _) = resolveGeometry(spark, dir, 0, 0)
+    val (maxBudget, autoNprobe) = resolveGeometry(spark, dir, 0, 0)
     val npStart =
       if (startNprobe > 0) math.min(startNprobe, maxBudget) else autoNprobe
     def measure(np: Int): CanaryStep = {
@@ -1096,9 +937,10 @@ object Similarity {
     * ([[resolveGeometry]]): nlist = the power of two at or above
     * min(64√n, n/4) ([[autoSearchNlist]]), nprobe = the largest count
     * whose MEASURED scanned fraction stays ≤ 9.8%, found by bisection
-    * ([[autoNprobeMeasured]]) and floored by [[candidateFloor]], and a
-    * per-centroid-sample training fraction; pass explicit values to
-    * pin it. Deterministic under the pinned seed; rows-only check
+    * ([[autoNprobeMeasured]]) and floored by [[candidateFloor]]; pass
+    * explicit `nlist`/`nprobe` to pin the geometry. The quantizer always
+    * trains by one recipe ([[autoTrainFraction]] sample, [[TrainIters]]
+    * iterations). Deterministic under the pinned seed; rows-only check
     * (approximate results are not SQL-expressible), recall floors in
     * `SimilaritySpec` + recall AND scanned fraction measured at 10× in
     * the historical SCALEBENCH_sf1.json. */
@@ -1108,11 +950,8 @@ object Similarity {
       k: Int = 5,
       nProbes: Int = 10,
       nlist: Int = 0,
-      nprobe: Int = 0,
-      trainFraction: Double = 0.0,
-      trainIters: Int = 5): DataFrame = {
-    val (idx, rp) =
-      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
+      nprobe: Int = 0): DataFrame = {
+    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe)
     ivfSearch(selectProbeLists(indexProbes(idx.lists, nProbes), idx.centroids, rp),
       idx.lists, k)
   }
@@ -1152,7 +991,7 @@ object Similarity {
       nProbes: Int = 10,
       nlist: Int = 0,
       nprobe: Int = 0): DataFrame = {
-    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe, 0.0, 5)
+    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe)
     // SAVE ONCE per (session, corpus, geometry) — the write is ingest
     // work, like the build itself: re-saving on every serve call paid a
     // full repartition + nlist-directory partitioned write per query
@@ -1212,11 +1051,8 @@ object Similarity {
       dir: String,
       nProbes: Int = 10,
       nlist: Int = 0,
-      nprobe: Int = 0,
-      trainFraction: Double = 0.0,
-      trainIters: Int = 5): Double = {
-    val (idx, rp) =
-      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
+      nprobe: Int = 0): Double = {
+    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe)
     val probes = indexProbes(idx.lists, nProbes)
     val nP = probes.count()
     require(nP > 0,
@@ -1270,7 +1106,6 @@ object Similarity {
     pqMemo.clearSession(spark)
     pqListedMemo.clearSession(spark)
     ivfMemo.clearSession(spark)
-    geomMemo.clearSession(spark)
     savedIvfMemo.clearSession(spark)
     nprobeMemo.clearSession(spark)
   }
@@ -1405,7 +1240,7 @@ object Similarity {
     require(rs >= 1 && dim % rs == 0,
       s"pqTopK: nSub=$rs must divide the $dim-dim embedding exactly")
     val subDim = dim / rs
-    val (ivf, rp) = servedIvf(spark, dir, nlist, nprobe, 0.0, 5)
+    val (ivf, rp) = servedIvf(spark, dir, nlist, nprobe)
     val rr = if (rerank > 0) rerank else autoRerank(k)
     val pq = pqIndex(spark, dir, rs, nCodes)
     // IVFADC (round 15): the ADC scan is GATED by the coarse quantizer —
@@ -1596,11 +1431,8 @@ object Similarity {
       dir: String,
       nProbes: Int = 50,
       nlist: Int = 0,
-      nprobe: Int = 0,
-      trainFraction: Double = 0.0,
-      trainIters: Int = 5): DataFrame = {
-    val (idx, rp) =
-      servedIvf(spark, dir, nlist, nprobe, trainFraction, trainIters)
+      nprobe: Int = 0): DataFrame = {
+    val (idx, rp) = servedIvf(spark, dir, nlist, nprobe)
     val labels = Tables.load(spark, dir, "embeddings").select("vec_id", "label")
     val probes = indexProbes(idx.lists, nProbes)
       .join(labels, col("vec_id") === col("query_id"))

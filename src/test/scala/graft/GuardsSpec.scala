@@ -173,6 +173,18 @@ class GuardsSpec extends SparkSpec {
     val twoLevel = sources.filter { case (_, src) =>
       """(?i)TwoLevel|ivf2""".r.findFirstIn(src).nonEmpty }.map(_._1)
     assert(twoLevel.isEmpty, s"a two-level ANN symbol is back in $twoLevel")
+    // one exact embedding pair miner: the survival-gated centroid-pruned
+    // route stays retired
+    val pruned = sources.filter { case (_, src) =>
+      """prunedEmbeddingPairs|bucketPairSurvival|PrunedGeom|embeddingPairsShared""".r
+        .findFirstIn(src).nonEmpty }.map(_._1)
+    assert(pruned.isEmpty, s"a centroid-pruned pair route symbol is back in $pruned")
+    // one IVF training recipe: no public Similarity def takes the
+    // quantizer's training inputs as parameters
+    val publicDefs = """(?s)\n  def \w+\((.*?)\)\s*:""".r.findAllMatchIn(sim).map(_.group(1)).toSeq
+    assert(publicDefs.nonEmpty, "found no public Similarity def to check")
+    val knobs = publicDefs.filter("""\btrain(Iters|Fraction)\s*:""".r.findFirstIn(_).nonEmpty)
+    assert(knobs.isEmpty, s"a public Similarity def takes a training knob: $knobs")
   }
 
   test("pair miners keep one postings, one prefix rule and one cosine verify tail") {

@@ -150,24 +150,40 @@ class SimilaritySpec extends SparkSpec {
     assert(starved1 == starved(), "the starved IVF search moved across a rebuild")
     // the build depends on the corpus CONTENT, not its file layout: the
     // same rows staged as one file and as seven files must serve the
-    // same top-k and measure the same bucket-pair survival. The auto
-    // geometry is near-exhaustive at fixture scale, so the starved
-    // 2-of-16-lists search is the comparison that sees the trained cells
-    val staged = Seq(1, 7).map { files =>
+    // same top-k. The auto geometry is near-exhaustive at fixture scale,
+    // so the starved 2-of-16-lists search is the comparison that sees
+    // the trained cells
+    def stagedCopy(src: String, files: Int): String = {
       val tmp = java.nio.file.Files.createTempDirectory(s"layout$files").toString
-      graft.Tables.load(spark, sf, "embeddings").repartition(files)
+      graft.Tables.load(spark, src, "embeddings").repartition(files)
         .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
       val parts = new java.io.File(s"$tmp/embeddings.parquet").list()
         .count(_.endsWith(".parquet"))
       assert(parts == files, s"staged $parts files, wanted $files")
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+      tmp
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    val staged = Seq(1, 7).map { files =>
+      val tmp = stagedCopy(sf, files)
       (rows(Similarity.ivfTopK(spark, tmp, 5, 10)),
-        rows(Similarity.ivfTopK(spark, tmp, 5, 10, nlist = 16, nprobe = 2)),
-        Similarity.bucketPairSurvival(spark, tmp, 0.4))
+        rows(Similarity.ivfTopK(spark, tmp, 5, 10, nlist = 16, nprobe = 2)))
     }
     assert(staged(0)._1.nonEmpty)
     assert(staged(0) == staged(1), "IVF build moved with the corpus file layout")
+    // the SAMPLED build: every 500-vector build above trains on the whole
+    // corpus, while 16 lists over sf0.1's 2000 vectors train on a
+    // content-hash sample of 32·16/2000 = 0.256 of it — membership must
+    // be a function of the rows, not of which file or partition they
+    // arrive in
+    val sf01 = s"$sfBase/sf0.1"
+    assume(new java.io.File(sf01).isDirectory,
+      s"$sf01 not present — the sampled-build layout check needs the sf0.1 testdata")
+    val sampled = Seq(1, 7).map { files =>
+      rows(Similarity.ivfTopK(spark, stagedCopy(sf01, files), 5, 10, nlist = 16, nprobe = 2))
+    }
+    assert(sampled(0).size == 50, s"starved sf0.1 search served ${sampled(0).size} rows")
+    assert(sampled(0) == sampled(1), "sampled IVF build moved with the corpus file layout")
   }
 
   test("PQ recall@5 >= 0.9 vs brute force, and is deterministic") {
@@ -396,25 +412,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.8, s"LSH recall = $recall (${lsh.size}/${exact.size})")
   }
 
-  test("centroid-pruned pair join EQUALS the brute-force pairs, and prunes") {
-    // the pruned path must be exact — it feeds oracle-checked queries
-    // (q_dedup_embedding, q_dedup_embedding_clusters, q_dedup_summary):
-    // compare full rows INCLUDING the rounded cosine, at two thresholds
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    Seq(0.4, 0.45).foreach { t =>
-      val brute = asSet(Dedup.embeddingPairs(spark, sf, t))
-      val pruned = asSet(Similarity.prunedEmbeddingPairs(spark, sf, t))
-      assert(pruned == brute,
-        s"t=$t missing=${brute -- pruned} extra=${pruned -- brute}")
-    }
-    // and it must actually be the pruned plan, not a disguised cross join
-    val plan = Similarity.prunedEmbeddingPairs(spark, sf, 0.4)
-      .queryExecution.executedPlan.toString
-    assert(!plan.toLowerCase.contains("cartesianproduct"),
-      s"corpus-wide cross join leaked into pruned plan")
-  }
-
   test("tight-threshold LSH pairs over the augmented corpus EQUAL the exhaustive pairs") {
     // the oracled q_dedup_embedding_tight path: banded mining must be
     // deterministically exhaustive at dup-grade thresholds — compare full
@@ -434,46 +431,6 @@ class SimilaritySpec extends SparkSpec {
       assert(lsh == brute, s"missing=${brute -- lsh} extra=${lsh -- brute}")
       assert(lsh.nonEmpty)
     } finally aug.unpersist(blocking = false)
-  }
-
-  test("survival gate: ~1 on the isotropic corpus, engages on a clustered corpus") {
-    // the routing measurement behind Dedup.embeddingPairsShared: on this
-    // repo's weakly-clustered synthetic embeddings NO exact method can
-    // prune at 0.4 (the honest reason the exact scan runs there) …
-    val raw = Similarity.bucketPairSurvival(spark, sf, 0.4)
-    assert(raw > 0.9, s"raw-corpus survival = $raw — expected ~1.0")
-    // … while a tightly-clustered corpus at a dup-grade threshold prunes
-    // most bucket pairs, flipping the gate to the EXACT pruned join,
-    // which must stay bit-identical to brute force
-    val rnd = new scala.util.Random(42)
-    val anchors = Array.fill(12)(Array.fill(64)(rnd.nextGaussian()))
-    val rows = for {
-      c <- 0 until 12; m <- 0 until 20
-    } yield {
-      val noise = Array.fill(64)(rnd.nextGaussian() * 0.02)
-      ((c * 20 + m).toLong,
-        anchors(c).zip(noise).map { case (x, e) => (x + e).toFloat }.toSeq, c)
-    }
-    val tmp = java.nio.file.Files.createTempDirectory("clustered").toString
-    spark.createDataFrame(rows).toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val corpus = Similarity.corpus(spark, tmp).cache()
-    try {
-      val s = Similarity.bucketPairSurvival(spark, tmp, 0.8, nlist = 12)
-      assert(s <= 0.5, s"clustered-corpus survival = $s — gate failed to engage")
-      def asSet(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pruned = asSet(Similarity.prunedEmbeddingPairs(spark, tmp, 0.8, nlist = 12))
-      val withN = corpus.withColumn("nrm", sqrt(graft.functions.VecText.norm2("emb_d")))
-      val a = withN.select(col("vec_id").as("id_a"), col("emb_d").as("ea"), col("nrm").as("na"))
-      val b = withN.select(col("vec_id").as("id_b"), col("emb_d").as("eb"), col("nrm").as("nb"))
-      val brute = asSet(a.crossJoin(b).filter(col("id_a") < col("id_b"))
-        .withColumn("cos", graft.functions.VecText.dot("ea", "eb") / (col("na") * col("nb")))
-        .filter(col("cos") >= 0.8)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos")))
-      assert(pruned == brute, s"missing=${brute -- pruned} extra=${pruned -- brute}")
-      assert(pruned.nonEmpty)
-    } finally corpus.unpersist(blocking = false)
   }
 
   test("IVF top-k recall@5 >= 0.9 vs brute force at near-exhaustive nprobe") {
