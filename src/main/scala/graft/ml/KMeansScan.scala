@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.clustering.KMeansModel
-import org.apache.spark.ml.evaluation.ClusteringEvaluator
+import org.apache.spark.ml.evaluation.graft.FusedSilhouette
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.graft.KMeansBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
   * centers (tiny — k rows of 7 doubles per fit), persist the
   * model (`/root/reference/utils/kmeans_utils.py:107`).
   *
-  * Scale note: each Lloyd iteration is one distributed aggregation for
-  * every k still running; the centers (Σk × 7 doubles) are broadcast
-  * back. Nothing here grows with data size on the driver except the
-  * center matrices.
+  * Scale note: each Lloyd iteration is one single-stage job for every k
+  * still running; the centers (Σk × 7 doubles) are broadcast out and
+  * per-partition partial sums of the same size come back. Nothing here
+  * grows with data size on the driver.
   */
 object KMeansScan {
 
@@ -50,32 +50,38 @@ object KMeansScan {
     }
 
   /** All k are fit together by [[org.apache.spark.ml.graft.KMeansBridge]]:
-    * MLlib's own k-means|| and Lloyd kernels, one pass over the cached
-    * features per step for every k, each model bit-identical to MLlib's
-    * per-k `KMeans.fit` with the same seed (KMeansScanSpec pins it). The
-    * per-k silhouettes and model saves are independent, so they
-    * run as CONCURRENT Spark jobs (Spark's scheduler interleaves their
-    * stages across idle cores — on a cluster, across idle executors). */
+    * MLlib's own k-means|| and Lloyd kernels, one single-stage job over
+    * the cached features per step for every k, each model bit-identical
+    * to MLlib's per-k `KMeans.fit` with the same seed (KMeansScanSpec
+    * pins it). All silhouettes are then scored together by
+    * [[org.apache.spark.ml.evaluation.graft.FusedSilhouette]]: one
+    * single-stage stats job and one single-stage scoring job for every
+    * k, each score bit-identical to MLlib's silhouette evaluator. The
+    * model saves start right after the fit, on a pool of one thread per
+    * model owned by this call, and overlap the silhouette jobs; a failed
+    * save fails the scan with its own exception. */
   def scan(
       data: DataFrame,
       kMin: Int = 2,
       kMax: Int = 6,
       modelDir: String = "tmp_models",
       seed: Long = 1L): Seq[ScanResult] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
     val models = KMeansBridge.fitScan(data, "features", kMin to kMax, seed)
-    val futures = models.map { model =>
-      Future {
-        val evaluator = new ClusteringEvaluator() // silhouette, squaredEuclidean
-        val score = evaluator.evaluate(model.transform(data))
+    val pool = Executors.newFixedThreadPool(models.size)
+    try {
+      val saves = models.map { model =>
         val path = s"$modelDir/model_w_k_${model.getK}"
-        model.write.overwrite().save(path)
+        pool.submit(new Callable[String] {
+          def call(): String = { model.write.overwrite().save(path); path }
+        })
+      }
+      val scores = FusedSilhouette.squaredEuclidean(data, "features", models)
+      models.zip(scores).zip(saves).map { case ((model, score), save) =>
+        val path = try save.get() catch { case e: ExecutionException => throw e.getCause }
         ScanResult(model.getK, score, model.clusterCenters.map(_.toArray), path)
       }
-    }
-    futures.map(f => Await.result(f, Duration.Inf))
+    } finally pool.shutdown()
   }
 
   /** Reload a persisted model (`/root/reference/utils/kmeans_utils.py:133-143`). */

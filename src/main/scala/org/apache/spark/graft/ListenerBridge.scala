@@ -2,6 +2,7 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.StageInfo
 
 /** Bridge to `private[spark]` instrumentation — used by the
   * optimization-round instrument [[graft.Profile]] and by specs that read
@@ -11,6 +12,9 @@ object ListenerBridge {
     * delivered before a listener is read (the bus is async; reading
     * without a drain undercounts the last stages). */
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Whether a submitted stage writes shuffle output (a shuffle map stage). */
+  def writesShuffle(info: StageInfo): Boolean = info.shuffleDepId.isDefined
 
   /** Generated classes Janino has compiled in this JVM so far (the count
     * of Spark's compilation-time histogram). Spark's codegen cache is

@@ -24,16 +24,19 @@ import org.apache.spark.util.random.XORShiftRandom
   *     exactly one double per point whatever k is, so one draw tests
   *     every k's `2·cost·k / Σcost` threshold;
   *   - each cost sum is the same `fold(0.0)(_ + _)` per k;
-  *   - Lloyd partial sums are keyed (k slot, cluster) and merge through
-  *     the same `reduceByKey` with the same `axpy`, in map-output order;
+  *   - Lloyd partial sums are keyed (k slot, cluster) and merge on the
+  *     driver with the same `axpy`, in partition-index order: the order
+  *     in which MLlib's `reduceByKey` reducer combines them;
   *   - each k stops at its own convergence and drops out of later passes.
   *
   * What is shared: each init step's cost-sum and candidate jobs, the
   * cluster-count job and each Lloyd iteration's job run once for all k
-  * (MLlib runs them once per k), and there is no solver probe or
-  * cluster-size job. ml's `KMeans` `auto` solver picks this row solver
-  * for every frame with at least as many rows as features; its blocked
-  * solver (fewer rows than features) is not reproduced.
+  * (MLlib runs them once per k), each Lloyd job is one stage (MLlib's
+  * `reduceByKey` job is two), and there is no solver probe or
+  * cluster-size job; no job of the fit shuffles. ml's `KMeans` `auto`
+  * solver picks this row solver for every frame with at least as many
+  * rows as features; its blocked solver (fewer rows than features) is
+  * not reproduced.
   * `KMeansScanSpec` pins the equality against `ml.clustering.KMeans.fit`
   * and is the tripwire for these private kernels on a Spark upgrade. */
 object FusedKMeans {
@@ -136,10 +139,19 @@ object FusedKMeans {
     }
   }
 
-  /** Lloyd's iterations for every k at once: one `mapPartitions` →
-    * `reduceByKey((slot, cluster))` → `collectAsMap` job per iteration,
-    * carrying only the k not yet converged. Returns per k the centers,
-    * the last iteration's cost and the iteration count. */
+  /** Lloyd's iterations for every k at once: one single-stage
+    * `mapPartitions` → `collect` job per iteration, carrying only the k
+    * not yet converged. Each partition returns its (k slot, cluster)
+    * partial sums and weights (the clusters it saw) and its per-k cost;
+    * the driver merges them in partition-index order with MLlib's `axpy`.
+    * That is the order in which `reduceByKey`'s reducer combines the map
+    * outputs it fetches, so every center stays bit-identical to
+    * MLlib's. Returns per k the centers, the last iteration's cost and
+    * the iteration count.
+    *
+    * Scale note: per partition and iteration the driver receives at
+    * most Σk·kᵢ·d partial-sum doubles (140 for k=2..6 and d=7), one
+    * weight per cluster and one cost per k, whatever the data size. */
   private def lloyd(
       data: RDD[VectorWithNorm],
       init: Array[Array[VectorWithNorm]],
@@ -168,39 +180,53 @@ object FusedKMeans {
         }
       }
       val bcStats = sc.broadcast(stats)
-      val costAccums = active.map(_ => sc.doubleAccumulator)
 
-      val collected = data.mapPartitions { points =>
+      // per partition: (slot, cluster, sum, weight) for the clusters it
+      // saw, and each slot's cost summed in row order
+      val partials = data.mapPartitions { points =>
         val cs = bcCenters.value
         val st = bcStats.value
         val dims = cs.head.head.vector.size
         val sums = cs.map(c => Array.fill(c.length)(Vectors.zeros(dims)))
         val weightSums = cs.map(c => new Array[Double](c.length))
+        val costs = new Array[Double](cs.length)
         points.foreach { point =>
           var a = 0
           while (a < cs.length) {
             val (best, c) = measure.findClosest(cs(a), st(a), point)
-            costAccums(a).add(c * point.weight)
+            costs(a) += c * point.weight
             measure.updateClusterSum(point, sums(a)(best))
             weightSums(a)(best) += point.weight
             a += 1
           }
         }
-        for {
-          a <- cs.indices.iterator
-          j <- cs(a).indices.iterator
+        val seen = for {
+          a <- cs.indices
+          j <- cs(a).indices
           if weightSums(a)(j) > 0
-        } yield ((a, j), (sums(a)(j), weightSums(a)(j)))
-      }.reduceByKey { (sumWeight1, sumWeight2) =>
-        axpy(1.0, sumWeight2._1, sumWeight1._1)
-        (sumWeight1._1, sumWeight1._2 + sumWeight2._2)
-      }.collectAsMap()
+        } yield (a, j, sums(a)(j), weightSums(a)(j))
+        Iterator.single((seen.toArray, costs))
+      }.collect()
 
       bcCenters.destroy()
       bcStats.destroy()
 
+      val merged = scala.collection.mutable.HashMap[(Int, Int), (Vector, Double)]()
+      val costSums = new Array[Double](active.length)
+      partials.foreach { case (seen, costs) =>
+        seen.foreach { case (a, j, sum, weightSum) =>
+          merged.get((a, j)) match {
+            case None => merged((a, j)) = (sum, weightSum)
+            case Some((acc, accWeight)) =>
+              axpy(1.0, sum, acc)
+              merged((a, j)) = (acc, accWeight + weightSum)
+          }
+        }
+        for (a <- active.indices) costSums(a) += costs(a)
+      }
+
       val moved = new Array[Boolean](active.length)
-      collected.foreach { case ((a, j), (sum, weightSum)) =>
+      merged.foreach { case ((a, j), (sum, weightSum)) =>
         val i = active(a)
         val newCenter = measure.centroid(sum, weightSum)
         if (!moved(a) && !measure.isCenterConverged(centers(i)(j), newCenter, epsilon)) {
@@ -210,7 +236,7 @@ object FusedKMeans {
       }
       for (a <- active.indices) {
         converged(active(a)) = !moved(a)
-        cost(active(a)) = costAccums(a).value
+        cost(active(a)) = costSums(a)
         iterations(active(a)) += 1
       }
       iteration += 1

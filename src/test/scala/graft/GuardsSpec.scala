@@ -349,8 +349,13 @@ class GuardsSpec extends SparkSpec {
       .filter(_.toString.contains("src/main/scala/graft/ml/"))
       .filter(p => java.nio.file.Files.readString(p).contains("new KMeans()"))
     assert(mlEstimators.isEmpty, s"per-k MLlib fits back in graft.ml: $mlEstimators")
-    val bridges = Set("FusedKMeans.scala", "KMeansBridge.scala")
-    val privateSymbols = Seq("VectorWithNorm", "DistanceMeasure", "LocalKMeans", "new KMeansModel(")
+    val mlEvaluators = sources
+      .filter(_.toString.contains("src/main/scala/graft/ml/"))
+      .filter(p => java.nio.file.Files.readString(p).contains("ClusteringEvaluator"))
+    assert(mlEvaluators.isEmpty, s"per-k MLlib silhouette evaluators back in graft.ml: $mlEvaluators")
+    val bridges = Set("FusedKMeans.scala", "KMeansBridge.scala", "FusedSilhouette.scala")
+    val privateSymbols = Seq("VectorWithNorm", "DistanceMeasure", "LocalKMeans", "new KMeansModel(",
+      "SquaredEuclideanSilhouette", "ClusterStats", "computeSilhouetteCoefficient")
     val leaks = for {
       p <- sources if !bridges(p.getFileName.toString)
       src = java.nio.file.Files.readString(p)

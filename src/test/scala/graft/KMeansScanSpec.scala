@@ -4,9 +4,11 @@ import graft.ml.{FeaturePipeline, KMeansScan}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.ml.evaluation.graft.FusedSilhouette
+import org.apache.spark.ml.graft.KMeansBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 
 class KMeansScanSpec extends SparkSpec {
 
@@ -98,7 +100,75 @@ class KMeansScanSpec extends SparkSpec {
     assert(e.getMessage.contains("No samples available"), e.getMessage)
   }
 
-  test("the k=2..6 scan at sf0.001 runs at most 45 Spark jobs") {
+  /** sf0.001's features hashed into 7 partitions by one of 6 keys and
+    * checkpointed: some partition is empty and some lacks a cluster, so
+    * the driver-side merges of the Lloyd and silhouette partials skip
+    * partitions. */
+  private lazy val sevenParts = data.repartition(7, col("custkey") % 6).localCheckpoint()
+
+  test("fused scan matches MLlib over 7 partitions, one empty and some lacking a cluster") {
+    val sizes = sevenParts.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 7 && sizes.contains(0), s"partition sizes ${sizes.toSeq}")
+    val ref = new KMeans().setK(6).setSeed(1).setFeaturesCol("features").fit(sevenParts)
+    val seen = ref.transform(sevenParts).select("prediction").rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet)).collect()
+    assert(seen.exists(s => s.nonEmpty && s.size < 6), s"clusters per partition ${seen.toSeq}")
+    assertMatchesMLlib(sevenParts, 2, 6, tmp + "/mllib_seven")
+  }
+
+  test("fused scan is bit-identical to MLlib's per-k fit at sf0.01") {
+    val sf01 = FeaturePipeline.prepareData(spark, s"$sfBase/sf0.01")
+    assert(sf01.count() == 150)
+    assertMatchesMLlib(sf01, 2, 6, tmp + "/mllib_sf01")
+  }
+
+  test("a one-cluster model fails the silhouette with the evaluator's named error") {
+    import spark.implicits._
+    val df = (0 until 12).map(_ => Tuple1(Vectors.dense(1, 2, 3, 4, 5, 6, 7))).toDF("features")
+    val e = intercept[AssertionError] {
+      KMeansScan.scan(df, 2, 2, tmp + "/one_cluster")
+    }
+    assert(e.getMessage.contains("Number of clusters must be greater than one"), e.getMessage)
+  }
+
+  test("the fit and the silhouettes submit no shuffle stage") {
+    val sc = spark.sparkContext
+    data
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffles = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet()
+        if (org.apache.spark.graft.ListenerBridge.writesShuffle(e.stageInfo)) shuffles.add(e.stageInfo.name)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val models = KMeansBridge.fitScan(data, "features", 2 to 6, 1L)
+      FusedSilhouette.squaredEuclidean(data, "features", models)
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(stages.get() > 0)
+    assert(shuffles.isEmpty, s"shuffle stages: $shuffles")
+  }
+
+  test("a scan whose model dir cannot be written fails with the save's exception") {
+    val blocker = java.nio.file.Files.createTempFile("kmeans_spec_blocker", "")
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // run off the test thread, so a hung scan fails the bound below
+    val attempt = Future(KMeansScan.scan(data, 2, 6, blocker.toString))
+    val e = intercept[Exception](Await.result(attempt, 3.minutes))
+    java.nio.file.Files.delete(blocker)
+    assert(!e.isInstanceOf[java.util.concurrent.TimeoutException], "the scan hung")
+    // Hadoop's own "Parent path is not a directory" error, not a wrapper
+    assert(e.isInstanceOf[java.io.IOException] && e.getMessage.contains(blocker.toString),
+      e.toString)
+  }
+
+  test("the k=2..6 scan at sf0.001 runs at most 24 Spark jobs") {
     val sc = spark.sparkContext
     data // prepared (and checkpointed) before counting
     org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
@@ -111,8 +181,10 @@ class KMeansScanSpec extends SparkSpec {
       KMeansScan.scan(data, 2, 6, tmp + "/jobs")
       org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
     } finally sc.removeSparkListener(listener)
-    // the fused fit runs 34 jobs here, per-k MLlib fits 89: the bound
-    // trips if the data passes stop being shared across the five k
-    assert(jobs.get() <= 45, s"k-scan ran ${jobs.get()} jobs")
+    // the scan runs 21 jobs here: the fit, two silhouette jobs for all
+    // five k, and the saves (34 with one MLlib evaluator per k). The
+    // bound trips if the fit's data passes or the silhouette jobs stop
+    // being shared across the five k
+    assert(jobs.get() <= 24, s"k-scan ran ${jobs.get()} jobs")
   }
 }
