@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session factory of every main: [[Bench]], [[Verify]],
-  * [[Profile]], [[Explain]], [[Smoke]], [[Stage]] and
-  * [[graft.ml.KMeansScanJob]] all build their session here, so the
-  * correctness dump, the benchmark and the profiler run one SQL conf and
-  * therefore the same physical plans. */
+  * [[Explain]], [[Smoke]], [[Stage]] and [[graft.ml.KMeansScanJob]] all
+  * build their session here, so the correctness dump, the benchmark and
+  * the plan audits run one SQL conf and therefore the same physical
+  * plans. */
 object GraftSession {
 
   /** `local[cpus]` with `cpus` from SPARK_GRAFT_CPUS, else every

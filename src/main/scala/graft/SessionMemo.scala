@@ -90,12 +90,13 @@ final class SessionMemo[V <: AnyRef] {
 
 /** Registry of every live SessionMemo instance (they are all singletons
   * inside operator objects, so the registry's size is the fixed count of
-  * memo declarations, never data-dependent). Exists for ONE caller:
-  * `Bench` drops a session's memoized intermediates between sweeps so
-  * that every sweep pays each build exactly once and the per-query min
-  * is a reproducible standalone cost — the round-21 verdict's de-gamed
-  * accounting (its item 1). Verify/production paths never clear: a
-  * long-lived engine legitimately serves memo-warm. */
+  * memo declarations, never data-dependent). Exists for the timing
+  * loops: `Bench` drops a session's memoized intermediates between
+  * sweeps so that every sweep pays each build exactly once and the
+  * per-query min is a reproducible standalone cost — the round-21
+  * verdict's de-gamed accounting (its item 1) — and perfbench starts
+  * each pass memo-cold the same way. Verify/production paths never
+  * clear: a long-lived engine legitimately serves memo-warm. */
 object SessionMemo {
   private val registry =
     new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_ <: AnyRef]]()

@@ -4,9 +4,9 @@ import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.StageInfo
 
-/** Bridge to `private[spark]` instrumentation — used by the
-  * optimization-round instrument [[graft.Profile]] and by specs that read
-  * listener metrics. No correctness path uses this. */
+/** Bridge to `private[spark]` instrumentation — used by [[graft.Bench]]'s
+  * per-query recording and by specs that read listener metrics. No
+  * correctness path uses this. */
 object ListenerBridge {
   /** Drain the listener bus, so per-query stage metrics are fully
     * delivered before a listener is read (the bus is async; reading

@@ -204,17 +204,60 @@ class GuardsSpec extends SparkSpec {
       "the cosine verify tail must be declared once")
   }
 
-  test("Bench, Verify and Profile build one session with identical SQL conf") {
-    // the three mains must plan alike: each takes its session from the
-    // one factory and sets no SQL conf of its own afterwards
-    for (main <- Seq("Bench", "Verify", "Profile")) {
-      val src = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"src/main/scala/graft/$main.scala"))
+  test("every main builds one session with identical SQL conf") {
+    // every main must plan alike: each takes its session from the one
+    // factory and sets no SQL conf of its own afterwards. The mains are
+    // found, not listed, so a new one is covered the day it lands
+    import scala.jdk.CollectionConverters._
+    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString.stripSuffix(".scala") -> java.nio.file.Files.readString(p))
+      .filter(_._2.contains("def main(")).toMap
+    assert(Set("Bench", "Verify", "Explain", "Smoke", "Stage", "KMeansScanJob").subsetOf(mains.keySet),
+      s"the discovery missed a known main: ${mains.keySet}")
+    for ((main, src) <- mains) {
       assert(src.contains("val spark = GraftSession.local()"),
         s"$main must build its session with GraftSession.local()")
       for (drift <- Seq("SparkSession.builder", ".config(\"", "conf.set("))
         assert(!src.contains(drift), s"$main sets its own session conf ($drift)")
     }
+  }
+
+  test("src/main declares one SparkListener and no profiler knob") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toSeq
+    val listeners = sources.flatMap { case (f, src) =>
+      """(?:class|object)\s+(\w+)[^{\n]*\bextends\s+SparkListener\b|new\s+SparkListener\b""".r
+        .findAllMatchIn(src).map(m => s"$f: ${Option(m.group(1)).getOrElse("anonymous")}") }
+    assert(listeners == Seq("Bench.scala: StageRecorder"), s"SparkListener subclasses: $listeners")
+    // the deleted profiler's knob family, matched by prefix
+    val knob = sources.filter(s => """\bGRAFT_PROFILE\w*""".r.findFirstIn(s._2).nonEmpty).map(_._1)
+    assert(knob.isEmpty, s"a GRAFT_PROFILE env knob is back in $knob")
+  }
+
+  test("Bench records each query's layers and keeps a thrown query out of them") {
+    val good = "q_filter_pred" -> SparkEntry.queries("q_filter_pred")
+    // the bad dir of Smoke's probe: the query throws on its first read
+    val bad = "q_accuracy" ->
+      ((s: org.apache.spark.sql.SparkSession, _: String) => SparkEntry.queries("q_accuracy")(s, s"$sfBase/nope"))
+    val runs = Bench.sweep(spark, sf, Seq(good, bad))
+    val results = runs.map { case (n, r) => n -> r.map(_.wallS) }
+    val layers = runs.collect { case (n, Some(r)) => n -> r.layers }.toMap
+    assert(layers.keySet == Set("q_filter_pred"), s"layers for ${layers.keySet}")
+    val line = Bench.buildLine(results, sf, 1, layers)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    val l = json.get("layers").get("q_filter_pred")
+    def n(field: String): Double = l.get(field).asDouble()
+    val wall = json.get("queries").get("q_filter_pred").asDouble()
+    assert(n("jobs") >= 1, s"layers $l")
+    assert(n("tasks") >= n("stages") && n("stages") >= 1, s"layers $l")
+    assert(n("driver_gap_s") >= 0.0 && n("driver_gap_s") <= wall, s"layers $l of wall $wall")
+    assert(json.get("layers").size() == 1, s"a thrown query has layers: $line")
+    assert(json.get("errors").get(0).asText() == "q_accuracy", line)
+    assert(!json.get("queries").has("q_accuracy"), line)
+    assert(""""value":[0-9]+\.[0-9]{3}}$""".r.findFirstIn(line).nonEmpty, s"line tail: $line")
   }
 
   test("a thrown bench query lands in the errors field, never the timings") {

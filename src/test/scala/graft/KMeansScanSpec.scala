@@ -6,7 +6,7 @@ import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.evaluation.graft.FusedSilhouette
 import org.apache.spark.ml.graft.KMeansBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -132,24 +132,12 @@ class KMeansScanSpec extends SparkSpec {
   }
 
   test("the fit and the silhouettes submit no shuffle stage") {
-    val sc = spark.sparkContext
-    data
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-    val stages = new java.util.concurrent.atomic.AtomicInteger()
-    val shuffles = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet()
-        if (org.apache.spark.graft.ListenerBridge.writesShuffle(e.stageInfo)) shuffles.add(e.stageInfo.name)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
+    val stages = recorded {
       val models = KMeansBridge.fitScan(data, "features", 2 to 6, 1L)
       FusedSilhouette.squaredEuclidean(data, "features", models)
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(stages.get() > 0)
+    }.stages
+    assert(stages.nonEmpty)
+    val shuffles = stages.filter(ListenerBridge.writesShuffle).map(_.name)
     assert(shuffles.isEmpty, s"shuffle stages: $shuffles")
   }
 
@@ -169,22 +157,23 @@ class KMeansScanSpec extends SparkSpec {
   }
 
   test("the k=2..6 scan at sf0.001 runs at most 24 Spark jobs") {
-    val sc = spark.sparkContext
-    data // prepared (and checkpointed) before counting
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      KMeansScan.scan(data, 2, 6, tmp + "/jobs")
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
+    val jobs = recorded(KMeansScan.scan(data, 2, 6, tmp + "/jobs")).jobs
     // the scan runs 21 jobs here: the fit, two silhouette jobs for all
     // five k, and the saves (34 with one MLlib evaluator per k). The
     // bound trips if the fit's data passes or the silhouette jobs stop
     // being shared across the five k
-    assert(jobs.get() <= 24, s"k-scan ran ${jobs.get()} jobs")
+    assert(jobs <= 24, s"k-scan ran $jobs jobs")
+  }
+
+  /** Bench's recorder around `body`, read after the bus drains; `data` is
+    * prepared (and checkpointed) before recording starts. */
+  private def recorded(body: => Any): StageRecorder = {
+    val sc = spark.sparkContext
+    data
+    ListenerBridge.waitUntilEmpty(sc)
+    val rec = new StageRecorder
+    sc.addSparkListener(rec)
+    try { body; ListenerBridge.waitUntilEmpty(sc) } finally sc.removeSparkListener(rec)
+    rec
   }
 }
